@@ -1,7 +1,6 @@
 package graft.fundamentals
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Fundamental quality scores
@@ -50,16 +49,18 @@ object QualityScores {
       df.select(col("fcf_free_cash_flow").as("v")), Seq(0.2, 0.8))
     def dlit(o: Option[Double]): Column =
       o.map(lit).getOrElse(lit(null)).cast("double")
-    df.withColumn("fcf_q20", dlit(bs(0))).withColumn("fcf_q80", dlit(bs(1)))
+    Statements.stage(df, "fcf_q20" -> dlit(bs(0)), "fcf_q80" -> dlit(bs(1)))
   }
 
-  /** Score table over [[Statements.full]] output (memoized + persisted per
-    * (session, dir) — three enrichment queries share one build). */
+  /** The 18 score columns over [[Statements.full]], memoized per (session,
+    * dir) and lineage-truncated — the one truncation point above
+    * [[Statements.base]]. The enrichment consumers (as-of joins, trade
+    * filters, recommendations, bot orders) then plan against a scan of a
+    * one-row-per-customer-quarter frame, not the statement ladder and the
+    * score stages. Only the score projection is kept: its lazy input lets
+    * the optimizer prune every statement window the scores do not read. */
   def scores(spark: SparkSession, dir: String): DataFrame =
     graft.sqlx.FrameCache.getOrElseUpdate(graft.sqlx.FrameCache.key(spark, "scores", dir)) {
-      import org.apache.spark.sql.functions.col
-      // persist only the score projection: caching the wide statements frame
-      // would defeat column pruning for every consumer
       build(spark, dir).select(
         (Seq("symbol_id", "fiscal_q",
           "bs_liquidity_score", "bs_leverage_score", "bs_asset_quality_score",
@@ -68,70 +69,83 @@ object QualityScores {
           "is_margin_score", "is_growth_score", "income_statement_quality_score",
           "overall_quality_score", "is_high_quality", "is_investment_grade",
           "has_red_flags").map(col)): _*)
-        // localCheckpoint truncates the score-ladder lineage so the five
-        // enrichment consumers plan against a scan, not the quality tree
-        // (Statements.full's rationale; round 17)
         .transform(graft.sqlx.Lineage.truncate)
     }
 
+  /** Named score stages, each intermediate computed once in its own select
+    * and referenced by name from the next: norms → component means → raw
+    * scores → penalties → clips → overall → flags. A Scala `Column` value
+    * used in several places inlines its whole tree at each use (and the
+    * helpers repeat their arguments), so passing the intermediates on as
+    * values grows the analyzed plan to ~22k expression nodes — walked by
+    * analysis, optimization, AQE and codegen — for a frame of a few
+    * hundred rows; named, it holds ~5k. The IEEE ops and their order are
+    * the reference formulas', so the doubles do not depend on the staging. */
   private def build(spark: SparkSession, dir: String): DataFrame = {
-    val f = withFcfBounds(Statements.full(spark, dir))
-    val bsLiquidity = meanOf(
-      norm(col("fbs_current_ratio"), 0.5, 2.5),
-      norm(col("fbs_quick_ratio"), 0.3, 1.5))
-    val bsLeverage = meanOf(
-      normRev(col("fbs_debt_to_equity"), 0.0, 3.0),
-      normRev(col("fbs_debt_to_assets"), 0.0, 0.8))
-    val bsAsset = norm(col("fbs_tangible_asset_ratio"), 0.3, 0.95)
-    val bsRaw = bsLiquidity * 0.30 + bsLeverage * 0.40 + bsAsset * 0.30
-    val bsScore = when(col("fbs_liquidity_shock_flag") === 1, bsRaw * 0.8).otherwise(bsRaw)
-
-    val cfGeneration = meanOf(
-      norm(col("fcf_free_cash_flow"), col("fcf_q20"), col("fcf_q80")),
-      norm(col("fcf_operating_cf_margin"), 0.05, 0.25))
-    val cfEfficiency = meanOf(
-      norm(col("fcf_ocf_to_capex_ratio"), 0.5, 3.0),
-      norm(col("fcf_cash_conversion_ratio"), 0.5, 1.5))
-    val cfSustainability = meanOf(norm(col("fcf_free_cash_flow_yoy_pct"), -0.20, 0.30))
-    val cfRaw = cfGeneration * 0.40 + cfEfficiency * 0.30 + cfSustainability * 0.30
-    val cfPenalized0 = when(col("fcf_negative_free_cash_flow_flag") === 1, cfRaw * 0.7).otherwise(cfRaw)
-    val cfScore = when(col("fcf_cash_burn_flag") === 1, cfPenalized0 * 0.5).otherwise(cfPenalized0)
-
-    val isProfitability = meanOf(norm(col("fis_net_margin"), 0.05, 0.25))
-    val isMargin = meanOf(
-      norm(col("fis_operating_margin"), 0.05, 0.30),
-      norm(col("fis_gross_margin"), 0.20, 0.60))
-    val isGrowth = meanOf(
-      norm(col("fis_revenue_yoy_pct"), -0.05, 0.20),
-      norm(col("fis_net_income_yoy_pct"), -0.20, 0.30))
-    val isRaw = isProfitability * 0.40 + isMargin * 0.30 + isGrowth * 0.30
-    val isPenalized0 = when(col("fis_negative_net_income_flag") === 1, isRaw * 0.6).otherwise(isRaw)
-    val isScore = when(col("fis_revenue_decline_flag") === 1, isPenalized0 * 0.85).otherwise(isPenalized0)
-
-    val overall = coalesce(clip100(bsScore), lit(50.0)) * 0.33 +
-      coalesce(clip100(cfScore), lit(50.0)) * 0.33 +
-      coalesce(clip100(isScore), lit(50.0)) * 0.34
-
-    f.withColumn("bs_liquidity_score", clip100(bsLiquidity))
-      .withColumn("bs_leverage_score", clip100(bsLeverage))
-      .withColumn("bs_asset_quality_score", clip100(bsAsset))
-      .withColumn("balance_sheet_quality_score", clip100(bsScore))
-      .withColumn("cf_generation_score", clip100(cfGeneration))
-      .withColumn("cf_efficiency_score", clip100(cfEfficiency))
-      .withColumn("cf_sustainability_score", clip100(cfSustainability))
-      .withColumn("cash_flow_quality_score", clip100(cfScore))
-      .withColumn("is_profitability_score", clip100(isProfitability))
-      .withColumn("is_margin_score", clip100(isMargin))
-      .withColumn("is_growth_score", clip100(isGrowth))
-      .withColumn("income_statement_quality_score", clip100(isScore))
-      .withColumn("overall_quality_score", clip100(overall))
-      .withColumn("is_high_quality", col("overall_quality_score") >= 70.0)
-      .withColumn("is_investment_grade",
-        coalesce(col("balance_sheet_quality_score") >= 50.0, lit(false)) &&
-        coalesce(col("cash_flow_quality_score") >= 50.0, lit(false)) &&
-        coalesce(col("income_statement_quality_score") >= 50.0, lit(false)))
-      .withColumn("has_red_flags",
-        col("fbs_liquidity_shock_flag") === 1 || col("fcf_cash_burn_flag") === 1 ||
-        col("fis_negative_net_income_flag") === 1)
+    import Statements.stage
+    val norms = stage(withFcfBounds(Statements.full(spark, dir)),
+      "n_current" -> norm(col("fbs_current_ratio"), 0.5, 2.5),
+      "n_quick" -> norm(col("fbs_quick_ratio"), 0.3, 1.5),
+      "n_debt_equity" -> normRev(col("fbs_debt_to_equity"), 0.0, 3.0),
+      "n_debt_assets" -> normRev(col("fbs_debt_to_assets"), 0.0, 0.8),
+      "n_tangible" -> norm(col("fbs_tangible_asset_ratio"), 0.3, 0.95),
+      "n_fcf" -> norm(col("fcf_free_cash_flow"), col("fcf_q20"), col("fcf_q80")),
+      "n_ocf_margin" -> norm(col("fcf_operating_cf_margin"), 0.05, 0.25),
+      "n_ocf_capex" -> norm(col("fcf_ocf_to_capex_ratio"), 0.5, 3.0),
+      "n_conversion" -> norm(col("fcf_cash_conversion_ratio"), 0.5, 1.5),
+      "n_fcf_yoy" -> norm(col("fcf_free_cash_flow_yoy_pct"), -0.20, 0.30),
+      "n_net_margin" -> norm(col("fis_net_margin"), 0.05, 0.25),
+      "n_operating_margin" -> norm(col("fis_operating_margin"), 0.05, 0.30),
+      "n_gross_margin" -> norm(col("fis_gross_margin"), 0.20, 0.60),
+      "n_revenue_yoy" -> norm(col("fis_revenue_yoy_pct"), -0.05, 0.20),
+      "n_net_income_yoy" -> norm(col("fis_net_income_yoy_pct"), -0.20, 0.30))
+    val components = stage(norms,
+      "bs_liquidity" -> meanOf(col("n_current"), col("n_quick")),
+      "bs_leverage" -> meanOf(col("n_debt_equity"), col("n_debt_assets")),
+      "cf_generation" -> meanOf(col("n_fcf"), col("n_ocf_margin")),
+      "cf_efficiency" -> meanOf(col("n_ocf_capex"), col("n_conversion")),
+      "cf_sustainability" -> meanOf(col("n_fcf_yoy")),
+      "is_profitability" -> meanOf(col("n_net_margin")),
+      "is_margin" -> meanOf(col("n_operating_margin"), col("n_gross_margin")),
+      "is_growth" -> meanOf(col("n_revenue_yoy"), col("n_net_income_yoy")))
+    val raw = stage(components,
+      "bs_raw" -> (col("bs_liquidity") * 0.30 + col("bs_leverage") * 0.40 + col("n_tangible") * 0.30),
+      "cf_raw" -> (col("cf_generation") * 0.40 + col("cf_efficiency") * 0.30 + col("cf_sustainability") * 0.30),
+      "is_raw" -> (col("is_profitability") * 0.40 + col("is_margin") * 0.30 + col("is_growth") * 0.30))
+    def penalize(score: Column, flag: String, k: Double): Column =
+      when(col(flag) === 1, score * k).otherwise(score)
+    val penalized = stage(raw,
+      "bs_score" -> penalize(col("bs_raw"), "fbs_liquidity_shock_flag", 0.8),
+      "cf_score" -> penalize(penalize(col("cf_raw"), "fcf_negative_free_cash_flow_flag", 0.7),
+        "fcf_cash_burn_flag", 0.5),
+      "is_score" -> penalize(penalize(col("is_raw"), "fis_negative_net_income_flag", 0.6),
+        "fis_revenue_decline_flag", 0.85))
+    val clipped = stage(penalized,
+      "bs_liquidity_score" -> clip100(col("bs_liquidity")),
+      "bs_leverage_score" -> clip100(col("bs_leverage")),
+      "bs_asset_quality_score" -> clip100(col("n_tangible")),
+      "balance_sheet_quality_score" -> clip100(col("bs_score")),
+      "cf_generation_score" -> clip100(col("cf_generation")),
+      "cf_efficiency_score" -> clip100(col("cf_efficiency")),
+      "cf_sustainability_score" -> clip100(col("cf_sustainability")),
+      "cash_flow_quality_score" -> clip100(col("cf_score")),
+      "is_profitability_score" -> clip100(col("is_profitability")),
+      "is_margin_score" -> clip100(col("is_margin")),
+      "is_growth_score" -> clip100(col("is_growth")),
+      "income_statement_quality_score" -> clip100(col("is_score")))
+    val overall = stage(clipped,
+      "overall_quality_score" -> clip100(
+        coalesce(col("balance_sheet_quality_score"), lit(50.0)) * 0.33 +
+        coalesce(col("cash_flow_quality_score"), lit(50.0)) * 0.33 +
+        coalesce(col("income_statement_quality_score"), lit(50.0)) * 0.34))
+    stage(overall,
+      "is_high_quality" -> (col("overall_quality_score") >= 70.0),
+      "is_investment_grade" ->
+        (coalesce(col("balance_sheet_quality_score") >= 50.0, lit(false)) &&
+          coalesce(col("cash_flow_quality_score") >= 50.0, lit(false)) &&
+          coalesce(col("income_statement_quality_score") >= 50.0, lit(false))),
+      "has_red_flags" ->
+        (col("fbs_liquidity_shock_flag") === 1 || col("fcf_cash_burn_flag") === 1 ||
+          col("fis_negative_net_income_flag") === 1))
   }
 }

@@ -14,20 +14,32 @@ import graft.sqlx.Exact._
   * (num/(den+1e-6)), QoQ/YoY pct-change, rolling(4, min 2) volatility,
   * per-(quarter, sector) percentile ranks, and shock/decline flags.
   *
-  * Two hash aggregations (orders, lineitem) + a broadcast customer join +
-  * one window pass keyed by symbol — no per-symbol loop, no global window
-  * (ranks partition by quarter×sector).
+  * Two hash aggregations (orders, lineitem) + a broadcast customer join
+  * ([[base]], truncated), then a lazy window ladder ([[full]]) with one pass
+  * per partitioning — no per-symbol loop, no global window (ranks
+  * partition by quarter×sector or quarter×industry).
   */
 object Statements {
   private val Eps = 1.0e-6
   private val BySym = Window.partitionBy("symbol_id").orderBy("fiscal_q")
-  private def frame(p: Int) = BySym.rowsBetween(-(p - 1), 0)
 
   private def sdiv(num: Column, den: Column): Column = num / (den + lit(Eps))
 
-  /** Quarterly line items. */
-  def base(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(spark, dir)
+  /** Quarterly line items — the orders and lineitem aggregations, the only
+    * part of the statements whose cost grows with the input. Memoized per
+    * (session, dir) and lineage-truncated: every statement consumer plans
+    * the window ladder of [[full]] over a scan of this small frame (one row
+    * per customer-quarter) instead of over two scan-side aggregations and a
+    * join. */
+  def base(spark: SparkSession, dir: String): DataFrame =
+    graft.sqlx.FrameCache.getOrElseUpdate(graft.sqlx.FrameCache.key(spark, "stmt-base", dir))(
+      lineItems(spark, dir).transform(graft.sqlx.Lineage.truncate))
+
+  private def lineItems(spark: SparkSession, dir: String): DataFrame = {
+    // one orders relation for both aggregations: every spark.read.parquet
+    // pays its own schema-inference pass
+    val orders = Tables.orders(spark, dir)
+    val o = orders
       .groupBy(col("o_custkey").as("symbol_id"),
         year(col("o_orderdate")).as("fy"), quarter(col("o_orderdate")).as("fq"))
       .agg(decSumAgg(col("o_totalprice")).as("tca"))
@@ -43,8 +55,7 @@ object Statements {
         sum(dec(col("l_extendedprice") * col("l_tax"))).as("tcl_d"),
         sum(dec(col("l_quantity"))).as("inv_d"),
         sum(dec(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * col("l_tax"))).as("cogs_d"))
-    val li = perOrder.join(Tables.orders(spark, dir),
-        col("l_orderkey") === col("o_orderkey"))
+    val li = perOrder.join(orders, col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_custkey").as("symbol_id"),
         year(col("o_orderdate")).as("fy"), quarter(col("o_orderdate")).as("fq"))
       .agg(
@@ -56,20 +67,29 @@ object Statements {
     val c = Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_nationkey").as("sector"),
         col("c_mktsegment").as("industry"), greatest(col("c_acctbal"), lit(0.0)).as("cash"))
-    o.join(li, Seq("symbol_id", "fy", "fq"))
-      .join(broadcast(c), col("symbol_id") === col("c_custkey"))
-      .withColumn("fiscal_q", make_date(col("fy"), (col("fq") - 1) * 3 + 1, lit(1)))
-      .withColumn("total_assets", col("tca") + col("cash") + col("inventory"))
-      .withColumn("total_liabilities", col("tcl") + col("opex"))
-      .withColumn("equity", col("total_assets") - col("total_liabilities"))
-      .withColumn("gross_profit", col("revenue") - col("cogs"))
-      .withColumn("operating_income", col("gross_profit") - col("opex"))
-      .withColumn("net_income", col("operating_income") - col("tcl"))
-      .withColumn("ocf", col("operating_income"))
-      .withColumn("capex", col("inventory"))
-      .withColumn("fcf", col("ocf") - abs(col("capex")))
-      .drop("c_custkey")
+    val totalAssets = col("tca") + col("cash") + col("inventory")
+    val totalLiabilities = col("tcl") + col("opex")
+    val grossProfit = col("revenue") - col("cogs")
+    val operatingIncome = grossProfit - col("opex")
+    stage(o.join(li, Seq("symbol_id", "fy", "fq"))
+        .join(broadcast(c), col("symbol_id") === col("c_custkey"))
+        .drop("c_custkey"),
+      "fiscal_q" -> make_date(col("fy"), (col("fq") - 1) * 3 + 1, lit(1)),
+      "total_assets" -> totalAssets,
+      "total_liabilities" -> totalLiabilities,
+      "equity" -> (totalAssets - totalLiabilities),
+      "gross_profit" -> grossProfit,
+      "operating_income" -> operatingIncome,
+      "net_income" -> (operatingIncome - col("tcl")),
+      "ocf" -> operatingIncome,
+      "capex" -> col("inventory"),
+      "fcf" -> (operatingIncome - abs(col("inventory"))))
   }
+
+  /** `df` plus the named columns, in ONE projection (a chain of withColumn
+    * calls re-analyzes the growing plan once per column). */
+  private[fundamentals] def stage(df: DataFrame, cols: (String, Column)*): DataFrame =
+    df.select(col("*") +: cols.map { case (n, c) => c.as(n) }: _*)
 
   /** pandas rank(pct=True) within a partition: average-rank / non-null count.
     * avg_rank = cnt_less + (cnt_eq + 1)/2. Everything derives from ONE
@@ -112,81 +132,75 @@ object Statements {
     when(col("rn") >= 2, sqrt(variance))
   }
 
-  /** All fbs_/fcf_/fis_ features in one window pass (memoized + persisted
-    * per (session, dir): three statement queries + the score build share
-    * one evaluation; the frame is small — one row per customer-quarter).
-    * localCheckpoint (not persist), the signalFeatures discipline: this is
-    * the ~400-column statement tree, and EVERY downstream query otherwise
-    * re-analyzes/re-optimizes that whole logical plan before the cache
-    * lookup even happens — round-17 profiling measured the model/bot
-    * queries spending multi-second pure-driver gaps in exactly that walk.
-    * The checkpoint truncates lineage to a scan; the frame is one row per
-    * customer-quarter, so losing columnar cache pruning costs microseconds
-    * while the planning win is seconds per consumer. */
-  def full(spark: SparkSession, dir: String): DataFrame =
-    graft.sqlx.FrameCache.getOrElseUpdate(graft.sqlx.FrameCache.key(spark, "stmt", dir))(
-      build(spark, dir).transform(graft.sqlx.Lineage.truncate))
-
-  /** Columns are computed GROUPED BY WINDOW PARTITIONING, not in reference
-    * order: row-level ratios first, then every symbol-ordered window
-    * (qoq/yoy/volatility) contiguously, then every (quarter, sector) rank,
-    * then the (quarter, industry) rank, then row-level flags. Interleaved
-    * in reference order, Catalyst planned 32 Window operators and 26
-    * exchanges — the 123k-row frame re-shuffled between symbol and
-    * quarter×sector partitioning ~13 times. Grouped, adjacent compatible
-    * windows collapse to one pass per partitioning. Values are unchanged
-    * (each column's expression DAG is identical); only the column order of
-    * the raw frame differs, and every consumer selects by name. */
-  private def build(spark: SparkSession, dir: String): DataFrame = {
-    val qcol = Seq(col("fiscal_q"))
-    base(spark, dir)
-      // row-level ratios (transform_balance_sheet.py:206-244,
-      // transform_cash_flow.py:222-299, transform_income_statement.py:222-276)
-      .withColumn("fbs_current_ratio", sdiv(col("tca"), col("tcl")))
-      .withColumn("fbs_quick_ratio", sdiv(col("tca") - col("inventory"), col("tcl")))
-      .withColumn("fbs_cash_ratio", sdiv(col("cash"), col("tcl")))
-      .withColumn("fbs_working_capital", col("tca") - col("tcl"))
-      .withColumn("fbs_debt_to_equity", sdiv(col("total_liabilities"), col("equity")))
-      .withColumn("fbs_debt_to_assets", sdiv(col("total_liabilities"), col("total_assets")))
-      .withColumn("fbs_tangible_asset_ratio", sdiv(col("total_assets") - col("inventory"), col("total_assets")))
-      .withColumn("fcf_free_cash_flow", col("fcf"))
-      .withColumn("fcf_ocf_to_capex_ratio", sdiv(col("ocf"), col("capex")))
-      .withColumn("fcf_cash_conversion_ratio", sdiv(col("ocf"), col("net_income")))
-      .withColumn("fcf_capex_intensity", sdiv(col("capex"), col("revenue")))
-      .withColumn("fcf_operating_cf_margin", sdiv(col("ocf"), col("revenue")))
-      .withColumn("fis_gross_margin", sdiv(col("gross_profit"), col("revenue")))
-      .withColumn("fis_operating_margin", sdiv(col("operating_income"), col("revenue")))
-      .withColumn("fis_net_margin", sdiv(col("net_income"), col("revenue")))
-      // one symbol-partitioned window pass: rn + every qoq/yoy/volatility
-      .withColumn("rn", row_number().over(BySym))
-      .withColumn("fbs_current_ratio_qoq_pct", pctChange(col("fbs_current_ratio"), 1))
-      .withColumn("fbs_quick_ratio_qoq_pct", pctChange(col("fbs_quick_ratio"), 1))
-      .withColumn("fbs_current_ratio_yoy_pct", pctChange(col("fbs_current_ratio"), 4))
-      .withColumn("fbs_current_ratio_volatility", vol4(col("fbs_current_ratio")))
-      .withColumn("fcf_operating_cf_qoq_pct", pctChange(col("ocf"), 1))
-      .withColumn("fcf_free_cash_flow_qoq_pct", pctChange(col("fcf"), 1))
-      .withColumn("fcf_operating_cf_yoy_pct", pctChange(col("ocf"), 4))
-      .withColumn("fcf_free_cash_flow_yoy_pct", pctChange(col("fcf"), 4))
-      .withColumn("fcf_operating_cf_volatility", vol4(col("ocf")))
-      .withColumn("fis_revenue_qoq_pct", pctChange(col("revenue"), 1))
-      .withColumn("fis_net_income_qoq_pct", pctChange(col("net_income"), 1))
-      .withColumn("fis_revenue_yoy_pct", pctChange(col("revenue"), 4))
-      .withColumn("fis_net_income_yoy_pct", pctChange(col("net_income"), 4))
-      .withColumn("fis_revenue_volatility", vol4(col("revenue")))
-      // one (quarter, sector) window pass: every sector percentile rank
-      .withColumn("fbs_current_ratio_sector_rank", pctRank(col("fbs_current_ratio"), qcol :+ col("sector")))
-      .withColumn("fcf_operating_cf_sector_rank", pctRank(col("ocf"), qcol :+ col("sector")))
-      .withColumn("fcf_free_cash_flow_sector_rank", pctRank(col("fcf"), qcol :+ col("sector")))
-      .withColumn("fis_net_margin_sector_rank", pctRank(col("fis_net_margin"), qcol :+ col("sector")))
-      .withColumn("fis_operating_margin_sector_rank", pctRank(col("fis_operating_margin"), qcol :+ col("sector")))
-      // one (quarter, industry) window pass
-      .withColumn("fbs_current_ratio_industry_rank", pctRank(col("fbs_current_ratio"), qcol :+ col("industry")))
-      // row-level flags
-      .withColumn("fbs_liquidity_shock_flag",
-        when(col("fbs_current_ratio_qoq_pct") < -0.2, 1).otherwise(0))
-      .withColumn("fcf_negative_free_cash_flow_flag", when(col("fcf") < 0.0, 1).otherwise(0))
-      .withColumn("fcf_cash_burn_flag", when(col("fcf") < 0.0 && col("ocf") < 0.0, 1).otherwise(0))
-      .withColumn("fis_negative_net_income_flag", when(col("net_income") < 0.0, 1).otherwise(0))
-      .withColumn("fis_revenue_decline_flag", when(col("fis_revenue_yoy_pct") < 0.0, 1).otherwise(0))
+  /** All fbs_/fcf_/fis_ features: the lazy window ladder over the
+    * truncated [[base]]. Neither memoized nor truncated itself: a
+    * checkpoint cannot be pruned, so a truncated ladder would make every
+    * consumer pay all 13 window operators and 9 exchanges, although each
+    * reads only a few of its columns (the quality scores read no
+    * sector/industry rank and no volatility). Lazy, each consumer's
+    * projection prunes the windows it does not read, and the plan it
+    * analyzes is the ladder over a scan, never the aggregation tree below
+    * the base.
+    *
+    * Columns are computed GROUPED BY WINDOW PARTITIONING, one select per
+    * group, not in reference order: row-level ratios, then `rn`, then every
+    * symbol-ordered window (qoq/yoy/volatility — the volatility reads
+    * `rn`), then every (quarter, sector) rank, then the (quarter, industry)
+    * rank, then row-level flags. Interleaved in reference order, Catalyst
+    * plans 32 Window operators and 26 exchanges — the frame re-shuffles
+    * between symbol and quarter×sector partitioning ~13 times. Grouped,
+    * adjacent compatible windows collapse to one pass per partitioning. Values are unchanged (each column's expression DAG is
+    * identical); only the column order of the frame differs, and every
+    * consumer selects by name. */
+  def full(spark: SparkSession, dir: String): DataFrame = {
+    def sectorRank(v: Column) = pctRank(v, Seq(col("fiscal_q"), col("sector")))
+    val ratios = stage(base(spark, dir),
+      // transform_balance_sheet.py:206-244, transform_cash_flow.py:222-299,
+      // transform_income_statement.py:222-276
+      "fbs_current_ratio" -> sdiv(col("tca"), col("tcl")),
+      "fbs_quick_ratio" -> sdiv(col("tca") - col("inventory"), col("tcl")),
+      "fbs_cash_ratio" -> sdiv(col("cash"), col("tcl")),
+      "fbs_working_capital" -> (col("tca") - col("tcl")),
+      "fbs_debt_to_equity" -> sdiv(col("total_liabilities"), col("equity")),
+      "fbs_debt_to_assets" -> sdiv(col("total_liabilities"), col("total_assets")),
+      "fbs_tangible_asset_ratio" -> sdiv(col("total_assets") - col("inventory"), col("total_assets")),
+      "fcf_free_cash_flow" -> col("fcf"),
+      "fcf_ocf_to_capex_ratio" -> sdiv(col("ocf"), col("capex")),
+      "fcf_cash_conversion_ratio" -> sdiv(col("ocf"), col("net_income")),
+      "fcf_capex_intensity" -> sdiv(col("capex"), col("revenue")),
+      "fcf_operating_cf_margin" -> sdiv(col("ocf"), col("revenue")),
+      "fis_gross_margin" -> sdiv(col("gross_profit"), col("revenue")),
+      "fis_operating_margin" -> sdiv(col("operating_income"), col("revenue")),
+      "fis_net_margin" -> sdiv(col("net_income"), col("revenue")))
+    val symbolWindows = stage(stage(ratios, "rn" -> row_number().over(BySym)),
+      "fbs_current_ratio_qoq_pct" -> pctChange(col("fbs_current_ratio"), 1),
+      "fbs_quick_ratio_qoq_pct" -> pctChange(col("fbs_quick_ratio"), 1),
+      "fbs_current_ratio_yoy_pct" -> pctChange(col("fbs_current_ratio"), 4),
+      "fbs_current_ratio_volatility" -> vol4(col("fbs_current_ratio")),
+      "fcf_operating_cf_qoq_pct" -> pctChange(col("ocf"), 1),
+      "fcf_free_cash_flow_qoq_pct" -> pctChange(col("fcf"), 1),
+      "fcf_operating_cf_yoy_pct" -> pctChange(col("ocf"), 4),
+      "fcf_free_cash_flow_yoy_pct" -> pctChange(col("fcf"), 4),
+      "fcf_operating_cf_volatility" -> vol4(col("ocf")),
+      "fis_revenue_qoq_pct" -> pctChange(col("revenue"), 1),
+      "fis_net_income_qoq_pct" -> pctChange(col("net_income"), 1),
+      "fis_revenue_yoy_pct" -> pctChange(col("revenue"), 4),
+      "fis_net_income_yoy_pct" -> pctChange(col("net_income"), 4),
+      "fis_revenue_volatility" -> vol4(col("revenue")))
+    val sectorRanks = stage(symbolWindows,
+      "fbs_current_ratio_sector_rank" -> sectorRank(col("fbs_current_ratio")),
+      "fcf_operating_cf_sector_rank" -> sectorRank(col("ocf")),
+      "fcf_free_cash_flow_sector_rank" -> sectorRank(col("fcf")),
+      "fis_net_margin_sector_rank" -> sectorRank(col("fis_net_margin")),
+      "fis_operating_margin_sector_rank" -> sectorRank(col("fis_operating_margin")))
+    val industryRank = stage(sectorRanks,
+      "fbs_current_ratio_industry_rank" ->
+        pctRank(col("fbs_current_ratio"), Seq(col("fiscal_q"), col("industry"))))
+    stage(industryRank,
+      "fbs_liquidity_shock_flag" -> when(col("fbs_current_ratio_qoq_pct") < -0.2, 1).otherwise(0),
+      "fcf_negative_free_cash_flow_flag" -> when(col("fcf") < 0.0, 1).otherwise(0),
+      "fcf_cash_burn_flag" -> when(col("fcf") < 0.0 && col("ocf") < 0.0, 1).otherwise(0),
+      "fis_negative_net_income_flag" -> when(col("net_income") < 0.0, 1).otherwise(0),
+      "fis_revenue_decline_flag" -> when(col("fis_revenue_yoy_pct") < 0.0, 1).otherwise(0))
   }
 }

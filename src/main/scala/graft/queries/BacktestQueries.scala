@@ -136,7 +136,9 @@ object BacktestQueries {
 
   /** Metrics.perStrategy with the oracle's 4dp canonicalization applied to
     * every derived double (counts stay integral) — shared by
-    * backtest_metrics and the model-filtered rollup (MlQueries). */
+    * backtest_metrics and the model-filtered rollup (MlQueries). Spark's
+    * round(double) HALF_UPs the shortest decimal repr; [[metricsSelect]]
+    * rounds through the same decimal path. */
   private[queries] def perStrategyRounded(tradeFrame: org.apache.spark.sql.DataFrame) = {
     import graft.sqlx.Exact.r4
     val m = Metrics.perStrategy(tradeFrame)
@@ -176,28 +178,42 @@ object BacktestQueries {
 
   /** The per-strategy metrics rollup (no ORDER BY) over a [[metricsCtes]]
     * drawdown CTE — byte-for-byte the arithmetic Metrics.perStrategy runs,
-    * decimal-exact sums and the oracle's 4dp rounding included. */
-  private[queries] def metricsSelect(ddSrc: String): String =
+    * decimal-exact sums included. Every derived double is rounded through
+    * [[OracleSql.rnd]] (shortest repr → DECIMAL → ROUND), the decimal path
+    * of Spark's round(double) in [[perStrategyRounded]]: DuckDB's ROUND on
+    * the binary double disagrees with it on exact .xxxx5 ties (an average
+    * of −287.77455 rounded to −287.7745 against Spark's −287.7746). Pure
+    * decimal sums round in DECIMAL space on both sides. */
+  private[queries] def metricsSelect(ddSrc: String): String = {
+    import OracleSql.rnd
+    val n = "CAST(COUNT(*) AS DOUBLE)"
+    def decSum(x: String) = s"CAST(CAST(SUM(CAST($x AS DECIMAL(25,10))) AS VARCHAR) AS DOUBLE)"
+    def decRound4(x: String) = s"CAST(ROUND(SUM(CAST($x AS DECIMAL(25,10))), 4) AS DOUBLE)"
+    val wins = "SUM(CASE WHEN pnl > 0 THEN 1 ELSE 0 END)"
+    val (s1, s2) = (decSum("pnl_pct"), decSum("pnl_pct * pnl_pct"))
+    val variance = s"($s2 - $s1 * $s1 / $n) / $n"
+    val std = s"SQRT(CASE WHEN $variance > 0.0 THEN $variance ELSE 0.0 END)"
+    val total = decRound4("pnl")
+    val grossProfit = decRound4("CASE WHEN pnl > 0 THEN pnl ELSE 0.0 END")
+    val grossLoss = s"abs(${decRound4("CASE WHEN pnl < 0 THEN pnl ELSE 0.0 END")})"
     s"""SELECT trade_strategy,
        |  COUNT(*) AS total_trades,
-       |  CAST(SUM(CASE WHEN pnl > 0 THEN 1 ELSE 0 END) AS BIGINT) AS winning_trades,
+       |  CAST($wins AS BIGINT) AS winning_trades,
        |  CAST(SUM(CASE WHEN pnl <= 0 THEN 1 ELSE 0 END) AS BIGINT) AS losing_trades,
-       |  CAST(ROUND(CAST(CAST(SUM(CASE WHEN pnl > 0 THEN 1 ELSE 0 END) / CAST(COUNT(*) AS DOUBLE) * 100.0 AS VARCHAR) AS DECIMAL(38,20)), 4) + 0.0 AS DOUBLE) AS win_rate,
+       |  ${rnd(s"$wins / $n * 100.0", 4)} AS win_rate,
        |  CAST(ROUND(SUM(CAST(pnl AS DECIMAL(25,10))), 4) + 0.0 AS DOUBLE) AS total_return,
-       |  CAST(ROUND(CAST(ROUND(SUM(CAST(pnl AS DECIMAL(25,10))), 4) AS DOUBLE) / 100000.0 * 100.0, 4) + 0.0 AS DOUBLE) AS total_return_pct,
-       |  CAST(ROUND(CAST(ROUND(SUM(CAST(pnl AS DECIMAL(25,10))), 4) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 4) + 0.0 AS DOUBLE) AS avg_trade_return,
-       |  CAST(ROUND(CAST(CAST(SUM(CAST(pnl_pct AS DECIMAL(25,10))) AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 4) + 0.0 AS DOUBLE) AS avg_trade_return_pct,
-       |  CAST(ROUND(CAST(CAST(MIN(drawdown) * 100.0 AS VARCHAR) AS DECIMAL(38,20)), 4) + 0.0 AS DOUBLE) AS max_drawdown,
-       |  CAST(ROUND(CASE WHEN COUNT(*) > 1 AND SQRT(CASE WHEN (CAST(CAST(SUM(CAST(pnl_pct * pnl_pct AS DECIMAL(25,10))) AS VARCHAR) AS DOUBLE) - CAST(CAST(SUM(CAST(pnl_pct AS DECIMAL(25,10))) AS VARCHAR) AS DOUBLE) * CAST(CAST(SUM(CAST(pnl_pct AS DECIMAL(25,10))) AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)) / CAST(COUNT(*) AS DOUBLE) > 0.0 THEN (CAST(CAST(SUM(CAST(pnl_pct * pnl_pct AS DECIMAL(25,10))) AS VARCHAR) AS DOUBLE) - CAST(CAST(SUM(CAST(pnl_pct AS DECIMAL(25,10))) AS VARCHAR) AS DOUBLE) * CAST(CAST(SUM(CAST(pnl_pct AS DECIMAL(25,10))) AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)) / CAST(COUNT(*) AS DOUBLE) ELSE 0.0 END) <> 0.0
-       |       THEN (CAST(CAST(SUM(CAST(pnl_pct AS DECIMAL(25,10))) AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)) / SQRT(CASE WHEN (CAST(CAST(SUM(CAST(pnl_pct * pnl_pct AS DECIMAL(25,10))) AS VARCHAR) AS DOUBLE) - CAST(CAST(SUM(CAST(pnl_pct AS DECIMAL(25,10))) AS VARCHAR) AS DOUBLE) * CAST(CAST(SUM(CAST(pnl_pct AS DECIMAL(25,10))) AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)) / CAST(COUNT(*) AS DOUBLE) > 0.0 THEN (CAST(CAST(SUM(CAST(pnl_pct * pnl_pct AS DECIMAL(25,10))) AS VARCHAR) AS DOUBLE) - CAST(CAST(SUM(CAST(pnl_pct AS DECIMAL(25,10))) AS VARCHAR) AS DOUBLE) * CAST(CAST(SUM(CAST(pnl_pct AS DECIMAL(25,10))) AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)) / CAST(COUNT(*) AS DOUBLE) ELSE 0.0 END) * SQRT(252.0) ELSE 0.0 END, 4) + 0.0 AS DOUBLE) AS sharpe_ratio,
-       |  CAST(ROUND(CASE WHEN abs(CAST(ROUND(SUM(CAST(CASE WHEN pnl < 0 THEN pnl ELSE 0.0 END AS DECIMAL(25,10))), 4) AS DOUBLE)) <> 0.0
-       |       THEN CAST(ROUND(SUM(CAST(CASE WHEN pnl > 0 THEN pnl ELSE 0.0 END AS DECIMAL(25,10))), 4) AS DOUBLE)
-       |            / abs(CAST(ROUND(SUM(CAST(CASE WHEN pnl < 0 THEN pnl ELSE 0.0 END AS DECIMAL(25,10))), 4) AS DOUBLE)) ELSE 0.0 END, 4) + 0.0 AS DOUBLE) AS profit_factor,
-       |  CAST(ROUND(CAST(CAST(CAST(SUM(holding_days) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS VARCHAR) AS DECIMAL(38,20)), 4) + 0.0 AS DOUBLE) AS avg_holding_days,
+       |  ${rnd(s"$total / 100000.0 * 100.0", 4)} AS total_return_pct,
+       |  ${rnd(s"$total / $n", 4)} AS avg_trade_return,
+       |  ${rnd(s"$s1 / $n", 4)} AS avg_trade_return_pct,
+       |  ${rnd("MIN(drawdown) * 100.0", 4)} AS max_drawdown,
+       |  ${rnd(s"CASE WHEN COUNT(*) > 1 AND $std <> 0.0 THEN ($s1 / $n) / $std * SQRT(252.0) ELSE 0.0 END", 4)} AS sharpe_ratio,
+       |  ${rnd(s"CASE WHEN $grossLoss <> 0.0 THEN $grossProfit / $grossLoss ELSE 0.0 END", 4)} AS profit_factor,
+       |  ${rnd(s"CAST(SUM(holding_days) AS DOUBLE) / $n", 4)} AS avg_holding_days,
        |  CAST(ROUND(SUM(CAST(commission AS DECIMAL(25,10))), 4) + 0.0 AS DOUBLE) AS total_commission,
        |  CAST(ROUND(SUM(CAST(CASE WHEN pnl > 0 THEN pnl ELSE 0.0 END AS DECIMAL(25,10))), 4) + 0.0 AS DOUBLE) AS gross_profit,
        |  CAST(abs(ROUND(SUM(CAST(CASE WHEN pnl < 0 THEN pnl ELSE 0.0 END AS DECIMAL(25,10))), 4)) AS DOUBLE) AS gross_loss
        |FROM $ddSrc GROUP BY trade_strategy""".stripMargin
+  }
 
   // ---------------------------------------------------------------- enrichment
   private val tradesCte: String =

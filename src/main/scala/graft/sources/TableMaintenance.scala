@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** The table-maintenance TRANSACTION: compaction, skipping-index
   * re-harvest, and generation flip as ONE entry point — the loop real
@@ -170,7 +171,7 @@ object TableMaintenance {
       if (recs.isEmpty) None
       else Some(recs.groupBy(_.string("file")).values
         .map(_.map(_.long("n_rows")).max).sum)
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** The maintenance transaction: bin-pack the current generation's files
     * clustered on `sortCol` (range partitioning keeps each output file's

@@ -18,12 +18,14 @@ object PlanDump {
       "feat_sma" -> "whole windowed ladder: single exchange + sort after the bars agg",
       "feat_ema" -> "recursive scan: one exchange, sortWithinPartitions, mapPartitions",
       "sig_ema_crossover" -> "signals: filter + lag windows over the (cached) feature table",
-      "fund_balance_sheet" -> "two scan-side aggs + broadcast customer join + window pass",
+      "fund_balance_sheet" ->
+        "window ladder over a scan of the truncated line-item base: one pass per partitioning, unread windows pruned",
       "dedup_minhash" -> "banded bucket equi-join + candidate-restricted exact verify, no cartesian",
       "dedup_embedding_lsh" -> "cell-routed (low threshold): k-means cell equi-join + exact cosine re-score, no nested loop",
       "dedup_embedding_lsh_hi" -> "sign-LSH regime: hyperplane bucket join + exact cosine re-score, no nested loop",
       "ann_topk" -> "broadcast query side + codegen graft_dot, top-k window",
-      "fund_quality_scores" -> "distributed exact quantile: no single-partition window",
+      "fund_quality_scores" ->
+        "scan of the truncated score frame; its build prunes the unread statement windows and plans no single-partition window",
       "watermark_incremental_features" -> "stale-symbol semi-join gates the event scan",
       "trades_fundamentals_join" -> "broadcast as-of range join + keep-latest window",
       "corpus_pack" -> "deterministic bucketed global-offset cumsum, no single-partition window",

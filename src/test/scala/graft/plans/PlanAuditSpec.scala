@@ -81,6 +81,38 @@ class PlanAuditSpec extends SparkSpec {
       s"global (empty-partition) window in quality-score plan:\n${windows.mkString("\n")}")
   }
 
+  test("quality scores: no sector/industry rank window, and a compact analyzed plan") {
+    // a fresh session builds the statements and scores memos from scratch;
+    // the listener sees every execution that build runs, the lineage
+    // truncations included (the truncated frames' own plans are bare scans)
+    val s = spark.newSession()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.execution.QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        seen.add(qe)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    s.listenerManager.register(listener)
+    graft.fundamentals.QualityScores.scores(s, sf("sf0.001"))
+    import scala.jdk.CollectionConverters._
+    def scoresQe = seen.asScala.find(_.analyzed.output.exists(_.name == "overall_quality_score"))
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (scoresQe.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    s.listenerManager.unregister(listener)
+    assert(scoresQe.nonEmpty, "the scores build never ran")
+    // the scores read no sector/industry rank: none may be computed for them
+    val ranked = seen.asScala.toSeq.flatMap(qe => allNodes(qe.executedPlan)).collect {
+      case w: org.apache.spark.sql.execution.window.WindowExec
+        if w.partitionSpec.flatMap(_.references).exists(a => Set("sector", "industry")(a.name)) => w
+    }
+    assert(ranked.isEmpty, s"rank windows computed for the scores:\n${ranked.mkString("\n")}")
+    // named score stages: each intermediate analyzed once, not inlined at every use
+    val nodes = scoresQe.get.analyzed.collect { case p =>
+      p.expressions.map(_.collect { case e => e }.size).sum
+    }.sum
+    assert(nodes < 8000, s"analyzed scores plan holds $nodes expression nodes")
+  }
+
   test("corpus ops prune the documents scan to the columns they use") {
     // packing needs only (doc_id, text→token count); lang/source/n_chars
     // must not be read — at 100 TB the text column dominates, but reading
