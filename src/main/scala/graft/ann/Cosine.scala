@@ -85,7 +85,17 @@ object Cosine {
     rankedNeighbors(spark, dir, k, queryMod, negativesOnly = true)
 
   /** All pairs with cosine ≥ threshold (exact baseline for embedding
-    * near-dup; LSH-bucketed variant in [[HyperplaneLSH]]). */
+    * near-dup; LSH-bucketed variant in [[HyperplaneLSH]]).
+    *
+    * Corpus-size bound: the forced `broadcast` ships the WHOLE embedding
+    * table (vec_id, vector, norm) to the driver and every executor, and
+    * Spark refuses a broadcast over 8 GB — about 14 M vectors at d = 64
+    * (~600 B a row), fewer once driver and executor heaps are counted.
+    * No cartesian fallback is kept for larger corpora: the operator is
+    * O(N²) exact scoring, so at the size where the broadcast fails the
+    * pair loop itself (~10¹⁴ dot products) is out of reach, and the scale
+    * path is the LSH-bucketed near-dup ([[EmbeddingNearDup]]), not the
+    * same quadratic work behind a different join. */
   def thresholdPairs(spark: SparkSession, dir: String, threshold: Double): DataFrame = {
     val e = withNorm(spark, embeddings(spark, dir))
     // The O(N²) pair loop is the anchor's SEMANTICS; its parallelism is

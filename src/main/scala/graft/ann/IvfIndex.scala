@@ -39,9 +39,10 @@ import org.apache.spark.sql.functions._
   * plan-referenced double[][] — k·d doubles, KBs at small k, MBs at 10⁵
   * cells), so the corpus-wide scan stays in whole-stage codegen with no
   * per-row boxing. At 100 TB the index is just
-  * `(cell, vec)` written partitioned BY cell ([[writeIndex]]) so a probe
-  * ([[approxTopKStored]]) reads nProbe/nCells of the data via partition
-  * pruning — and the candidate join is a cell equi-join, never all-pairs.
+  * `(cell, vec)` written one directory per cell ([[writeIndex]]) so a probe
+  * ([[approxTopKStored]]) reads only the probed cells' files, nProbe/nCells
+  * of the data — and the candidate join is a cell equi-join, never
+  * all-pairs.
   */
 object IvfIndex {
 
@@ -303,131 +304,76 @@ object IvfIndex {
     rescoreTopK(probeCells(queries, cents, nProbe), assigned, k)
   }
 
-  /** Commit marker shared by the IVF store's write/append/probe paths —
-    * the same crash-loudness discipline [[IvfPq]] has had since round 11
-    * (its absence here was a round-12 review finding): the marker is
-    * dropped before any store mutation and re-created only after every
-    * piece landed, so a torn rebuild (new `assigned` beside stale
-    * `centroids`) or a crashed append can never be read as a healthy
-    * index — probes refuse, recovery is a [[writeIndex]] rebuild. */
-  private def commitMarker(spark: org.apache.spark.sql.SparkSession, path: String) =
-    (org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration),
-      new org.apache.hadoop.fs.Path(s"$path/_index_commit"))
-
-  private def requireCommitted(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val (fs, marker) = commitMarker(spark, path)
-    require(fs.exists(marker),
-      s"$path has no _index_commit marker: writeIndex/append did not complete (or is mid-mutation)")
-  }
-
   /** Materialize the index in the layout the header promises: assignments
-    * written `partitionBy(cell)` (one directory per cell) with the centroid
-    * table beside them. A stored probe then reads only the probed cells'
-    * files — at 100 TB the probe scan is nProbe/nCells of the index, not a
-    * reshuffle of the whole assigned-vector frame per query batch. */
+    * written one directory per cell with the centroid table beside them,
+    * published as a new [[IndexStore]] version (fresh increment history).
+    * A stored probe then reads only the probed cells' files — at 100 TB
+    * the probe scan is nProbe/nCells of the index, not a reshuffle of the
+    * whole assigned-vector frame per query batch. */
   def writeIndex(vecs: DataFrame, path: String, nCells: Int = 0,
                  seed: Long = 42L, maxTrain: Int = 65536): Unit = {
     val spark = vecs.sparkSession
-    // nCells = 0 (default) resolves FAISS's √N serving rule
-    // ([[Adaptive.cellsForServing]]) — 16 at every driver SF
-    val cells =
-      if (nCells > 0) nCells else Adaptive.cellsForServing(graft.sqlx.Counts.of(vecs))
-    IndexLedger.acquireMutationLock(spark, path, "IvfIndex.writeIndex")
-    try {
-      val (fs, marker) = commitMarker(spark, path)
-      fs.delete(marker, false)
+    IndexStore.build(spark, path, "IvfIndex.writeIndex") {
+      // nCells = 0 (default) resolves FAISS's √N serving rule
+      // ([[Adaptive.cellsForServing]]) — 16 at every driver SF
+      val cells =
+        if (nCells > 0) nCells else Adaptive.cellsForServing(graft.sqlx.Counts.of(vecs))
       val centroids = fittedCentroids(vecs, cells, seed, maxTrain)
-      val assigned = vecs.select(col("vec_id"), col("emb"),
-        graft.functions.NearestCell.nearest(spark, col("emb"), centroids).as("cell"))
-      IndexLedger.reset(spark, path)
-      // assignments (the data) stay a Spark write; the nCells-row centroid
-      // table is written on the driver (TinyParquet.write) concurrently —
-      // one fixed-cost Spark job removed per build (round 18). The marker
-      // still lands only after both, so the commit is unchanged.
-      graft.sqlx.Par.run(
-        () => assigned.write.mode("overwrite").partitionBy("cell").parquet(s"$path/assigned"),
-        () => graft.sources.TinyParquet.write(spark, s"$path/centroids",
-          Seq("cell" -> "int", "centroid" -> "array<double>"),
-          centroids.zipWithIndex.toSeq.map { case (c, i) => Seq[Any](i, c) }))
-      fs.create(marker, true).close()
-    } finally IndexLedger.releaseMutationLock(spark, path)
-  }
-
-  /** Incremental index maintenance — the production ANN ingest path: new
-    * vectors are assigned against the STORED quantizer (fixed centroids,
-    * FAISS's add-after-train) and appended to their cell partitions.
-    * No refit and no rewrite of existing cells: the job's cost is one
-    * codegen assignment scan of the increment plus the appended files —
-    * O(increment), never O(index). Because per-row assignment depends
-    * only on the centroids, the updated index is bit-identical to
-    * rebuilding the assignment over base ∪ increment with the same
-    * quantizer (IvfIncrementalSpec asserts store and probe equality), so
-    * probes keep pruning partitions unchanged. A replayed increment would
-    * duplicate its vec_ids in the candidate stream, so `incrementId` is
-    * guarded by the store's [[IndexLedger]] high-water mark (monotone ids,
-    * single ingest writer — the MaterializedAgg.refreshOnce discipline):
-    * an orchestrator-retried append is a no-op returning false. The
-    * documented limit is quantizer drift: after enough distribution shift
-    * the cells skew and recall decays, at which point the maintenance job
-    * is a refit + [[writeIndex]] rebuild — the ANN analogue of table
-    * compaction. */
-  def appendToIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                    newVecs: DataFrame, incrementId: Long): Boolean = {
-    if (IndexLedger.recoverMarker(spark, path, incrementId, commitMarker(spark, path)))
-      return false
-    IndexLedger.requireNoCrashedMutation(spark, path, commitMarker(spark, path))
-    if (incrementId <= IndexLedger.applied(spark, path)) false
-    else {
-      // concurrent mutators are rejected loudly BEFORE any file lands —
-      // two interleaved appends into the same cell dirs was the round-13
-      // concurrency review's remaining corruption window
-      IndexLedger.acquireMutationLock(spark, path, "IvfIndex.appendToIndex")
-      try {
-        // marker + applied re-checked UNDER the lock: outside it, a rival
-        // mid-append has the marker legitimately down, and checking there
-        // would misreport a healthy store as needing a rebuild
-        requireCommitted(spark, path)
-        if (incrementId <= IndexLedger.applied(spark, path)) return false
-        // marker dropped for the append window: a crash after data landed
-        // but before the ledger advanced must NOT let the retry silently
-        // re-append (the review-found double-append) — with the marker gone
-        // the retry (and every probe) fails loudly instead
-        val (fs, marker) = commitMarker(spark, path)
-        fs.delete(marker, false)
-        // centroid table is k rows of driver metadata — driver-side read,
-        // no Spark job (round 17)
-        val cents = graft.sources.TinyParquet.rows(spark, s"$path/centroids")
-          .sortBy(_.int("cell")).map(_.doubles("centroid")).toArray
-        val assigned = newVecs.select(col("vec_id"), col("emb"),
-          graft.functions.NearestCell.nearest(spark, col("emb"), cents).as("cell"))
-        assigned.write.mode("append").partitionBy("cell").parquet(s"$path/assigned")
-        IndexLedger.record(spark, path, incrementId)
-        fs.create(marker, true).close()
-        true
-      } finally IndexLedger.releaseMutationLock(spark, path)
+      // the nCells-row centroid table is a driver write (TinyParquet)
+      (vecs.select(col("vec_id"), col("emb"),
+        graft.functions.NearestCell.nearest(spark, col("emb"), centroids).as("cell")),
+        Seq(("centroids", Seq("cell" -> "int", "centroid" -> "array<double>"),
+          centroids.zipWithIndex.toSeq.map { case (c, i) => Seq[Any](i, c) })))
     }
   }
 
-  /** Probe a stored index. The union of probed cells is collected first —
-    * bounded by nCells, i.e. centroid metadata, never data — and pushed as
-    * a literal IN over the partition column, so Spark's partition pruning
-    * drops every unprobed cell directory at planning time (asserted by
-    * IvfStoreSpec on the scan's partition count). */
+  /** The stored centroids of version `v`, cell-ordered (driver read). */
+  private def storedCentroids(spark: org.apache.spark.sql.SparkSession, path: String,
+                              v: IndexStore.Version): Seq[(Int, Array[Double])] =
+    IndexStore.table(spark, path, v, "centroids")
+      .map(r => (r.int("cell"), r.doubles("centroid"))).sortBy(_._1)
+
+  /** Incremental index maintenance — the production ANN ingest path: new
+    * vectors are assigned against the STORED quantizer (fixed centroids,
+    * FAISS's add-after-train) and appended to their cells copy-on-write
+    * ([[IndexStore.append]]: the increment's files land in a fresh write
+    * dir, the next version lists them beside the head's). No refit and no
+    * rewrite of existing cells: the job's cost is one codegen assignment
+    * scan of the increment plus the appended files — O(increment), never
+    * O(index). Because per-row assignment depends only on the centroids,
+    * the updated index is bit-identical to rebuilding the assignment over
+    * base ∪ increment with the same quantizer (IvfIncrementalSpec asserts
+    * store and probe equality). A replayed increment would duplicate its
+    * vec_ids in the candidate stream, so `incrementId` is checked against
+    * the head's applied id (monotone ids, single ingest writer): an
+    * orchestrator-retried append is a no-op returning false. Probes keep
+    * serving the previous version throughout. The documented limit is
+    * quantizer drift: after enough distribution shift the cells skew and
+    * recall decays, at which point the maintenance job is a refit +
+    * [[writeIndex]] rebuild — the ANN analogue of table compaction. */
+  def appendToIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+                    newVecs: DataFrame, incrementId: Long): Boolean =
+    IndexStore.append(spark, path, "IvfIndex.appendToIndex", incrementId) { head =>
+      val cents = storedCentroids(spark, path, head).map(_._2).toArray
+      newVecs.select(col("vec_id"), col("emb"),
+        graft.functions.NearestCell.nearest(spark, col("emb"), cents).as("cell"))
+    }
+
+  /** Probe a stored index. The head version is resolved once; the union of
+    * probed cells is collected first — bounded by nCells, i.e. centroid
+    * metadata, never data — and only those cells' listed files are scanned
+    * (asserted by IvfStoreSpec on the scan's file set). */
   def approxTopKStored(spark: org.apache.spark.sql.SparkSession, path: String,
                        queries: DataFrame, k: Int, nProbe: Int = 8): DataFrame = {
-    requireCommitted(spark, path)
+    val head = IndexStore.head(spark, path)
     // centroids as a LOCAL relation: the probe's broadcast cross then
     // builds without a file-scan job (round 17)
     import spark.implicits._
-    val cents = graft.sources.TinyParquet.rows(spark, s"$path/centroids")
-      .map(r => (r.int("cell"), r.doubles("centroid").toSeq))
-      .toDF("cell", "centroid")
+    val cents = storedCentroids(spark, path, head)
+      .map { case (c, v) => (c, v.toSeq) }.toDF("cell", "centroid")
     val qcells = probeCells(queries, cents, nProbe)
     val probed = qcells.select("cell").distinct().collect()
-      .map(_.getInt(0)).sorted.toSeq
-    val assigned = spark.read.parquet(s"$path/assigned")
-      .where(col("cell").isin(probed: _*))
-    rescoreTopK(qcells, assigned, k)
+      .map(_.getInt(0)).toSeq
+    rescoreTopK(qcells, IndexStore.read(spark, path, head, Some(probed)), k)
   }
 }

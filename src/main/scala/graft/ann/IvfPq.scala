@@ -78,54 +78,39 @@ object IvfPq {
   }
 
   /** Materialize the index in the layout the header promises: the
-    * PQ-coded rows written `partitionBy(cell)` — m small ints per vector
-    * in the scan table, the raw vectors stay in the base table — with the
-    * centroid and codebook metadata beside them. At 100 TB this is what
-    * makes the composition real: a probe partition-prunes to
-    * nProbe/nCells of an already-64×-compressed table, and the raw table
-    * is touched only for the rerank·|queries| exact re-scores. */
-  private def commitMarker(spark: org.apache.spark.sql.SparkSession, path: String) =
-    (org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration),
-      new org.apache.hadoop.fs.Path(s"$path/_index_commit"))
-
+    * PQ-coded rows written one directory per cell — m small ints per
+    * vector in the scan table, the raw vectors stay in the base table —
+    * with the centroid and codebook metadata beside them, published as a
+    * new [[IndexStore]] version with a fresh increment history. At 100 TB
+    * this is what makes the composition real: a probe reads nProbe/nCells
+    * of an already-64×-compressed table, and the raw table is touched only
+    * for the rerank·|queries| exact re-scores. */
   def writeIndex(vecs: DataFrame, path: String, dim: Int,
                  nCells: Int = 0, m: Int = Pq.SubSpaces, codes: Int = Pq.Codes,
-                 seed: Long = 42L, maxTrain: Int = 65536): Unit = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    // nCells = 0 (default) resolves FAISS's √N serving rule
-    // ([[Adaptive.cellsForServing]]) — 16 at every driver SF
-    val cells =
-      if (nCells > 0) nCells else Adaptive.cellsForServing(graft.sqlx.Counts.of(vecs))
-    // crash consistency: the commit marker is dropped FIRST and re-created
-    // only after codes AND metadata all landed, so a rebuild that dies
-    // between writes can never leave new codes silently paired with stale
-    // centroids/codebooks — readers refuse an unmarked store
-    IndexLedger.acquireMutationLock(spark, path, "IvfPq.writeIndex")
-    try {
-      val (fs, marker) = commitMarker(spark, path)
-      fs.delete(marker, false)
-      IndexLedger.reset(spark, path)
+                 seed: Long = 42L, maxTrain: Int = 65536): Unit =
+    build(vecs, path, "IvfPq.writeIndex", dim, nCells, m, codes, seed, maxTrain,
+      carryApplied = false)
+
+  private def build(vecs: DataFrame, path: String, store: String, dim: Int,
+                    nCells: Int, m: Int, codes: Int, seed: Long, maxTrain: Int,
+                    carryApplied: Boolean): Unit = {
+    IndexStore.build(vecs.sparkSession, path, store, carryApplied) {
+      // nCells = 0 (default) resolves FAISS's √N serving rule
+      // ([[Adaptive.cellsForServing]]) — 16 at every driver SF
+      val cells =
+        if (nCells > 0) nCells else Adaptive.cellsForServing(graft.sqlx.Counts.of(vecs))
       val (coarse, cbs) = fitBoth(vecs, dim, cells, m, codes, seed, maxTrain)
-      // codes (the data) stay a Spark write; the two quantizer-metadata
-      // tables (nCells and m·codes driver-resident rows) are written on
-      // the driver (TinyParquet.write) concurrently with it — two Spark
-      // jobs of pure fixed cost removed per build (round 18). The commit
-      // marker still lands only after ALL pieces, so crash consistency is
-      // unchanged. codebooks persist WITH their quantized |cent|² so the
-      // stored probe's cn2 is bit-identical to the in-memory path by
-      // construction (same sequential dot, same HALF_UP 10-dp round as
-      // the codegen DotProduct + Spark round they replace).
-      graft.sqlx.Par.run(
-        () => indexRows(vecs, coarse, cbs)
-          .write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes"),
-        () => graft.sources.TinyParquet.write(spark, s"$path/centroids",
-          Seq("cell" -> "int", "centroid" -> "array<double>"),
+      // the two quantizer-metadata tables (nCells and m·codes rows) are
+      // driver writes (TinyParquet); the codes are the one Spark write.
+      // codebooks persist WITH their quantized |cent|² so the stored
+      // probe's cn2 is bit-identical to the in-memory path by construction
+      // (same sequential dot, same HALF_UP 10-dp round as the codegen
+      // DotProduct + Spark round they replace).
+      (indexRows(vecs, coarse, cbs), Seq(
+        ("centroids", Seq("cell" -> "int", "centroid" -> "array<double>"),
           coarse.zipWithIndex.toSeq.map { case (c, i) => Seq[Any](i, c) }),
-        () => graft.sources.TinyParquet.write(spark, s"$path/codebooks",
-          Seq("j" -> "int", "code" -> "int", "cent" -> "array<double>",
-            "cn2" -> "double"),
+        ("codebooks", Seq("j" -> "int", "code" -> "int", "cent" -> "array<double>",
+          "cn2" -> "double"),
           for { j <- cbs.indices; c <- cbs(j).indices } yield {
             val cent = cbs(j)(c)
             var s0 = 0.0
@@ -134,24 +119,19 @@ object IvfPq {
             val cn2 = java.math.BigDecimal.valueOf(s0)
               .setScale(10, java.math.RoundingMode.HALF_UP).doubleValue()
             Seq[Any](j, c, cent, cn2)
-          }))
-      fs.create(marker, true).close()
-    } finally IndexLedger.releaseMutationLock(spark, path)
+          })))
+    }
   }
 
-  /** Read the stored quantizer metadata back as arrays (cell- and
-    * code-ordered) — driver-sized by construction. */
-  private def readMeta(spark: org.apache.spark.sql.SparkSession,
-                       path: String): (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val (fs, marker) = commitMarker(spark, path)
-    require(fs.exists(marker),
-      s"$path has no _index_commit marker: writeIndex did not complete (or is mid-rebuild)")
-    // centroid/codebook tables are k·m rows of driver metadata: read them
-    // on the driver (TinyParquet) — each spark.read...collect() here was a
-    // measured fixed-cost job on every append/refit (round 17)
-    val coarse = graft.sources.TinyParquet.rows(spark, s"$path/centroids")
+  /** Version `v`'s quantizer metadata as arrays (cell- and code-ordered) —
+    * driver-sized by construction, read on the driver (TinyParquet): each
+    * spark.read...collect() here was a measured fixed-cost job on every
+    * append/refit (round 17). */
+  private def readMeta(spark: org.apache.spark.sql.SparkSession, path: String,
+                       v: IndexStore.Version): (Array[Array[Double]], Array[Array[Array[Double]]]) = {
+    val coarse = IndexStore.table(spark, path, v, "centroids")
       .sortBy(_.int("cell")).map(_.doubles("centroid")).toArray
-    val cbRows = graft.sources.TinyParquet.rows(spark, s"$path/codebooks")
+    val cbRows = IndexStore.table(spark, path, v, "codebooks")
       .map(r => (r.int("j"), r.int("code"), r.doubles("cent")))
     val m = cbRows.map(_._1).max + 1
     val cbs = Array.tabulate(m)(j =>
@@ -159,67 +139,47 @@ object IvfPq {
     (coarse, cbs)
   }
 
+  /** Sub-space count of a stored version, from its data schema (no job). */
+  private def subSpaces(v: IndexStore.Version): Int =
+    v.schema.fieldNames.count(_.startsWith("code_"))
+
   /** Incremental index maintenance — [[IvfIndex.appendToIndex]]'s twin
     * for the composed index: arriving vectors are assigned AND PQ-coded
     * against the STORED metadata (fixed centroids and codebooks — FAISS's
     * add-after-train; raw coding means the codes don't even depend on the
     * assigned cell) in one codegen projection, then appended to their
-    * cell partitions. O(increment) per ingest, no refit, no rewrite;
-    * because every index column is a per-row function of the stored
-    * metadata, append ≡ bulk-indexing the union with the same quantizer
-    * (IvfPqSpec asserts it row-for-row).
+    * cells copy-on-write ([[IndexStore.append]]). O(increment) per ingest,
+    * no refit, no rewrite; because every index column is a per-row
+    * function of the stored metadata, append ≡ bulk-indexing the union
+    * with the same quantizer (IvfPqSpec asserts it row-for-row).
     *
-    * Replay/crash protection (the round-11 ADVICE fix — a replayed vec_id
-    * doubles its ADC partials, inflating its approximate score by √2 and
-    * crowding real neighbours out of the re-rank pool with no error
-    * anywhere): `incrementId` is checked against the store's
-    * [[IndexLedger]] high-water mark, so an orchestrator-retried or
-    * `foreachBatch`-replayed increment is a NO-OP (returns false), and the
-    * `_index_commit` marker is dropped for the duration of the append —
-    * a crash mid-append leaves the store explicitly unreadable (probes
-    * refuse, recovery = [[writeIndex]] rebuild) instead of silently
-    * serving partially or doubly coded rows. Increment ids must be
-    * monotone per store (single ingest writer), like
+    * Replay protection (a replayed vec_id doubles its ADC partials,
+    * inflating its approximate score by √2 and crowding real neighbours out
+    * of the re-rank pool with no error anywhere): `incrementId` is checked
+    * against the head version's applied id, so an orchestrator-retried or
+    * `foreachBatch`-replayed increment is a NO-OP (returns false). A crash
+    * before the commit leaves the head untouched, so the retry applies the
+    * increment exactly once; probes keep serving the head meanwhile.
+    * Increment ids must be monotone per store (single ingest writer), like
     * MaterializedAgg.refreshOnce's batch ids. Distinctness of vec_ids
     * ACROSS increments remains the ingest layer's contract (the
     * dedup_incremental operator). Drift limit as for IVF: enough
     * distribution shift ⇒ refit + [[writeIndex]] rebuild. */
   def appendToIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                    newVecs: DataFrame, incrementId: Long): Boolean = {
-    if (IndexLedger.recoverMarker(spark, path, incrementId, commitMarker(spark, path)))
-      return false
-    IndexLedger.requireNoCrashedMutation(spark, path, commitMarker(spark, path))
-    if (incrementId <= IndexLedger.applied(spark, path)) false
-    else {
-      // reject concurrent mutators loudly before any file lands (the
-      // lock discipline shared with IvfIndex.appendToIndex — interleaved
-      // cell-dir appends were the remaining corruption window)
-      IndexLedger.acquireMutationLock(spark, path, "IvfPq.appendToIndex")
-      try {
-        // metadata read (which requires the commit marker) UNDER the lock:
-        // outside it, a rival mid-append has the marker legitimately down
-        // and readMeta would misreport a healthy store as needing a rebuild
-        val (coarse, cbs) = readMeta(spark, path)
-        if (incrementId <= IndexLedger.applied(spark, path)) return false
-        val (fs, marker) = commitMarker(spark, path)
-        fs.delete(marker, false)
-        indexRows(newVecs, coarse, cbs)
-          .write.mode("append").partitionBy("cell").parquet(s"$path/codes")
-        IndexLedger.record(spark, path, incrementId)
-        fs.create(marker, true).close()
-        true
-      } finally IndexLedger.releaseMutationLock(spark, path)
+                    newVecs: DataFrame, incrementId: Long): Boolean =
+    IndexStore.append(spark, path, "IvfPq.appendToIndex", incrementId) { head =>
+      val (coarse, cbs) = readMeta(spark, path, head)
+      indexRows(newVecs, coarse, cbs)
     }
-  }
 
   /** Row-level forget on the SERVING index — the delete half of index
     * maintenance ([[appendToIndex]] is the insert half): a takedown /
     * GDPR request arrives as vec_ids only, so affected cells are located
-    * by a column-pruned semi-join over the stored code table's
-    * (vec_id, cell) — never by re-embedding — and ONLY those cell
-    * partitions are rewritten (anti-join survivors, staged, swapped in);
-    * every other cell's files are untouched. A cell whose last vector is
-    * deleted simply leaves the partition layout (probing it yields no
+    * by a column-pruned semi-join over the head's codes' (vec_id, cell) —
+    * never by re-embedding — and ONLY those cells are rewritten
+    * (anti-join survivors, into a fresh write dir); the next version swaps
+    * those cells' file lists and keeps every other cell's files. A cell
+    * whose last vector is deleted lists no files (probing it yields no
     * candidates). Quantizer metadata is untouched by construction — raw
     * PQ codes are per-row functions of the codebooks, so delete ≡
     * rebuilding on the survivors WITH THE SAME fit sample (the fitted
@@ -227,12 +187,11 @@ object IvfPq {
     * identically, and [[refitIfDrifted]] is the lever when enough of the
     * corpus departs that the old fit stops representing it).
     *
-    * Same exactly-once / crash discipline as the append: `incrementId`
-    * checks the [[IndexLedger]] high-water mark (an orchestrator-retried
-    * delete is a no-op), the `_index_commit` marker is down for the
-    * duration (a crash mid-swap leaves the store loudly unreadable,
-    * recovery = rebuild), and concurrent mutators are rejected by the
-    * mutation lock.
+    * Same exactly-once discipline as the append: `incrementId` is checked
+    * against the head's applied id (a retried delete is a no-op), and
+    * probes keep serving the previous version until the new one commits.
+    * The old cell files stay on disk while a retained version lists them:
+    * physical erasure follows the retention timeline in docs/COMMITS.md.
     *
     * Durability boundary (the composition contract): an index delete is a
     * SERVING-layer removal — a later [[writeIndex]] / [[refitIfDrifted]]
@@ -245,102 +204,73 @@ object IvfPq {
     * original training set. */
   def deleteFromIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                       ids: DataFrame, incrementId: Long): Boolean = {
-    if (IndexLedger.recoverMarker(spark, path, incrementId, commitMarker(spark, path)))
-      return false
-    IndexLedger.requireNoCrashedMutation(spark, path, commitMarker(spark, path))
-    if (incrementId <= IndexLedger.applied(spark, path)) false
+    val dir = IndexStore.writeDir(path)
+    val head = IndexStore.head(spark, path)
+    if (incrementId <= head.applied) false
     else {
-      IndexLedger.acquireMutationLock(spark, path, "IvfPq.deleteFromIndex")
-      try {
-        if (incrementId <= IndexLedger.applied(spark, path)) return false
-        val (fs, marker) = commitMarker(spark, path)
-        require(fs.exists(marker),
-          s"$path has no _index_commit marker: the store is mid-mutation or crashed")
-        val codes = spark.read.option("basePath", s"$path/codes")
-          .parquet(s"$path/codes")
-        // delete requests are request-sized: broadcast them to both the
-        // cell-locating semi-join and the survivor anti-join
-        val keys = broadcast(ids.select("vec_id").distinct())
-        val affected = codes.join(keys, Seq("vec_id"), "left_semi")
-          .select("cell").distinct().collect().map(_.getInt(0)).toSeq.sorted
-        if (affected.isEmpty) {
-          // nothing stored for these ids — the ledger still advances so a
-          // replay of THIS delete is a no-op (marker never dropped)
-          IndexLedger.record(spark, path, incrementId)
-          return true
-        }
-        fs.delete(marker, false)
-        val stage = s"$path/_codes_stage_forget"
-        fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-        codes.where(col("cell").isin(affected: _*))
-          .join(keys, Seq("vec_id"), "left_anti")
-          .write.mode("overwrite").partitionBy("cell").parquet(stage)
-        affected.foreach { c =>
-          val dst = new org.apache.hadoop.fs.Path(s"$path/codes/cell=$c")
-          fs.delete(dst, true)
-          val src = new org.apache.hadoop.fs.Path(s"$stage/cell=$c")
-          if (fs.exists(src) && !fs.rename(src, dst))
-            sys.error(s"deleteFromIndex: failed to publish $dst from staging")
-        }
-        fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-        IndexLedger.record(spark, path, incrementId)
-        fs.create(marker, true).close()
-        true
-      } finally IndexLedger.releaseMutationLock(spark, path)
+      // delete requests are request-sized: broadcast them to both the
+      // cell-locating semi-join and the survivor anti-join
+      val keys = broadcast(ids.select("vec_id").distinct())
+      val affected = IndexStore.read(spark, path, head)
+        .join(keys, Seq("vec_id"), "left_semi")
+        .select("cell").distinct().collect().map(_.getInt(0)).toSeq
+      // nothing stored for these ids: the next version still records the
+      // id, so a replay of THIS delete is a no-op
+      val rewritten =
+        if (affected.isEmpty) Map.empty[Int, Seq[String]]
+        else IndexStore.writeCells(
+          IndexStore.read(spark, path, head, Some(affected))
+            .join(keys, Seq("vec_id"), "left_anti"), path, dir)
+      IndexStore.publish(spark, path, "IvfPq.deleteFromIndex", Some(head), dir,
+        head.withCells(incrementId, affected.map(c => c -> rewritten.getOrElse(c, Nil)).toMap))
+      true
     }
   }
 
-  /** Membership audit of the serving index: the vec_ids currently held in
-    * the committed codes store (with their cells), column-pruned to the
-    * two metadata columns — the "prove document X is no longer served"
-    * read a compliance takedown ends with. Refuses an uncommitted store
-    * like every probe (a mid-mutation index can't witness anything). */
-  def storedIds(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val (fs, marker) = commitMarker(spark, path)
-    require(fs.exists(marker),
-      s"$path has no _index_commit marker: writeIndex did not complete (or is mid-rebuild)")
-    spark.read.parquet(s"$path/codes").select("vec_id", "cell")
-  }
+  /** Membership audit of the serving index: the vec_ids the committed head
+    * holds (with their cells), column-pruned to the two metadata columns —
+    * the "prove document X is no longer served" read a compliance takedown
+    * ends with. A store with no committed version refuses, like every
+    * probe. */
+  def storedIds(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
+    IndexStore.read(spark, path, IndexStore.head(spark, path)).select("vec_id", "cell")
 
-  /** Probe a stored index: centroids/codebooks are metadata reads, the
-    * probed cells are pushed as a literal IN over the partition column
-    * (planning-time pruning, like [[IvfIndex.approxTopKStored]]), ADC
-    * runs over the pruned code rows, and only the surviving candidates
+  /** Probe a stored index: the head version is resolved once,
+    * centroids/codebooks are metadata reads, only the probed cells' listed
+    * code files are scanned (like [[IvfIndex.approxTopKStored]]), ADC
+    * runs over those code rows, and only the surviving candidates
     * touch `vecs` (the raw base table) for the exact re-rank. Same
     * quantizer arithmetic ⇒ bit-identical to [[approxTopK]]. */
   def approxTopKStored(spark: org.apache.spark.sql.SparkSession, path: String,
                        vecs: DataFrame, queries: DataFrame, k: Int, dim: Int,
                        nProbe: Int = 8, rerank: Int = Pq.Rerank): DataFrame = {
-    val (fs, marker) = commitMarker(spark, path)
-    require(fs.exists(marker),
-      s"$path has no _index_commit marker: writeIndex did not complete (or is mid-rebuild)")
+    val head = IndexStore.head(spark, path)
     import spark.implicits._
     // quantizer metadata as LOCAL relations (driver-read, k·m rows): their
     // broadcasts then build without a file-scan job each — three fewer
     // fixed-cost jobs per stored probe (round-17 measurement); the CODES
     // table stays a parquet scan, it is the data
-    val centRows = graft.sources.TinyParquet.rows(spark, s"$path/centroids")
-    val cents = centRows.map(r => (r.int("cell"), r.doubles("centroid").toSeq))
+    val cents = IndexStore.table(spark, path, head, "centroids")
+      .map(r => (r.int("cell"), r.doubles("centroid").toSeq))
       .toDF("cell", "centroid")
-    val cbRows = graft.sources.TinyParquet.rows(spark, s"$path/codebooks")
+    val cbRows = IndexStore.table(spark, path, head, "codebooks")
     val cbDf = cbRows
       .map(r => (r.int("j"), r.int("code"), r.doubles("cent").toSeq, r.double("cn2")))
       .toDF("j", "code", "cent", "cn2") // (j, code, cent, cn2)
-    val codesDf = spark.read.parquet(s"$path/codes")
     // m from the stored schema (no job); sd from the stored sub-centroid
     // width, VALIDATED against the caller's dim — graft_dot truncates to
     // the shorter array, so an unchecked mismatch would return silently
     // wrong neighbours instead of failing
-    val m = codesDf.columns.count(_.startsWith("code_"))
+    val m = subSpaces(head)
     val sd = cbRows.head.doubles("cent").length
     require(m * sd == dim,
       s"stored index is m=$m × sd=$sd (dim ${m * sd}); caller passed dim=$dim")
     val qcells = IvfIndex.probeCells(queries, cents, nProbe)
       .select("query_id", "cell")
     val probed = qcells.select("cell").distinct().collect()
-      .map(_.getInt(0)).sorted.toSeq
+      .map(_.getInt(0)).toSeq
     val codeLong = Pq.meltCodes(
-      codesDf.where(col("cell").isin(probed: _*)), m, Seq("vec_id", "cell"))
+      IndexStore.read(spark, path, head, Some(probed)), m, Seq("vec_id", "cell"))
     val lut = Pq.lutFor(queries, cbDf, sd)
     val pairs = qcells.join(codeLong, Seq("cell"))
       .where(col("vec_id") =!= col("query_id"))
@@ -487,23 +417,21 @@ object IvfPq {
     * compressed), a broadcast of the metadata codebooks, one slice/dot
     * per (row, subspace), and a 16-row rollup — runs where the codes
     * live, output is metadata-sized. `increment` is the newest
-    * increment's vec_ids (the ingest layer knows them; the ledger only
+    * increment's vec_ids (the ingest layer knows them; the manifest only
     * records that an id was applied). Reconstruction error is computed
     * from the STORED codes, so the report doubles as an integrity check:
     * any stored code that is not the argmin of its subspace would show up
     * as an inflated cell mse vs the oracle's min-distance replay. */
   def indexHealth(spark: org.apache.spark.sql.SparkSession, path: String,
                   vecs: DataFrame, increment: DataFrame, dim: Int): DataFrame = {
-    val (fs, marker) = commitMarker(spark, path)
-    require(fs.exists(marker),
-      s"$path has no _index_commit marker: writeIndex/append did not complete (or is mid-mutation)")
+    val head = IndexStore.head(spark, path)
     import spark.implicits._
-    val codesDf = spark.read.parquet(s"$path/codes")
-    val m = codesDf.columns.count(_.startsWith("code_"))
+    val codesDf = IndexStore.read(spark, path, head)
+    val m = subSpaces(head)
     val sd = dim / m
     // metadata counts/tables from driver-side reads — no per-call jobs
-    val nCells = graft.sources.TinyParquet.rows(spark, s"$path/centroids").size
-    val cb = graft.sources.TinyParquet.rows(spark, s"$path/codebooks")
+    val nCells = IndexStore.table(spark, path, head, "centroids").size
+    val cb = IndexStore.table(spark, path, head, "codebooks")
       .map(r => (r.int("j"), r.int("code"), r.doubles("cent").toSeq))
       .toDF("j", "code", "cent")
     val dec = (c: org.apache.spark.sql.Column) =>
@@ -554,12 +482,13 @@ object IvfPq {
     * increments — the caller's raw table IS that set), PRESERVING the
     * stored geometry: nCells, m and the code count are derived from the
     * store's own metadata, never re-defaulted (a scheduler doesn't
-    * remember build parameters — review finding). The ledger's high-water
-    * mark is RE-RECORDED into the fresh history: the refit corpus already
-    * contains every increment through that mark, so a Structured-
-    * Streaming-replayed last batch stays the no-op it was — a bare reset
+    * remember build parameters — review finding). The head's applied
+    * increment id is CARRIED into the rebuilt version: the refit corpus
+    * already contains every increment through it, so a Structured-
+    * Streaming-replayed last batch stays the no-op it was — a fresh history
     * would re-append it onto rows the rebuild already indexed (the √2 ADC
-    * inflation the ledger exists to prevent). Decision inputs are the
+    * inflation the replay guard exists to prevent). Probes keep serving
+    * the drifted version until the rebuilt one commits. Decision inputs are the
     * 16-row health rollup — metadata, no second corpus scan beyond the one
     * indexHealth already does. */
   def refitIfDrifted(spark: org.apache.spark.sql.SparkSession, path: String,
@@ -581,14 +510,11 @@ object IvfPq {
     if (drifted) {
       // geometry from the stored index, not parameter defaults —
       // driver-side metadata reads (three Spark jobs here before round 17)
-      val nCells = graft.sources.TinyParquet.rows(spark, s"$path/centroids").size
-      val cbRows = graft.sources.TinyParquet.rows(spark, s"$path/codebooks")
-      val m = cbRows.map(_.int("j")).max + 1
-      val codes = cbRows.map(_.int("code")).max + 1
-      val appliedBefore = IndexLedger.applied(spark, path)
-      writeIndex(corpus, path, dim, nCells = nCells, m = m, codes = codes,
-        seed = seed, maxTrain = maxTrain)
-      if (appliedBefore >= 0L) IndexLedger.record(spark, path, appliedBefore)
+      val head = IndexStore.head(spark, path)
+      val nCells = IndexStore.table(spark, path, head, "centroids").size
+      val codes = IndexStore.table(spark, path, head, "codebooks").map(_.int("code")).max + 1
+      build(corpus, path, "IvfPq.refitIfDrifted", dim, nCells, subSpaces(head), codes,
+        seed, maxTrain, carryApplied = true)
     }
     drifted
   }

@@ -717,9 +717,9 @@ object LlmQueries {
       val e = corpusEmb(s, d)
       val q = e.where(col("vec_id") % 100 === 0)
         .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
-      // full serving path: PQ-coded cell-partitioned store, then a
-      // partition-pruned probe (IvfPqSpec asserts stored ≡ in-memory and
-      // the pruned scan); raw vectors touched only for the re-rank
+      // full serving path: PQ-coded per-cell store, then a probe that scans
+      // only the probed cells' files (IvfPqSpec asserts stored ≡ in-memory
+      // and the pruned scan); raw vectors touched only for the re-rank
       val path = s"${sys.props("java.io.tmpdir")}/graft-ivfpq-${graft.sqlx.PathTag.of(d)}"
       graft.ann.IvfPq.writeIndex(e, path, dim = 64)
       graft.ann.IvfPq.approxTopKStored(s, path, e, q, k = 10, dim = 64)
@@ -774,11 +774,11 @@ object LlmQueries {
   /** Streaming ANN index ingest — the production shape for a continuously
     * growing vector corpus, composing three proven pieces: the file
     * streaming source (arriving parquet = one micro-batch each),
-    * foreachBatch as the ingest driver, and the ledger-guarded
+    * foreachBatch as the ingest driver, and the replay-guarded
     * [[graft.ann.IvfPq.appendToIndex]] with `batchId + 1` as the increment
     * id — which makes the ingest exactly-once FOR FREE: Structured
-    * Streaming's replayed-last-batch delivery hits the IndexLedger
-    * high-water mark and is a no-op (IvfPqStreamSpec asserts the replay
+    * Streaming's replayed-last-batch delivery hits the head version's
+    * applied id and is a no-op (IvfPqStreamSpec asserts the replay
     * and the stream ≡ batch-append equivalence). The base index is
     * rebuilt each run (the stream mutates the store, like
     * stream_mv_refresh re-inits its view); the increment arrives as two
@@ -925,15 +925,15 @@ object LlmQueries {
   /** Index-level forget (graft.ann.IvfPq.deleteFromIndex): a takedown
     * request (vec_id % 10 = 3) is removed from the SERVING index without
     * touching the quantizer — affected cells located by a column-pruned
-    * semi-join over the stored codes, only those cell partitions
-    * rewritten, ledger-guarded exactly-once like the append path. The
+    * semi-join over the stored codes, only those cells rewritten
+    * copy-on-write, replay-guarded exactly-once like the append path. The
     * registered output is the probe over the post-delete store; the
     * oracle replays the FULL-corpus two-fit (the fitted quantizer keeps
     * its training history — FAISS remove_ids semantics) with the deleted
     * ids excluded from the ADC candidate set, so a delete that silently
     * left rows behind — or dropped a survivor — hash-mismatches.
-    * IvfPqForgetSpec pins the file-level contract (unaffected cells
-    * byte-identical, emptied cells leave the layout, replay no-op). */
+    * IvfPqForgetSpec pins the file-level contract (unaffected cells keep
+    * their files, emptied cells list none, replay no-op). */
   private val annForget = Q(
     (s, d) => {
       val e = corpusEmb(s, d)

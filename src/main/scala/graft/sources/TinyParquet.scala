@@ -160,8 +160,9 @@ object TinyParquet {
     * readable by BOTH [[rows]] and `spark.read.parquet`. A null value
     * omits the field (reads back as SQL NULL). The directory is replaced
     * atomically-enough for the callers' protocols: all of them publish
-    * through a staged dir + rename CAS or a commit marker, so this write
-    * itself never needs to be atomic. */
+    * through a staged dir + rename CAS, or write into a fresh directory
+    * that only a later CAS makes reachable, so this write itself never
+    * needs to be atomic. */
   def write(spark: SparkSession, dir: String,
             schema: Seq[(String, String)], rows: Seq[Seq[Any]]): Unit = {
     import org.apache.parquet.schema.{LogicalTypeAnnotation => LTA, Types => PT}

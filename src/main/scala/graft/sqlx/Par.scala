@@ -12,11 +12,9 @@ import scala.util.{Failure, Try}
   *
   * Failure contract (round-18, closing the round-17 advisory): EVERY task
   * is awaited to termination before the first failure rethrows. Rethrowing
-  * at the first failed Await — the old behavior — returned control (and,
-  * in the index writers, the store mutation lock) to the caller while
-  * sibling overwrite jobs were still in flight; a retrying writer could
-  * then race those zombies into the same directories, and a zombie landing
-  * after the retry's commit marker would corrupt a committed index. Do not
+  * at the first failed Await — the old behavior — returned control to the
+  * caller while sibling overwrite jobs were still in flight; a retrying
+  * writer could then race those zombies into the same directories. Do not
   * nest Par.run inside a Par.run task: the shared global pool could starve
   * on a small machine. */
 object Par {

@@ -56,7 +56,7 @@ object PlanDump {
       "retrieval_rrf" -> "rank-list fusion: full-outer join + per-query window over metadata-sized top-k lists",
       "stream_neardup" -> "batch half of the stream-detects/store-verifies split: candidate-restricted exact verify (the streaming stage ran before this plan)",
       "table_contracts" -> "per-table single-scan PK check: key-columns-only distinct shuffle",
-      "ann_ivf" -> "stored-index probe: partition-pruned cell scan + broadcast centroid probe",
+      "ann_ivf" -> "stored-index probe: probed cells' files only + broadcast centroid probe",
       "dedup_simhash" -> "codegen graft_simhash64 fingerprints + 16-bit band bucket self-join",
       "watermark_roundtrip" -> "versioned-store re-read: stale filter over the committed parquet state",
       "trades_filter_model" -> "fitted-GBT scoring as pure codegen CASE expressions (no MLlib transform UDF) + decimal-exact rollup",

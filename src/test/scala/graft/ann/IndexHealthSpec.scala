@@ -66,7 +66,7 @@ class IndexHealthSpec extends SparkSpec {
     val base = vecs(2000, seed = 7, shift = 0.0, idBase = 0L)
     val healthy = vecs(200, seed = 11, shift = 0.0, idBase = 100000L)
     val drifted = vecs(200, seed = 13, shift = 8.0, idBase = 200000L)
-    def codes(path: String) = spark.read.parquet(s"$path/codes")
+    def codes(path: String) = IndexStore.read(spark, path, IndexStore.head(spark, path))
       .collect().map(_.toSeq.map { case s: Seq[_] => s.toList; case v => v }).toSet
 
     val okPath = s"${sys.props("java.io.tmpdir")}/graft-refit-ok"
@@ -76,7 +76,7 @@ class IndexHealthSpec extends SparkSpec {
     assert(!IvfPq.refitIfDrifted(spark, okPath, base.unionByName(healthy),
       healthy.select("vec_id"), dim))
     assert(codes(okPath) == before, "a healthy store must not be rebuilt")
-    // the ledger still guards the ingest stream: the applied id stays a no-op
+    // the applied id still guards the ingest stream: its replay stays a no-op
     assert(!IvfPq.appendToIndex(spark, okPath, healthy, incrementId = 1L))
 
     val drPath = s"${sys.props("java.io.tmpdir")}/graft-refit-drift"
@@ -92,7 +92,7 @@ class IndexHealthSpec extends SparkSpec {
     // ...with the high-water mark CARRIED OVER: the refit corpus already
     // contains increment 1, so its streaming replay stays a no-op instead
     // of double-appending onto the rebuilt store
-    assert(IndexLedger.applied(spark, drPath) == 1L)
+    assert(IndexStore.head(spark, drPath).applied == 1L)
     assert(!IvfPq.appendToIndex(spark, drPath, drifted, incrementId = 1L))
     // and the refit codebooks now RESOLVE the drifted region: the
     // increment's relative reconstruction error drops sharply (a 9%

@@ -7,12 +7,16 @@ import org.apache.spark.sql.functions._
   * cell assignment is per-row against fixed centroids, appending an
   * increment to a base-built index must yield exactly the store — and
   * exactly the probe results — of rebuilding the assignment over
-  * base ∪ increment with the same quantizer. */
+  * base ∪ increment with the same quantizer. Stores are read through the
+  * committed reader (IndexStore), never raw directories. */
 class IvfIncrementalSpec extends SparkSpec {
   private val dir = sf("sf0.001")
 
   private def emb = graft.Tables.embeddings(spark, dir)
     .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+
+  private def stored(path: String) =
+    IndexStore.read(spark, path, IndexStore.head(spark, path))
 
   test("append ≡ rebuild-with-same-quantizer, for the store and the probe") {
     val base = emb.where(col("vec_id") % 10 =!= 7)
@@ -22,20 +26,23 @@ class IvfIncrementalSpec extends SparkSpec {
 
     IvfIndex.writeIndex(base, appended)
     assert(IvfIndex.appendToIndex(spark, appended, inc, incrementId = 1L))
-    // a replayed increment id must be a no-op (the ledger guard)
+    // a replayed increment id must be a no-op (the applied-id guard)
     assert(!IvfIndex.appendToIndex(spark, appended, inc, incrementId = 1L))
 
-    // rebuild: same base-fit centroids, one-shot assignment of the union
-    IvfIndex.writeIndex(base, rebuilt)
-    val cents = spark.read.parquet(s"$rebuilt/centroids")
-      .orderBy("cell").collect()
-      .map(r => r.getAs[Seq[Double]]("centroid").toArray)
+    // rebuild: the base-fit centroids, one-shot assignment of the union,
+    // published as its own store
+    val head = IndexStore.head(spark, appended)
+    val centRows = IndexStore.table(spark, appended, head, "centroids").sortBy(_.int("cell"))
+    val cents = centRows.map(_.doubles("centroid")).toArray
     val full = emb.select(col("vec_id"), col("emb"),
       graft.functions.NearestCell.nearest(spark, col("emb"), cents).as("cell"))
-    full.write.mode("overwrite").partitionBy("cell").parquet(s"$rebuilt/assigned")
+    IndexStore.build(spark, rebuilt, "spec rebuild") {
+      (full, Seq(("centroids", Seq("cell" -> "int", "centroid" -> "array<double>"),
+        centRows.map(r => Seq[Any](r.int("cell"), r.doubles("centroid"))))))
+    }
 
-    val a = spark.read.parquet(s"$appended/assigned").select("vec_id", "cell")
-    val b = spark.read.parquet(s"$rebuilt/assigned").select("vec_id", "cell")
+    val a = stored(appended).select("vec_id", "cell")
+    val b = stored(rebuilt).select("vec_id", "cell")
     assert(a.count() == emb.count(), "append must cover base + increment exactly once")
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
       "appended store must equal a rebuild with the same quantizer")
@@ -48,69 +55,38 @@ class IvfIncrementalSpec extends SparkSpec {
     assert(pa.count() > 0)
 
     // the increment genuinely landed in existing cells (no refit happened):
-    // centroid tables of both stores are identical
-    val ca = spark.read.parquet(s"$appended/centroids")
-    val cb = spark.read.parquet(s"$rebuilt/centroids")
-    assert(ca.exceptAll(cb).isEmpty && cb.exceptAll(ca).isEmpty)
+    // the append carried the build's centroid table forward by reference
+    assert(IndexStore.head(spark, appended).tables == head.tables)
 
-    // crash loudness: a store whose append died mid-mutation (commit
-    // marker gone) must REFUSE probes and further appends instead of
-    // silently serving — and double-appending — partial data
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(appended), spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$appended/_index_commit"), false)
+    // a store with no committed version refuses probes and appends
+    val empty = s"$tmp/never-built"
     intercept[IllegalArgumentException] {
-      IvfIndex.approxTopKStored(spark, appended, q, k = 10)
+      IvfIndex.approxTopKStored(spark, empty, q, k = 10)
     }
     intercept[IllegalArgumentException] {
-      IvfIndex.appendToIndex(spark, appended, inc, incrementId = 2L)
+      IvfIndex.appendToIndex(spark, empty, inc, incrementId = 2L)
     }
-    // a rebuild recovers the store
-    IvfIndex.writeIndex(base, appended)
-    assert(IvfIndex.approxTopKStored(spark, appended, q, k = 10).count() > 0)
   }
 
-  test("retry after a crash between ledger record and marker re-create self-heals " +
-    "(the ledger certifies the append landed completely)") {
+  test("retry after a crash before the commit applies the increment once") {
     val base = emb.where(col("vec_id") % 10 =!= 7)
     val inc = emb.where(col("vec_id") % 10 === 7)
-    val store = java.nio.file.Files.createTempDirectory("graft-ivf-heal-spec").toString
+    val store = java.nio.file.Files.createTempDirectory("graft-ivf-crash-spec").toString
     IvfIndex.writeIndex(base, store)
-    assert(IvfIndex.appendToIndex(spark, store, inc, incrementId = 1L))
     val q = emb.where(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
-    val before = IvfIndex.approxTopKStored(spark, store, q, k = 10).collect().toSet
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(store), spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(s"$store/_index_commit")
-    // the one benign crash window: data landed, ledger advanced (inc-1
-    // exists), only the marker re-create was lost
-    fs.delete(marker, false)
-    // the orchestrator's retry of increment 1: ledger ≥ id proves the
-    // append is complete, so the store self-heals instead of demanding a
-    // full rebuild — marker back, replay reported as the no-op it is
+    def probe() = IvfIndex.approxTopKStored(spark, store, q, k = 10).collect().toSet
+    val before = probe()
+    val head = IndexStore.head(spark, store)
+    // the increment's files land, then the writer dies at the commit CAS
+    graft.StoreFaults.crashAtCommit(IvfIndex.appendToIndex(spark, store, inc, incrementId = 1L))
+    assert(IndexStore.head(spark, store) == head, "the crash must not move the head")
+    assert(probe() == before, "the previous version must keep probing identically")
+    // the orchestrator's retry of increment 1 lands once; a replay is a no-op
+    assert(IvfIndex.appendToIndex(spark, store, inc, incrementId = 1L))
     assert(!IvfIndex.appendToIndex(spark, store, inc, incrementId = 1L))
-    assert(fs.exists(marker), "retry must recreate the commit marker")
-    assert(IvfIndex.approxTopKStored(spark, store, q, k = 10).collect().toSet == before)
-    // but a NEW increment id against a missing marker still refuses loudly:
-    // without the ledger advance the data may be half-written
-    fs.delete(marker, false)
-    intercept[IllegalArgumentException] {
-      IvfIndex.appendToIndex(spark, store, inc, incrementId = 2L)
-    }
-    // same protocol on the composed IVF+PQ store
-    val pqStore = java.nio.file.Files.createTempDirectory("graft-ivfpq-heal-spec").toString
-    IvfPq.writeIndex(base, pqStore, dim = 64)
-    assert(IvfPq.appendToIndex(spark, pqStore, inc, incrementId = 1L))
-    val pqFs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(pqStore), spark.sparkContext.hadoopConfiguration)
-    val pqMarker = new org.apache.hadoop.fs.Path(s"$pqStore/_index_commit")
-    pqFs.delete(pqMarker, false)
-    assert(!IvfPq.appendToIndex(spark, pqStore, inc, incrementId = 1L))
-    assert(pqFs.exists(pqMarker), "IvfPq retry must recreate the commit marker")
-    pqFs.delete(pqMarker, false)
-    intercept[IllegalArgumentException] {
-      IvfPq.appendToIndex(spark, pqStore, inc, incrementId = 2L)
-    }
+    val ids = stored(store).select("vec_id").collect().map(_.getLong(0)).toSeq
+    assert(ids.size == emb.count() && ids.distinct.size == ids.size,
+      "every vector exactly once after crash + retry")
   }
 }

@@ -4,13 +4,15 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** The index-delete contract (IvfPq.deleteFromIndex), at the file level
-  * where the oracle can't see:
+  * where the oracle can't see — read through the committed manifest
+  * (IndexStore), never raw directories:
   *   - delete ≡ writeIndex(full) with the deleted rows filtered — same
   *     codes, same cells, same quantizer (raw PQ codes are per-row);
-  *   - UNAFFECTED cell partitions are byte-identical (O(affected) IO);
-  *   - a cell whose last vector is deleted leaves the partition layout
-  *     and probing it just yields nothing;
-  *   - a replayed delete (same incrementId) is a ledger no-op;
+  *   - UNAFFECTED cells keep their exact files (copy-on-write per cell:
+  *     O(affected) IO);
+  *   - a cell whose last vector is deleted lists no files and probing it
+  *     just yields nothing;
+  *   - a replayed delete (same incrementId) is a no-op;
   *   - the probe never returns a deleted id.
   */
 class IvfPqForgetSpec extends SparkSpec {
@@ -21,75 +23,65 @@ class IvfPqForgetSpec extends SparkSpec {
   private lazy val q = e.where(col("vec_id") % 100 === 0)
     .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
 
-  private def fs = new org.apache.hadoop.fs.Path("/tmp")
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def cellFiles(path: String): Map[Int, Seq[String]] =
+    IndexStore.head(spark, path).files
 
-  private def cellFiles(path: String): Map[String, Set[String]] = {
-    val codes = new org.apache.hadoop.fs.Path(s"$path/codes")
-    fs.listStatus(codes).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-      .map { st =>
-        st.getPath.getName -> fs.listStatus(st.getPath)
-          .map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}").toSet
-      }.toMap
-  }
+  private def codes(path: String) =
+    IndexStore.read(spark, path, IndexStore.head(spark, path))
 
-  private def codeRows(spark: org.apache.spark.sql.SparkSession, path: String): Set[String] =
-    spark.read.option("basePath", s"$path/codes").parquet(s"$path/codes")
-      .collect().map(_.mkString("|")).toSet
+  private def codeRows(path: String): Set[String] =
+    codes(path).collect().map(_.mkString("|")).toSet
 
   test("delete rewrites only the affected cells and equals a filtered rebuild") {
     val path = s"${sys.props("java.io.tmpdir")}/graft-ivfpq-forget-spec"
     IvfPq.writeIndex(e, path, dim = 64)
     val before = cellFiles(path)
     // the request: a handful of ids confined to FEW cells — materialized
-    // BEFORE the delete (a lazy plan over the store would re-probe it
-    // mid-mutation, with the commit marker legitimately down)
+    // BEFORE the delete, so the request is a fixed id set
     val victimIds = IvfPq.approxTopKStored(spark, path, e, q.limit(1), k = 5, dim = 64)
       .select("vec_id").distinct().as[Long].collect().toSet
     val victims = victimIds.toSeq.sorted.toDF("vec_id")
     assert(victimIds.nonEmpty)
-    val affectedCells = spark.read.option("basePath", s"$path/codes")
-      .parquet(s"$path/codes")
+    val affectedCells = codes(path)
       .where(col("vec_id").isin(victimIds.toSeq: _*))
       .select("cell").distinct().as[Int].collect().toSet
     assert(IvfPq.deleteFromIndex(spark, path, victims, incrementId = 1L))
     val after = cellFiles(path)
     affectedCells.foreach { c =>
-      assert(after.get(s"cell=$c") != before.get(s"cell=$c"),
-        s"affected cell $c must be rewritten")
+      assert(after.get(c) != before.get(c), s"affected cell $c must be rewritten")
     }
-    (before.keySet -- affectedCells.map(c => s"cell=$c")).foreach { dir =>
-      assert(after(dir) == before(dir), s"unaffected $dir was rewritten")
+    (before.keySet -- affectedCells).foreach { c =>
+      assert(after(c) == before(c), s"unaffected cell $c was rewritten")
     }
     // delete ≡ rebuild-on-survivors with the same (full-history) quantizer:
     // code rows are per-row functions of the stored metadata
     val ref = s"${sys.props("java.io.tmpdir")}/graft-ivfpq-forget-ref"
     IvfPq.writeIndex(e, ref, dim = 64)
-    val expect = codeRows(spark, ref)
+    val expect = codeRows(ref)
       .filterNot(r => victimIds.exists(id => r.startsWith(s"$id|")))
-    assert(codeRows(spark, path) == expect)
+    assert(codeRows(path) == expect)
     // the probe never returns a deleted id
     val got = IvfPq.approxTopKStored(spark, path, e, q, k = 10, dim = 64)
       .select("vec_id").as[Long].collect().toSet
     assert((got intersect victimIds).isEmpty)
-    // a replayed delete is a ledger no-op (false), files untouched
+    // a replayed delete is a no-op (false): no new version, files untouched
+    val head = IndexStore.head(spark, path)
     assert(!IvfPq.deleteFromIndex(spark, path, victims, incrementId = 1L))
-    assert(cellFiles(path) == after)
+    assert(IndexStore.head(spark, path) == head)
   }
 
   test("deleting a cell's last vector drops the partition; probes keep working") {
     val path = s"${sys.props("java.io.tmpdir")}/graft-ivfpq-forget-empty"
     IvfPq.writeIndex(e, path, dim = 64, nCells = 4)
-    val codes = spark.read.option("basePath", s"$path/codes").parquet(s"$path/codes")
-    val cellCounts = codes.groupBy("cell").count().as[(Int, Long)].collect().toMap
+    val stored = codes(path)
+    val cellCounts = stored.groupBy("cell").count().as[(Int, Long)].collect().toMap
     val victimCell = cellCounts.minBy(_._2)._1
-    val victimIdsSeq = codes.where(col("cell") === victimCell)
+    val victimIdsSeq = stored.where(col("cell") === victimCell)
       .select("vec_id").as[Long].collect().toSeq.sorted
     val victims = victimIdsSeq.toDF("vec_id")
     assert(IvfPq.deleteFromIndex(spark, path, victims, incrementId = 1L))
-    assert(!cellFiles(path).contains(s"cell=$victimCell"),
-      "an emptied cell must leave the partition layout")
+    assert(!cellFiles(path).contains(victimCell),
+      "an emptied cell must hold no files")
     // probing with every cell reachable still works and returns no victim
     val victimIds = victimIdsSeq.toSet
     val got = IvfPq.approxTopKStored(spark, path, e, q, k = 10, dim = 64, nProbe = 4)
@@ -109,9 +101,36 @@ class IvfPqForgetSpec extends SparkSpec {
       spark, path, victims.toSeq.toDF("vec_id"), incrementId = 1L))
     assert(IvfPq.storedIds(spark, path).select("vec_id").as[Long].collect().toSet ==
       all -- victims)
-    // a store mid-mutation (no commit marker) cannot witness anything
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/_index_commit"), false)
-    val ex = intercept[IllegalArgumentException] { IvfPq.storedIds(spark, path) }
-    assert(ex.getMessage.contains("_index_commit"))
+    // a store with no committed version cannot witness anything
+    val never = s"${sys.props("java.io.tmpdir")}/graft-ivfpq-storedids-none"
+    val ex = intercept[IllegalArgumentException] { IvfPq.storedIds(spark, never) }
+    assert(ex.getMessage.contains("no committed index version"))
+  }
+
+  test("forgotten codes leave the disk once retention and the orphan age pass") {
+    val path = s"${sys.props("java.io.tmpdir")}/graft-ivfpq-forget-erasure"
+    new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(new org.apache.hadoop.fs.Path(path), true)
+    IvfPq.writeIndex(e, path, dim = 64)
+    val victims = e.where(col("vec_id") % 7 === 3).select("vec_id")
+    val victimIds = victims.as[Long].collect().toSet
+    // the bytes on disk, not the served view: every data file under root
+    def onDisk(): Set[Long] = spark.read.parquet(s"$path/w=*/cell=*/*.parquet")
+      .select("vec_id").as[Long].collect().toSet
+    def quietCommit(id: Long) = assert(IvfPq.deleteFromIndex(
+      spark, path, e.where(col("vec_id") === -1L).select("vec_id"), incrementId = id))
+    assert(IvfPq.deleteFromIndex(spark, path, victims, incrementId = 1L))
+    assert((IvfPq.storedIds(spark, path).select("vec_id").as[Long].collect().toSet
+      intersect victimIds).isEmpty, "logical erasure is immediate")
+    assert(victimIds.subsetOf(onDisk()), "the retained previous version still lists the old files")
+    // the previous version leaves retention, but its files are younger
+    // than the orphan age: still on disk
+    quietCommit(2L)
+    assert(victimIds.subsetOf(onDisk()))
+    val prevAge = graft.sources.TableMaintenance.OrphanAgeMs
+    graft.sources.TableMaintenance.OrphanAgeMs = 0L
+    try quietCommit(3L) finally graft.sources.TableMaintenance.OrphanAgeMs = prevAge
+    assert((onDisk() intersect victimIds).isEmpty, "physical erasure after retention + age")
+    assert(onDisk() == e.select("vec_id").as[Long].collect().toSet -- victimIds)
   }
 }

@@ -4,15 +4,15 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Differential contract for the two LIVE mutations on one store —
-  * appendToIndex (ingest) RACING deleteFromIndex (forget). The cascade
-  * specs test each against maintain/retract but not against each other's
-  * mutation lock (round-14 verdict item 8):
-  *   - mutual exclusion: whichever mutation holds `_mutating`, the OTHER
-  *     is rejected loudly (ConcurrentCommitException) before any file
-  *     lands — append-under-forget and forget-under-append both;
-  *   - the rejected mutation leaves the store bit-identical (cell files
-  *     untouched, ledger unadvanced) and succeeds verbatim on retry once
-  *     the lock clears;
+  * appendToIndex (ingest) and deleteFromIndex (forget) — against each
+  * other and against concurrent readers:
+  *   - a probe while a mutation is in flight (held mid-data-job by a
+  *     gate) serves the head it resolved — the pre-mutation answer, never
+  *     a refusal — and the next probe sees the committed mutation;
+  *   - an append racing a forget from the same head: exactly one
+  *     publishes, the loser fails loudly (ConcurrentCommitException),
+  *     leaves the store as the winner committed it, and its retry from
+  *     the new head lands;
   *   - order-independence of DISJOINT mutations: append(A) ∘ forget(B) ≡
   *     forget(B) ∘ append(A) — same code rows, same probe results;
   *   - forget of JUST-appended ids removes them from the probe stream
@@ -21,6 +21,7 @@ import org.apache.spark.sql.functions._
   */
 class IvfPqMutationRaceSpec extends SparkSpec {
   import spark.implicits._
+  import graft.StoreFaults.{await, background, open, pass, reset}
 
   private lazy val e = graft.Tables.embeddings(spark, sf("sf0.01"))
     .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
@@ -30,18 +31,14 @@ class IvfPqMutationRaceSpec extends SparkSpec {
   private def fs = new org.apache.hadoop.fs.Path("/tmp")
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def cellFiles(path: String): Map[String, Set[String]] = {
-    val codes = new org.apache.hadoop.fs.Path(s"$path/codes")
-    fs.listStatus(codes).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-      .map { st =>
-        st.getPath.getName -> fs.listStatus(st.getPath)
-          .map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}").toSet
-      }.toMap
+  private def fresh(name: String): String = {
+    val path = s"${sys.props("java.io.tmpdir")}/graft-ivfpq-race-$name"
+    fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    path
   }
 
   private def codeRows(path: String): Set[String] =
-    spark.read.option("basePath", s"$path/codes").parquet(s"$path/codes")
+    IndexStore.read(spark, path, IndexStore.head(spark, path))
       .collect().map(_.mkString("|")).toSet
 
   private def probeRows(path: String): Seq[String] =
@@ -52,37 +49,89 @@ class IvfPqMutationRaceSpec extends SparkSpec {
   private val incr = () => e.where(col("vec_id") % 10 === 7)
   private val forgetIds = () => e.where(col("vec_id") % 20 === 7).select("vec_id")
 
-  test("each mutation is rejected loudly while the other holds the lock, retry succeeds") {
-    val path = s"${sys.props("java.io.tmpdir")}/graft-ivfpq-race-excl"
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  /** `df` whose evaluation opens gate `arrive`, then waits for `proceed`. */
+  private def held(df: org.apache.spark.sql.DataFrame, arrive: String, proceed: String) =
+    df.coalesce(1).withColumn("vec_id", pass(col("vec_id"), arrive, proceed))
+
+  test("a probe during an in-flight append serves the pre-append version; the next sees it") {
+    val path = fresh("read-append")
     IvfPq.writeIndex(base(), path, dim = 64)
-    val before = (cellFiles(path), IndexLedger.applied(spark, path))
+    val before = probeRows(path)
+    val ref = fresh("read-append-ref")
+    IvfPq.writeIndex(base(), ref, dim = 64)
+    assert(IvfPq.appendToIndex(spark, ref, incr(), incrementId = 1L))
 
-    // a rival (here: the spec) holds the mutation lock mid-append
-    IndexLedger.acquireMutationLock(spark, path, "spec-rival")
+    reset("append-running", "append-go")
+    val append = background(IvfPq.appendToIndex(spark, path,
+      held(incr(), "append-running", "append-go"), incrementId = 1L))
+    await("append-running") // the append resolved v=1 and is writing its cells
     try {
-      val exA = intercept[graft.sources.ConcurrentCommitException](
-        IvfPq.appendToIndex(spark, path, incr(), incrementId = 1L))
-      assert(exA.getMessage.contains("_mutating"))
-      val exF = intercept[graft.sources.ConcurrentCommitException](
-        IvfPq.deleteFromIndex(spark, path, forgetIds(), incrementId = 1L))
-      assert(exF.getMessage.contains("_mutating"))
-    } finally IndexLedger.releaseMutationLock(spark, path)
+      assert(probeRows(path) == before, "a probe mid-append must serve the head it resolved")
+      assert(IndexStore.head(spark, path).number == 1L)
+    } finally open("append-go")
+    assert(append() == Right(true))
+    assert(probeRows(path) == probeRows(ref), "the next probe must see the committed append")
+  }
 
-    // the rejected mutations left the store byte-identical and the ledger
-    // unadvanced...
-    assert((cellFiles(path), IndexLedger.applied(spark, path)) == before,
-      "a rejected mutation must not touch the store")
-    // ...and the SAME calls succeed verbatim once the lock clears
-    assert(IvfPq.appendToIndex(spark, path, incr(), incrementId = 1L))
-    assert(IvfPq.deleteFromIndex(spark, path, forgetIds(), incrementId = 2L))
-    assert(IndexLedger.applied(spark, path) == 2L)
+  test("a probe during an in-flight forget serves the pre-forget version; the next sees it") {
+    val path = fresh("read-forget")
+    IvfPq.writeIndex(e, path, dim = 64)
+    val before = probeRows(path)
+    val ref = fresh("read-forget-ref")
+    IvfPq.writeIndex(e, ref, dim = 64)
+    assert(IvfPq.deleteFromIndex(spark, ref, forgetIds(), incrementId = 1L))
+    assert(probeRows(ref) != before, "fixture: the forget must change the probe")
+
+    reset("forget-running", "forget-go")
+    val forget = background(IvfPq.deleteFromIndex(spark, path,
+      held(forgetIds(), "forget-running", "forget-go"), incrementId = 1L))
+    await("forget-running") // the forget resolved v=1 and is locating cells
+    try {
+      assert(probeRows(path) == before, "a probe mid-forget must serve the head it resolved")
+      assert(IndexStore.head(spark, path).number == 1L)
+    } finally open("forget-go")
+    assert(forget() == Right(true))
+    assert(probeRows(path) == probeRows(ref), "the next probe must see the committed forget")
+  }
+
+  test("append racing a forget: one publishes, the loser retries") {
+    val path = fresh("excl")
+    IvfPq.writeIndex(base(), path, dim = 64)
+    val gone = e.where(col("vec_id") % 20 === 4).select("vec_id")
+    // each mutation's data job waits until BOTH resolved the head (v=1),
+    // so both CAS v=2 and exactly one can win
+    reset("race-append", "race-forget")
+    val append = background(IvfPq.appendToIndex(spark, path,
+      held(incr(), "race-append", "race-forget"), incrementId = 1L))
+    val forget = background(IvfPq.deleteFromIndex(spark, path,
+      held(gone, "race-forget", "race-append"), incrementId = 2L))
+    val got = Seq(append(), forget())
+    assert(got.count(_ == Right(true)) == 1, s"exactly one mutation publishes: $got")
+    got.collect { case Left(x) => x }.foreach { x =>
+      assert(x.isInstanceOf[graft.sources.ConcurrentCommitException], s"loser not loud: $x")
+    }
+    // the store is exactly the winner's commit: the loser left nothing
+    val head = IndexStore.head(spark, path)
+    assert(head.number == 2L)
+    assert(IndexStore.liveRefs(spark, path).map(_.takeWhile(_ != '/')) ==
+      fs.listStatus(new org.apache.hadoop.fs.Path(path)).map(_.getPath.getName)
+        .filter(_.startsWith("w=")).toSet, "the loser must delete its write dir")
+    val ids = IvfPq.storedIds(spark, path).select("vec_id").as[Long].collect().toSet
+    val gonIds = gone.as[Long].collect().toSet
+    val incIds = incr().select("vec_id").as[Long].collect().toSet
+    if (got.head.isRight) assert(incIds.subsetOf(ids) && gonIds.subsetOf(ids))
+    else assert(ids.intersect(gonIds).isEmpty && ids.intersect(incIds).isEmpty)
+    // the loser re-reads the head and retries as the next increment
+    if (got.head.isRight) assert(IvfPq.deleteFromIndex(spark, path, gone, incrementId = 3L))
+    else assert(IvfPq.appendToIndex(spark, path, incr(), incrementId = 3L))
+    val all = IvfPq.storedIds(spark, path).select("vec_id").as[Long].collect().toSeq
+    assert(all.distinct.size == all.size)
+    assert(all.toSet == e.select("vec_id").as[Long].collect().toSet -- gonIds)
   }
 
   test("disjoint append and forget commute: same code rows, same probe") {
-    val pAF = s"${sys.props("java.io.tmpdir")}/graft-ivfpq-race-af"
-    val pFA = s"${sys.props("java.io.tmpdir")}/graft-ivfpq-race-fa"
-    Seq(pAF, pFA).foreach(p => fs.delete(new org.apache.hadoop.fs.Path(p), true))
+    val pAF = fresh("af")
+    val pFA = fresh("fa")
     // forgotten ids (vec_id % 20 = 7 with vec_id % 10 != 7 -> none; use
     // base-resident ids disjoint from the increment instead)
     val gone = e.where(col("vec_id") % 20 === 4).select("vec_id")
@@ -102,8 +151,7 @@ class IvfPqMutationRaceSpec extends SparkSpec {
   }
 
   test("forget of just-appended ids removes them from the probe stream") {
-    val path = s"${sys.props("java.io.tmpdir")}/graft-ivfpq-race-takedown"
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    val path = fresh("takedown")
     IvfPq.writeIndex(base(), path, dim = 64)
     assert(IvfPq.appendToIndex(spark, path, incr(), incrementId = 1L))
     val appended = incr().select("vec_id").as[Long].collect().toSet
@@ -117,8 +165,7 @@ class IvfPqMutationRaceSpec extends SparkSpec {
       s"forgotten appended ids leaked into the probe: ${probed.intersect(takedown)}")
     // survivors of the increment are still probe-visible somewhere: the
     // store retains them (codes), even if no query ranks them top-k
-    val stored = spark.read.option("basePath", s"$path/codes").parquet(s"$path/codes")
-      .select("vec_id").as[Long].collect().toSet
+    val stored = IvfPq.storedIds(spark, path).select("vec_id").as[Long].collect().toSet
     assert((appended -- takedown).subsetOf(stored))
   }
 }

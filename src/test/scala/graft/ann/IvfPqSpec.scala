@@ -50,18 +50,21 @@ class IvfPqSpec extends SparkSpec {
     assert(stored.count() > 0)
     assert(stored.exceptAll(mem).isEmpty && mem.exceptAll(stored).isEmpty,
       "stored probe diverges from the in-memory path")
-    // partition pruning: one query probing 2 of 8 cells reads 2 partitions
+    // pruning: one query probing 2 of 8 cells opens exactly the files the
+    // head lists for those 2 cells
     val one = q.orderBy("query_id").limit(1)
     val probe = IvfPq.approxTopKStored(spark, path, e, one, k = 5, dim = 64, nProbe = 2)
     probe.collect()
     val scans = graft.PlanCheck.allNodes(probe.queryExecution.executedPlan)
-      .collect { case f: FileSourceScanExec if f.relation.location.rootPaths
-        .exists(_.toString.contains("graft-ivfpq-spec/codes")) => f }
+      .collect { case f: FileSourceScanExec
+        if f.relation.location.inputFiles.exists(_.contains("graft-ivfpq-spec/w=")) => f }
     assert(scans.nonEmpty, "no file scan over the stored code table found")
-    assert(scans.head.partitionFilters.nonEmpty, "no partition filter pushed to the code scan")
-    val partsRead = scans.head.metrics.get("numPartitions").map(_.value)
-    assert(partsRead.contains(2L),
-      s"probe read $partsRead partitions, expected exactly the 2 probed cells")
+    val read = scans.head.relation.location.inputFiles
+      .map(f => f.substring(f.indexOf("/w=") + 1)).toSet
+    val byCell = IndexStore.head(spark, path).files.filter(_._2.exists(read))
+    assert(byCell.size == 2, s"probe read cells ${byCell.keySet}, expected the 2 probed cells")
+    assert(read == byCell.values.flatten.toSet)
+    assert(scans.head.metrics.get("numPartitions").map(_.value).contains(2L))
   }
 
   test("append-to-stored-index == bulk indexing the union with the same quantizer") {
@@ -72,7 +75,7 @@ class IvfPqSpec extends SparkSpec {
     assert(IvfPq.appendToIndex(spark, path, inc, incrementId = 1L))
     // replay of the same increment id is a no-op: no doubled vec_ids/ADC partials
     assert(!IvfPq.appendToIndex(spark, path, inc, incrementId = 1L))
-    val stored = spark.read.parquet(s"$path/codes")
+    val stored = IvfPq.storedIds(spark, path)
     assert(stored.count() == e.count(), "append must add every increment row exactly once")
     assert(stored.select("vec_id").distinct().count() == e.count())
     // the appended rows carry exactly the (cell, codes) the bulk path

@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * Pins the two contracts the registered query's oracle can't see
   * directly: the streamed store converges to the single-batch append
   * row-for-row, and a replayed batch id (Structured Streaming's
-  * at-least-once delivery into foreachBatch) is a ledger-guarded no-op. */
+  * at-least-once delivery into foreachBatch) is a no-op guarded by the
+  * head version's applied id. */
 class IvfPqStreamSpec extends SparkSpec {
   import spark.implicits._
 
@@ -16,7 +17,7 @@ class IvfPqStreamSpec extends SparkSpec {
     .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
 
   private def codesOf(path: String): Set[Seq[Any]] =
-    spark.read.parquet(s"$path/codes").collect()
+    IndexStore.read(spark, path, IndexStore.head(spark, path)).collect()
       .map(r => r.toSeq.map {
         case s: Seq[_] => s.toList
         case v => v
@@ -56,7 +57,7 @@ class IvfPqStreamSpec extends SparkSpec {
     assert(codesOf(path) == codesOf(refPath),
       "streamed store diverged from the single-append store")
 
-    // exactly-once: replaying the last delivered batch must be a ledger no-op
+    // exactly-once: replaying the last delivered batch must be a no-op
     val lastId = applied.map(_._1).max
     val before = codesOf(path)
     assert(!IvfPq.appendToIndex(spark, path, inc, incrementId = lastId),

@@ -5,12 +5,11 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 /** Stored IVF index (IvfIndex.writeIndex / approxTopKStored): the probe must
-  * read ONLY the probed cells' partition directories — the storage-layout
-  * pruning the operator's header promises for 100 TB — and return exactly
-  * what the in-memory path returns (same seed ⇒ same quantizer ⇒ same
-  * answer, so the stored path is a pure physical rewrite). */
+  * read ONLY the probed cells' files — the storage-layout pruning the
+  * operator's header promises for 100 TB — and return exactly what the
+  * in-memory path returns (same seed ⇒ same quantizer ⇒ same answer, so
+  * the stored path is a pure physical rewrite). */
 class IvfStoreSpec extends SparkSpec {
-  import spark.implicits._
 
   private lazy val e = graft.Tables.embeddings(spark, sf("sf0.001"))
     .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
@@ -34,14 +33,17 @@ class IvfStoreSpec extends SparkSpec {
     val one = q.orderBy("query_id").limit(1)
     val probe = IvfIndex.approxTopKStored(spark, path, one, k = 5, nProbe = 2)
     probe.collect()
+    val head = IndexStore.head(spark, path)
     val scans = graft.PlanCheck.allNodes(probe.queryExecution.executedPlan)
-      .collect { case f: FileSourceScanExec if f.relation.location.rootPaths
-        .exists(_.toString.contains("graft-ivf-spec/assigned")) => f }
+      .collect { case f: FileSourceScanExec
+        if f.relation.location.inputFiles.exists(_.contains("graft-ivf-spec/w=")) => f }
     assert(scans.nonEmpty, "no file scan over the stored index found")
-    val scan = scans.head
-    assert(scan.partitionFilters.nonEmpty, "no partition filter pushed to the index scan")
-    val partsRead = scan.metrics.get("numPartitions").map(_.value)
-    assert(partsRead.contains(2L),
-      s"probe read $partsRead partitions, expected exactly the 2 probed cells")
+    // the scan opens exactly the files the head lists for two cells
+    val read = scans.head.relation.location.inputFiles
+      .map(f => f.substring(f.indexOf("/w=") + 1)).toSet
+    val byCell = head.files.filter(_._2.exists(read))
+    assert(byCell.size == 2, s"probe read cells ${byCell.keySet}, expected the 2 probed cells")
+    assert(read == byCell.values.flatten.toSet)
+    assert(scans.head.metrics.get("numPartitions").map(_.value).contains(2L))
   }
 }

@@ -222,61 +222,84 @@ class ConcurrencySpec extends SparkSpec {
     assert(TableMaintenance.pendingTombstones(spark, root).isEmpty)
   }
 
-  test("ANN index store: crash recovery is loud where it must be, self-healing where the ledger certifies") {
-    import graft.ann.{IndexLedger, IvfPq}
+  /** Every `w=` write dir under an index root is listed by a retained
+    * version: no loser's or crashed writer's files are left behind. */
+  private def unreferencedWriteDirs(root: String): Set[String] = {
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
+    val onDisk = fs.listStatus(new org.apache.hadoop.fs.Path(root)).toSeq
+      .map(_.getPath.getName).filter(_.startsWith("w=")).toSet
+    onDisk -- graft.ann.IndexStore.liveRefs(spark, root).map(_.takeWhile(_ != '/'))
+  }
+
+  test("ANN index store: a crash before the CAS leaves the head serving") {
+    import graft.ann.{IndexStore, IvfPq}
     val root = tmp("ivfpq-crash"); clear(root)
     val e = graft.Tables.embeddings(spark, sf("sf0.001"))
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-    IvfPq.writeIndex(e.where(col("vec_id") % 10 =!= 7), root, dim = 64, nCells = 8)
-    assert(IvfPq.appendToIndex(spark, root, e.where(col("vec_id") % 20 === 7), 1L))
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(s"$root/_index_commit")
-    val lock = new org.apache.hadoop.fs.Path(s"$root/_mutating")
+    val q = e.where(col("vec_id") % 100 === 0)
+      .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
+    val base = e.where(col("vec_id") % 10 =!= 7)
+    val inc = e.where(col("vec_id") % 10 === 7)
+    def probe() = IvfPq.approxTopKStored(spark, root, e, q, k = 10, dim = 64)
+      .collect().map(_.mkString("|")).toSet
+    IvfPq.writeIndex(base, root, dim = 64, nCells = 8)
+    val before = probe()
+    val head = IndexStore.head(spark, root)
 
-    // kill -9 between record and marker re-create: lock left on disk,
-    // marker down, ledger head == replayed id. A STALE lock certifies the
-    // holder's death -> the replay self-heals (marker restored, no-op).
-    fs.delete(marker, false); fs.create(lock, true).close()
-    val prevStale = IndexLedger.LockStaleMs
-    IndexLedger.LockStaleMs = 0L
-    try assert(!IvfPq.appendToIndex(spark, root, e.where(col("vec_id") % 20 === 7), 1L))
-    finally IndexLedger.LockStaleMs = prevStale
-    assert(fs.exists(marker), "ledger-certified replay must restore the marker")
-    assert(!fs.exists(lock), "the certified-dead holder's lock must be broken")
+    // the increment's files land, then the writer dies at the commit
+    graft.StoreFaults.crashAtCommit(IvfPq.appendToIndex(spark, root, inc, 1L))
+    assert(IndexStore.head(spark, root) == head, "a crashed mutation must not move the head")
+    assert(probe() == before, "the previous version must keep probing identically")
+    assert(unreferencedWriteDirs(root).nonEmpty, "the crash left its unreferenced write dir")
 
-    // crash MID-DATA of a later append (marker down, no lock, ledger NOT
-    // advanced past it): replaying an OLDER id must fail loudly, never
-    // report a silent 'already applied' on a half-written store.
-    fs.delete(marker, false)
-    val ex = intercept[IllegalArgumentException] {
-      IvfPq.appendToIndex(spark, root, e.where(col("vec_id") % 20 === 17), 0L)
-    }
-    assert(ex.getMessage.contains("crashed half-written"))
-    fs.create(marker, true).close() // restore for any later suite
+    // the orchestrator's retry applies the increment exactly once
+    assert(IvfPq.appendToIndex(spark, root, inc, 1L))
+    assert(!IvfPq.appendToIndex(spark, root, inc, 1L), "a replay after the retry is a no-op")
+    val ids = IvfPq.storedIds(spark, root).select("vec_id").as[Long].collect().toSeq
+    assert(ids.sorted == e.select("vec_id").as[Long].collect().toSeq.sorted,
+      "every vector exactly once after crash + retry")
+
+    // age-gated vacuum: the crashed writer's dir outlives any live
+    // writer's staging window and goes with the next commit
+    val prevAge = TableMaintenance.OrphanAgeMs
+    TableMaintenance.OrphanAgeMs = 0L
+    try assert(IvfPq.deleteFromIndex(spark, root, e.where(col("vec_id") === -1L).select("vec_id"), 2L))
+    finally TableMaintenance.OrphanAgeMs = prevAge
+    assert(unreferencedWriteDirs(root).isEmpty, "vacuum left an unreferenced write dir")
   }
 
-  test("ANN index store: concurrent mutators are mutually excluded, store never interleaves") {
+  test("ANN index store: racing appends, one publishes, the loser retries") {
+    import graft.ann.{IndexStore, IvfPq}
+    import graft.StoreFaults.{background, pass, reset}
     val root = tmp("ivfpq"); clear(root)
     val e = graft.Tables.embeddings(spark, sf("sf0.001"))
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
     val base = e.where(col("vec_id") % 10 =!= 7)
-    val incA = e.where(col("vec_id") % 20 === 7)
-    val incB = e.where(col("vec_id") % 20 === 17)
-    graft.ann.IvfPq.writeIndex(base, root, dim = 64, nCells = 8)
-    val got = race(Seq(
-      () => graft.ann.IvfPq.appendToIndex(spark, root, incA, incrementId = 1L),
-      () => graft.ann.IvfPq.appendToIndex(spark, root, incB, incrementId = 2L)))
-    got.collect { case Left(e) => e }.foreach(e => assert(isLoud(e), s"loser not loud: $e"))
-    assert(got.exists(_.isRight), "both appenders failed")
-    // whatever landed, the store is marked committed and has no duplicates
-    val ids = spark.read.parquet(s"$root/codes").select("vec_id")
-      .as[Long].collect().toSeq
-    assert(ids.distinct.size == ids.size, "interleaved append duplicated rows")
-    // the winner set is exactly base + successful increments
-    val want = (Seq(base) ++ Seq(incA, incB).zip(got).collect { case (i, Right(true)) => i })
-      .map(_.select("vec_id").as[Long].collect().toSet).reduce(_ union _)
-    assert(ids.toSet == want)
+    // each appender's data job waits until BOTH have resolved the head
+    // (v=1), so both CAS v=2 and exactly one can win
+    reset("race-a", "race-b")
+    val incA = e.where(col("vec_id") % 20 === 7).coalesce(1)
+      .withColumn("vec_id", pass(col("vec_id"), "race-a", "race-b"))
+    val incB = e.where(col("vec_id") % 20 === 17).coalesce(1)
+      .withColumn("vec_id", pass(col("vec_id"), "race-b", "race-a"))
+    IvfPq.writeIndex(base, root, dim = 64, nCells = 8)
+    val a = background(IvfPq.appendToIndex(spark, root, incA, incrementId = 1L))
+    val b = background(IvfPq.appendToIndex(spark, root, incB, incrementId = 2L))
+    val got = Seq(a(), b())
+    assert(got.count(_ == Right(true)) == 1, s"exactly one appender publishes: $got")
+    got.collect { case Left(x) => x }.foreach(x => assert(isLoud(x), s"loser not loud: $x"))
+    assert(IndexStore.head(spark, root).number == 2L)
+    assert(unreferencedWriteDirs(root).isEmpty, "the loser must delete its write dir")
+    def ids() = IvfPq.storedIds(spark, root).select("vec_id").as[Long].collect().toSeq
+    def idsOf(df: org.apache.spark.sql.DataFrame) = df.select("vec_id").as[Long].collect().toSet
+    val (winner, loser) = if (got.head.isRight) (incA, incB) else (incB, incA)
+    assert(ids().distinct.size == ids().size, "no duplicate vec_id at the head")
+    assert(ids().toSet == idsOf(base) ++ idsOf(winner), "the head is base + the winner only")
+    // the loser re-reads the head and retries as the next increment
+    assert(IvfPq.appendToIndex(spark, root, loser, incrementId = 3L))
+    assert(ids().distinct.size == ids().size)
+    assert(ids().toSet == idsOf(e))
   }
 
   // ---- commit-filesystem envelope (docs/COMMITS.md) -------------------
@@ -297,6 +320,15 @@ class ConcurrencySpec extends SparkSpec {
         CommittedVersions.claimId(spark, s"$bad/_claims", 1L)
       }
       assert(c.getMessage.contains("refused"), s"claimId must refuse $bad too: ${c.getMessage}")
+      // the index stores write their data BEFORE the CAS, so they must
+      // consult the arbiter before anything else — the fit included
+      val vecs = Seq((1L, Seq(0.0, 1.0))).toDF("vec_id", "emb")
+      intercept[UnsupportedCommitFilesystemException](
+        graft.ann.IvfIndex.writeIndex(vecs, s"$bad/ivf"))
+      intercept[UnsupportedCommitFilesystemException](
+        graft.ann.IvfPq.writeIndex(vecs, s"$bad/ivfpq", dim = 2))
+      intercept[UnsupportedCommitFilesystemException](
+        graft.ann.IvfPq.appendToIndex(spark, s"$bad/ivfpq", vecs, incrementId = 1L))
     }
   }
 

@@ -27,8 +27,10 @@ class LineageSpec extends SparkSpec {
   }
 
   test("flag without a checkpoint dir falls back to local truncation") {
-    val hadDir = spark.sparkContext.getCheckpointDir
-    assume(hadDir.isEmpty) // shared test context never sets one before this suite
+    // runs before the reliable-path test, which sets a checkpoint dir that a
+    // SparkContext cannot unset; asserted, not assumed, so it never skips
+    assert(spark.sparkContext.getCheckpointDir.isEmpty,
+      "no suite sets a checkpoint dir before this one")
     spark.conf.set(Lineage.Flag, "true")
     try {
       val t = Lineage.truncate(sample) // checkpoint() would throw with no dir
@@ -53,9 +55,6 @@ class LineageSpec extends SparkSpec {
         expected.map(_.getLong(1)).sum)
     } finally {
       spark.conf.unset(Lineage.Flag)
-      // the shared session has no clearCheckpointDir; reset via conf hack —
-      // setCheckpointDir(null) is not allowed, so point it at a fresh temp
-      // dir consumed by nothing (suites after this one never checkpoint)
       FrameCache.clear()
     }
   }
