@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler._
 
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR, timing a full materialization (count) per query.
@@ -10,28 +10,20 @@ import org.apache.spark.sql.SparkSession
   * and quiet machines (round-5 recorded a 1.7×-inflated total from a
   * single loaded pass). The first run of a query still pays any
   * session-shared memoized build exactly once, like a production session.
-  * Emits the full per-query JSON line (also persisted to BENCH_FULL.json,
-  * since the full map outgrew the harness's bounded stdout-tail capture)
-  * followed by a compact summary line — total, slowest queries, errors —
-  * guaranteed to fit the capture window. Failures are recorded under
+  * Emits the full per-query JSON line, with each run's Spark jobs, job
+  * time, driver gap and executor time under "runs_jobs" (a full sweep
+  * also persists it to BENCH_FULL.json, since the full map outgrew the
+  * harness's bounded stdout-tail capture), followed by a compact summary
+  * line — total, slowest queries, errors — guaranteed to fit the capture
+  * window. Failures are recorded under
   * "errors" with the message — never disguised as a timing — and excluded
   * from the total. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // the statement/feature frames carry 100-400 columns; the default
-      // maxFields=100 silently disables whole-stage codegen for every plan
-      // that touches them, dropping the hot path to interpreted evaluation
-      .config("spark.sql.codegen.maxFields", "500")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.envCpus)
+    val jobLog = new JobLog
+    spark.sparkContext.addSparkListener(jobLog)
 
     def q(s: String): String = "\"" + s.flatMap {
       case '"' => "\\\""
@@ -43,6 +35,8 @@ object Bench {
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val timings = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val allRuns = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
+    // wall-clock [start, end] ms of each successful run, for the job log
+    val runWindows = scala.collection.mutable.LinkedHashMap.empty[String, Seq[(Long, Long)]]
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // Host-drift self-defense: a loaded/degraded bench host produced a 3.6×
     // round-10 artifact from code the judge re-measured at 1.11× — record
@@ -64,11 +58,14 @@ object Bench {
       var failed = false
       var r = 0
       val times = Seq.newBuilder[Double]
+      val windows = Seq.newBuilder[(Long, Long)]
       while (r < runs && !failed) {
+        val w0 = System.currentTimeMillis()
         val t0 = System.nanoTime()
         try {
           fn(spark, sfDir).count()
           times += (System.nanoTime() - t0) / 1e9
+          windows += ((w0, System.currentTimeMillis()))
         } catch {
           case e: Throwable =>
             failed = true
@@ -79,10 +76,13 @@ object Bench {
       if (!failed) {
         val ts = times.result()
         allRuns(name) = ts
+        runWindows(name) = windows.result()
         timings(name) = ts.min
       }
     }
     val loadEnd = loadavg()
+    // stop() drains the listener bus, so every job of the last run is logged
+    spark.stop()
     val qs = timings.map { case (k, v) => s"${q(k)}:${"%.3f".format(v)}" }.mkString("{", ",", "}")
     val errs = errors.map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
     val total = timings.values.sum
@@ -163,21 +163,66 @@ object Bench {
     val runsDetail = allRuns.map { case (k, ts) =>
       s"${q(k)}:[${ts.map("%.3f".format(_)).mkString(",")}]"
     }.mkString("{", ",", "}")
+    // per run, aligned with runs_detail: jobs, union of job intervals,
+    // driver gap (wall minus that union: planning, file listing, commit
+    // protocol) and executor seconds (stage executorRunTime summed)
+    val runsJobs = runWindows.map { case (k, ws) =>
+      val rs = ws.zip(allRuns(k)).map { case ((w0, w1), wall) =>
+        val (n, jobS, execS) = jobLog.window(w0, w1)
+        s"""{"jobs":$n,"job_s":${"%.3f".format(jobS)},"gap_s":${"%.3f".format(wall - jobS)},"exec_s":${"%.3f".format(execS)}}"""
+      }
+      s"${q(k)}:${rs.mkString("[", ",", "]")}"
+    }.mkString("{", ",", "}")
     val fullLine =
-      s"""{"metric":"total","value":${"%.3f".format(total)},"unit":"sec","queries":$qs,"errors":$errs,"runs":$runs,"runs_detail":$runsDetail,"loadavg_start":${q(loadStart)},"loadavg_end":${q(loadEnd)}$vsFields,"sf":${q(sfDir)}}"""
+      s"""{"metric":"total","value":${"%.3f".format(total)},"unit":"sec","queries":$qs,"errors":$errs,"runs":$runs,"runs_detail":$runsDetail,"runs_jobs":$runsJobs,"loadavg_start":${q(loadStart)},"loadavg_end":${q(loadEnd)}$vsFields,"sf":${q(sfDir)}}"""
     // The full per-query map outgrew the harness's bounded stdout-tail capture
     // (~2000 chars) once the suite passed ~100 queries, truncating the headline
     // total out of the round artifact. Persist the full detail to a file and
     // make the LAST printed line a compact summary (total + the slowest
-    // queries) that always fits the capture window intact.
-    java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
-      (fullLine + "\n").getBytes("UTF-8"))
+    // queries) that always fits the capture window intact. Only a full sweep
+    // writes the file — a dev-loop subset must not clobber the committed one.
+    if (args.isEmpty)
+      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
+        (fullLine + "\n").getBytes("UTF-8"))
     println(fullLine)
     val slowest = timings.toSeq.sortBy(-_._2).take(20)
       .map { case (k, v) => s"${q(k)}:${"%.3f".format(v)}" }.mkString("{", ",", "}")
     // n_errors rides next to n_queries so a half-broken run can never read
     // as a fast run in the round artifact
     println(s"""{"metric":"total","value":${"%.3f".format(total)},"unit":"sec","queries":$slowest,"errors":$errs,"runs":$runs,"n_queries":${timings.size},"n_errors":${errors.size},"loadavg":${q(s"$loadStart -> $loadEnd")}$vsFields,"full":"BENCH_FULL.json","sf":${q(sfDir)}}""")
-    spark.stop()
+  }
+}
+
+/** Every Spark job of a session: start and end time, and the executor run
+  * time of its stages. A Bench run's jobs are those started inside the
+  * run's wall-clock window; queries run one at a time, so the windows do
+  * not overlap. */
+private final class JobLog extends SparkListener {
+  private val jobs = scala.collection.mutable.HashMap.empty[Int, Array[Long]]  // id -> start, end, exec ms
+  private val stageJob = scala.collection.mutable.HashMap.empty[Int, Int]
+
+  override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+    jobs(e.jobId) = Array(e.time, -1L, 0L)
+    e.stageInfos.foreach(si => stageJob(si.stageId) = e.jobId)
+  }
+  override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+    jobs.get(e.jobId).foreach(_(1) = e.time)
+  }
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+    for (jid <- stageJob.get(e.stageInfo.stageId); j <- jobs.get(jid); m <- Option(e.stageInfo.taskMetrics))
+      j(2) += m.executorRunTime
+  }
+
+  /** (finished jobs, union of their intervals s, executor s) of the jobs
+    * started in [t0, t1] ms — jobs overlap when submitted concurrently. */
+  def window(t0: Long, t1: Long): (Int, Double, Double) = synchronized {
+    val done = jobs.values.filter(j => j(0) >= t0 && j(0) <= t1 && j(1) >= 0).toSeq.sortBy(_(0))
+    var union = 0L; var curS = -1L; var curE = -1L
+    done.foreach { j =>
+      if (j(0) > curE) { if (curE >= 0) union += curE - curS; curS = j(0); curE = j(1) }
+      else curE = math.max(curE, j(1))
+    }
+    if (curE >= 0) union += curE - curS
+    (done.size, union / 1000.0, done.map(_(2)).sum / 1000.0)
   }
 }

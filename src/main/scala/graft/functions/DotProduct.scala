@@ -52,15 +52,12 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object GraftFunctions {
-  private val registered = java.util.Collections.newSetFromMap(
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]())
-
-  /** Register graft_dot in the session's function registry (idempotent). */
+  /** Register graft_dot in the session's function registry. Unconditional,
+    * like `Kmv.register`: createOrReplaceTempFunction is idempotent, and a
+    * memo keyed on session identity can collide across GC'd sessions. */
   def register(spark: SparkSession): Unit =
-    if (registered.add(spark.sessionState.toString)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    }
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
 
   /** Column API for the codegen'd dot product. */
   def dot(spark: SparkSession, a: Column, b: Column): Column = {

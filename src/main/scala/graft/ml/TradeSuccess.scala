@@ -7,7 +7,6 @@ import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.collection.concurrent.TrieMap
 
 /** Trade-success prediction (trade_success_predictor.py:124-294): the
   * reference trains an XGBoost classifier on feature rows to predict
@@ -69,15 +68,13 @@ object TradeSuccess {
       model.stages.last.asInstanceOf[GBTClassificationModel]
   }
 
-  private val fittedCache = TrieMap.empty[String, Fitted]
-
   private def isTest = pmod(hash(col("symbol_id")), lit(5)) === 0
 
   /** Fit once per (session, dir); every model-scored query and spec shares
     * the same fitted pipeline — training is the expensive step and the GBT
     * is seeded, so one fit is both cheaper and more consistent. */
   def fitted(spark: SparkSession, dir: String): Fitted =
-    fittedCache.getOrElseUpdate(graft.sqlx.FrameCache.key(spark, "gbt", dir), {
+    graft.sqlx.Memo.getOrElseUpdate(graft.sqlx.FrameCache.key(spark, "gbt", dir)) {
       // GBT boosting runs ~3 jobs per iteration over the training frame;
       // with the frame far smaller than the raw data (na.drop + 10 columns)
       // the per-task scheduling overhead dominates on many small
@@ -96,7 +93,7 @@ object TradeSuccess {
       val aucTest = eval.evaluate(model.transform(data.where(isTest)))
       data.unpersist(false)
       Fitted(model, aucTrain, aucTest)
-    })
+    }
 
   /** Train on ~80% of symbols, return (predictions on held-out, AUC). */
   def trainAndEvaluate(spark: SparkSession, dir: String): (DataFrame, Double) = {
@@ -127,19 +124,17 @@ object TradeSuccess {
     Fitted(m, r.getAs[Double]("auc_train"), r.getAs[Double]("auc_test"))
   }
 
-  private val loadedCache = TrieMap.empty[String, Fitted]
-
   /** Fit → save → load roundtrip, memoized per (session, dir): the loaded
     * model is the artifact a production scoring session starts from — the
     * registered `trades_filter_model_loaded` twin scores through THIS, and
     * ModelScoringSpec asserts loaded ≡ in-session probabilities
     * bit-for-bit. */
   def loadedFitted(spark: SparkSession, dir: String): Fitted =
-    loadedCache.getOrElseUpdate(graft.sqlx.FrameCache.key(spark, "gbt-loaded", dir), {
+    graft.sqlx.Memo.getOrElseUpdate(graft.sqlx.FrameCache.key(spark, "gbt-loaded", dir)) {
       val path = s"${sys.props("java.io.tmpdir")}/graft-gbt-model-${graft.sqlx.PathTag.of(dir)}"
       save(fitted(spark, dir), path)
       load(spark, path)
-    })
+    }
 
   /** Score an arbitrary frame carrying [[FeatureCols]] with the fitted
     * model via MLlib's transform: adds `success_probability` = P(label=1)

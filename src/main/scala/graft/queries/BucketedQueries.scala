@@ -18,31 +18,24 @@ import OracleSql.rd
   * table every morning and reading co-located buckets. */
 object BucketedQueries {
 
-  /** Guard so a session pays the bucket-table write ONCE per directory —
-    * the point of the layout is write-once/read-many economics, and before
-    * this the registered query re-ran the write (the expensive half) on
-    * every invocation, benching the write instead of the zero-exchange
-    * reads it buys. */
-  private val written = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Write features + signals bucketed by symbol (once per session × dir),
-    * read back, roll up per symbol and join — the shuffle-free core (no
-    * presentation sort). */
+  /** Write features + signals bucketed by symbol (once per session × dir,
+    * guarded by a [[graft.sqlx.Memo]] entry — the point of the layout is
+    * write-once/read-many economics, so a repeat call must not re-run the
+    * write, the expensive half), read back, roll up per symbol and join —
+    * the shuffle-free core (no presentation sort). */
   def symbolStats(s: SparkSession, d: String): DataFrame = {
     val suffix = graft.sqlx.PathTag.of(d)
     val featT = s"graft_feat_sym_$suffix"
     val sigT = s"graft_sig_sym_$suffix"
-    // mark written only AFTER both writes succeed — adding the key first
-    // would turn a transient write failure into a permanently poisoned
-    // session (every later call would skip the write and fail the read)
-    val wkey = graft.sqlx.FrameCache.key(s, "bucketed-write", d)
-    if (!written.contains(wkey)) {
+    // the entry is stored only AFTER both writes succeed, so a transient
+    // write failure is retried by the next call instead of poisoning the
+    // session (every later call skipping the write and failing the read)
+    graft.sqlx.Memo.getOrElseUpdate(graft.sqlx.FrameCache.key(s, "bucketed-write", d)) {
       BucketedTables.write(SignalQueries.signalFeatures(s, d), featT,
         Seq("symbol_id"), numBuckets = 8, sortCols = Seq("symbol_id", "date"))
       BucketedTables.write(
         SignalQueries.allSignals(s, d),
         sigT, Seq("symbol_id"), numBuckets = 8)
-      written.add(wkey)
     }
 
     val ft = BucketedTables.read(s, featT)

@@ -1593,15 +1593,13 @@ object LlmQueries {
     * (same memoization rationale as the GBT fit in TradeSuccess). */
   private val BpeMerges = 12
 
-  private val mergeCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Int, String, String, String, Long)]]
   private def learnedMerges(s: org.apache.spark.sql.SparkSession, d: String) =
-    mergeCache.getOrElseUpdate(graft.sqlx.FrameCache.key(s, "bpemerges", d), {
+    graft.sqlx.Memo.getOrElseUpdate(graft.sqlx.FrameCache.key(s, "bpemerges", d)) {
       graft.text.Bpe.merges(Tables.documents(s, d), "text", nMerges = BpeMerges)
         .orderBy("step").collect()
         .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
         .toSeq
-    })
+    }
 
   private val vocabBpeMerges = Q(
     (s, d) => {

@@ -69,9 +69,11 @@ object PlanFingerprint {
 
 /** Session-lifetime memo for small driver-side values derived from
   * file-backed corpora (corpus counts, fitted quantizer centroids, bucket
-  * tables with their widths) — the non-DataFrame sibling of
-  * [[FrameCache]]. Keys MUST embed a [[PlanFingerprint]] (or an equally
-  * collision-proof content key): values are served verbatim on a key hit.
+  * tables with their widths, per-session fits and write-once guards) — the
+  * non-DataFrame sibling of [[FrameCache]], cleared with it. Keys MUST
+  * embed a [[PlanFingerprint]] (or an equally collision-proof content key)
+  * or be a session-scoped [[FrameCache.key]]: values are served verbatim
+  * on a key hit.
   * Values must be deterministic — a concurrent double-build is resolved
   * by last-write-wins, which is only safe when both builds are equal.
   * Memoized values are shared across every later query in the session:

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility: dump formatted physical plans of representative queries to
   * docs/PLANS.md — the `.explain("formatted")` audit trail for the SURVEY §5
@@ -9,10 +8,8 @@ import org.apache.spark.sql.SparkSession
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // 4 partitions: the committed plans are read against the spec suite's session
+    val spark = graft.Session.local(4)
     val picks = Seq(
       "bars_daily" -> "one hash aggregation, pruned scan (no props/event_type)",
       "feat_sma" -> "whole windowed ladder: single exchange + sort after the bars agg",
@@ -60,12 +57,12 @@ object PlanDump {
       "dedup_simhash" -> "codegen graft_simhash64 fingerprints + 16-bit band bucket self-join",
       "watermark_roundtrip" -> "versioned-store re-read: stale filter over the committed parquet state",
       "trades_filter_model" -> "fitted-GBT scoring as pure codegen CASE expressions (no MLlib transform UDF) + decimal-exact rollup",
-      "ann_ivf_incremental" -> "incremental index probe: append-maintained cell partitions, pruned scan",
+      "ann_ivf_incremental" -> "incremental index probe: the head manifest's file list for the probed cells of the append-maintained versions",
       "events_compaction" -> "bin-packed generation read: per-day rollup + broadcast file-count join",
       "cdc_apply_snapshot" -> "changelog latest-wins merge: one key-partitioned window, no snapshot join",
       "ann_pq" -> "PQ ADC: codegen encode pass, broadcast LUT join, map-side-combined exact sums, bounded exact re-rank",
       "ann_ivfpq" -> "IVF+PQ: probed-cell equi-join gates the ADC; broadcast LUT + centroids; no unprobed-cell scan",
-      "ann_ivfpq_incremental" -> "IVFPQ incremental probe: append-maintained cell partitions, pruned code scan",
+      "ann_ivfpq_incremental" -> "IVFPQ incremental probe: the head manifest's code-file list for the probed cells, appended increments included",
       "mv_incremental_refresh" -> "MV read-back: finalized algebraic columns off the bucketed partial-state store",
       "events_skipping_scan" -> "manifest-pruned scan: file-list read of intersecting z-order boxes + residual filter",
       "events_point_lookup" -> "bloom-pruned point read: surviving files only + exact equality residual",
@@ -79,13 +76,13 @@ object PlanDump {
       "corpus_curriculum" -> "exact-quantile tier bounds as literals + md5 order keys, no single-partition sort",
       "sketch_event_stats" -> "KMV bottom-k sketches: one ObjectHashAggregate pass (partial+final), no Expand, no exact-distinct shuffle",
       "table_profile_approx" -> "single-scan profile with per-column KMV distinct sketches (vs the exact twin's second melt pass)",
-      "ann_index_health" -> "drift rollup: pruned code-table scan + broadcast codebooks/increment, 16-row output",
-      "ann_index_autorefit" -> "probe over the auto-REFIT store (thresholds pulled the rebuild lever): full-corpus-fit cell partitions, pruned scan",
-      "stream_ann_ingest" -> "probe AFTER streamed foreachBatch appends: same pruned-cell shape as the batch-incremental store",
+      "ann_index_health" -> "drift rollup: the head manifest's code-file list + driver-side quantizer tables broadcast with the increment, 16-row output",
+      "ann_index_autorefit" -> "probe over the auto-REFIT store (thresholds pulled the rebuild lever): the refit version's file list for the probed cells",
+      "stream_ann_ingest" -> "probe AFTER streamed foreachBatch appends: same manifest file-list read of the probed cells as the batch-incremental store",
       "sql_extensions_simhash" -> "plain-SQL text through the injected graft_simhash64 (extensions session): same codegen fingerprint plan as the Scala route",
       "events_forget" -> "tombstone-masked read (broadcast anti-join) unioned with the post-purge physical read — masking never shuffles the data side",
       "mv_delete_refresh" -> "MV read-back after retraction: algebraic subtraction + boundary-only min/max recompute, untouched buckets unread",
-      "ann_forget" -> "probe AFTER index-level deletes: survivors-only cell partitions, pruned scan, quantizer untouched",
+      "ann_forget" -> "probe AFTER index-level deletes: the head manifest lists only the rewritten cells' survivor files, quantizer carried by reference",
       "corpus_version_diff" -> "release diff: per-side fingerprint at the scan, full-outer join moves 16-byte hashes not documents",
       "forget_cascade" -> "one takedown request audited on BOTH surfaces: purged base-store scan unioned with the retracted MV state read",
       "text_dup_span_rewrite" -> "exact-substring removal: one gram-keyed rank shuffle, position anti-join, per-doc bounded reassembly sort",

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool (round 17): snapshot `.explain("formatted")` of named
   * registered queries to `plans/<tag>/<query>_<suffix>.txt` — the
@@ -16,16 +15,7 @@ object PlanSnap {
     require(args.length >= 3, "usage: PlanSnap <tag> <suffix> <query>...")
     val (tag, suffix, names) = (args(0), args(1), args.drop(2).toSeq)
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.maxFields", "500")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(graft.Session.envCpus)
     val outDir = Paths.get(s"plans/$tag")
     Files.createDirectories(outDir)
     names.foreach { name =>

@@ -123,16 +123,7 @@ object ScaleStress {
     val k = if (args.length > 2) args(2).toInt else 10
     val runs = if (args.length > 3) args(3).toInt else 2
     val selected = if (args.length > 4) args.drop(4).toSeq else Queries
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.maxFields", "500")
-      .config("spark.driver.memory", "96g")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.envCpus)
 
     synthesize(spark, baseDir, outDir, k)
 
