@@ -19,9 +19,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *     ([[graft.functions.MinHashSig]] / [[graft.dedup.MinHashLSH]]), so
   *     SQL-side signatures join against DataFrame-side band buckets
   *
-  * The query layer itself registers these lazily per call (the registry
-  * route in each expression's companion), so the extension is additive —
-  * the injection path is what a cluster-wide deployment configures once.
+  * This is the only place a graft function is declared by name. The
+  * Scala API never looks one up: each companion's Column method builds its
+  * expression directly (`org.apache.spark.sql.GraftColumn`), so no session
+  * registry is touched per call and the extension is purely additive — the
+  * injection path is what a cluster-wide deployment configures once.
   */
 object GraftExtensions {
   @volatile private var cached: org.apache.spark.sql.SparkSession = _

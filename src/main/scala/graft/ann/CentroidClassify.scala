@@ -30,13 +30,13 @@ import org.apache.spark.sql.functions._
 object CentroidClassify {
 
   def classify(spark: SparkSession, dir: String): DataFrame =
-    classifyFrames(spark,
+    classifyFrames(
       Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb")),
       Tables.documents(spark, dir).select(col("doc_id"), col("source")))
 
   /** Same over explicit (vec_id, emb) / (doc_id, source) frames. */
-  def classifyFrames(spark: SparkSession, e: DataFrame, d: DataFrame): DataFrame = {
+  def classifyFrames(e: DataFrame, d: DataFrame): DataFrame = {
     val joined = e.join(d, e("vec_id") === d("doc_id"))
 
     // per-(source, dim) exact mean over the train shard → |sources| arrays
@@ -49,14 +49,14 @@ object CentroidClassify {
       .agg(transform(sort_array(collect_list(struct(col("pos"), col("c")))),
         x => x.getField("c")).as("cv"))
       .select(col("source").as("cand"), col("cv"),
-        sqrt(graft.functions.GraftFunctions.dot(spark, col("cv"), col("cv"))).as("cnrm"))
+        sqrt(graft.functions.GraftFunctions.dot(col("cv"), col("cv"))).as("cnrm"))
 
     val scored = joined
-      .withColumn("nrm", sqrt(graft.functions.GraftFunctions.dot(spark, col("emb"), col("emb"))))
+      .withColumn("nrm", sqrt(graft.functions.GraftFunctions.dot(col("emb"), col("emb"))))
       .crossJoin(broadcast(cent))
       .select(col("doc_id"), col("source").as("true_source"), col("cand"),
         round(when(col("nrm") =!= 0.0 && col("cnrm") =!= 0.0,
-          graft.functions.GraftFunctions.dot(spark, col("emb"), col("cv")) /
+          graft.functions.GraftFunctions.dot(col("emb"), col("cv")) /
             (col("nrm") * col("cnrm"))), 6).as("cosine"))
     val w = Window.partitionBy("doc_id").orderBy(col("cosine").desc, col("cand"))
     scored.withColumn("rk", row_number().over(w)).where(col("rk") === 1)

@@ -38,19 +38,19 @@ object Cosine {
 
   /** Codegen'd cosine from precomputed norms (the pair loop is the hot path:
     * graft.functions.DotProduct keeps it in whole-stage codegen). */
-  private def fastCos(spark: SparkSession, a: Column, na: Column, b: Column, nb: Column): Column =
+  private def fastCos(a: Column, na: Column, b: Column, nb: Column): Column =
     when(na =!= 0.0 && nb =!= 0.0,
-      graft.functions.GraftFunctions.dot(spark, a, b) / (na * nb))
+      graft.functions.GraftFunctions.dot(a, b) / (na * nb))
 
-  private def withNorm(spark: SparkSession, e: DataFrame): DataFrame =
-    e.withColumn("nrm", sqrt(graft.functions.GraftFunctions.dot(spark, col("emb"), col("emb"))))
+  private def withNorm(e: DataFrame): DataFrame =
+    e.withColumn("nrm", sqrt(graft.functions.GraftFunctions.dot(col("emb"), col("emb"))))
 
   /** Shared broadcast-query ranking pipeline behind [[topK]] and
     * [[hardNegatives]]: one body owns the scoring DAG (norms, 6-dp
     * quantization, tie-break) so the two operators cannot drift. */
   private def rankedNeighbors(spark: SparkSession, dir: String, k: Int, queryMod: Int,
                               negativesOnly: Boolean): DataFrame = {
-    val e = withNorm(spark, embeddings(spark, dir))
+    val e = withNorm(embeddings(spark, dir))
     val q = e.where(col("vec_id") % queryMod === 0)
       .select(col("vec_id").as("query_id"), col("emb").as("qemb"),
         col("nrm").as("qnrm"), col("label").as("qlabel"))
@@ -66,7 +66,7 @@ object Cosine {
     val scoredCols =
       Seq(col("query_id"), col("vec_id")) ++
         (if (negativesOnly) Seq(col("label").as("neg_label")) else Nil) :+
-        round(fastCos(spark, col("qemb"), col("qnrm"), col("emb"), col("nrm")), 6).as("cosine")
+        round(fastCos(col("qemb"), col("qnrm"), col("emb"), col("nrm")), 6).as("cosine")
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id"))
     filtered.select(scoredCols: _*)
       .withColumn("rank", row_number().over(w)).where(col("rank") <= k)
@@ -97,7 +97,7 @@ object Cosine {
     * path is the LSH-bucketed near-dup ([[EmbeddingNearDup]]), not the
     * same quadratic work behind a different join. */
   def thresholdPairs(spark: SparkSession, dir: String, threshold: Double): DataFrame = {
-    val e = withNorm(spark, embeddings(spark, dir))
+    val e = withNorm(embeddings(spark, dir))
     // The O(N²) pair loop is the anchor's SEMANTICS; its parallelism is
     // not. The corpus reads as one parquet file, so the broadcast
     // nested-loop join streamed exactly ONE task through all N²/2 pairs
@@ -112,7 +112,7 @@ object Cosine {
     // estimate and could stream the un-repartitioned side serially)
     a.join(broadcast(b), col("vec_a") < col("vec_b"))
       .select(col("vec_a"), col("vec_b"),
-        round(fastCos(spark, col("ea"), col("na"), col("eb"), col("nb")), 6).as("cosine"))
+        round(fastCos(col("ea"), col("na"), col("eb"), col("nb")), 6).as("cosine"))
       .where(col("cosine") >= threshold)
   }
 }

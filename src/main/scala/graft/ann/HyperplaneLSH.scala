@@ -150,7 +150,7 @@ object HyperplaneLSH {
     val planesDf = this.planesDf(spark, dim, tables, bitsResolved)
     val base = vecs.crossJoin(broadcast(planesDf))
       .select(col("vec_id"), col("table"),
-        when(graft.functions.GraftFunctions.dot(spark, col("emb"), col("plane")) > 0.0,
+        when(graft.functions.GraftFunctions.dot(col("emb"), col("plane")) > 0.0,
           expr("shiftleft(1, bit)")).otherwise(0).as("bitval"))
       .groupBy("vec_id", "table")
       .agg(sum(col("bitval")).cast("int").as("bucket"))
@@ -197,7 +197,6 @@ object HyperplaneLSH {
     * cos ~0.99 past the width boundary). */
   def nearDupPairs(vecs: DataFrame, dim: Int, threshold: Double,
                    precomputedBuckets: Option[BucketTable] = None): DataFrame = {
-    val spark = vecs.sparkSession
     import graft.functions.GraftFunctions.dot
     val vbAll = precomputedBuckets.map(_.df).getOrElse(buckets(vecs, dim))
     // hot-bucket guard: at adaptive width a bucket past MaxBucket is a
@@ -222,7 +221,7 @@ object HyperplaneLSH {
       .select(least(col("a.vec_id"), col("b.vec_id")).as("vec_a"),
         greatest(col("a.vec_id"), col("b.vec_id")).as("vec_b"))
       .distinct()
-    val vn = vecs.withColumn("nrm", sqrt(dot(spark, col("emb"), col("emb"))))
+    val vn = vecs.withColumn("nrm", sqrt(dot(col("emb"), col("emb"))))
     // executor-memory-sized corpora broadcast the rescore sides so the
     // Θ(N·L·(B+1)·occ) candidate stream never pays a sort-merge sort —
     // see [[RescoreBroadcastMaxBytes]]. ONE shared projection, aliased
@@ -238,7 +237,7 @@ object HyperplaneLSH {
     cand.join(a, "vec_a").join(b, "vec_b")
       .select(col("vec_a"), col("vec_b"),
         round(when(col("na") =!= 0.0 && col("nb") =!= 0.0,
-          dot(spark, col("ea"), col("eb")) / (col("na") * col("nb"))), 6).as("cosine"))
+          dot(col("ea"), col("eb")) / (col("na") * col("nb"))), 6).as("cosine"))
       .where(col("cosine") >= threshold)
   }
 
@@ -249,7 +248,6 @@ object HyperplaneLSH {
     * candidate fan-out of probing both sides. */
   def approxTopK(vecs: DataFrame, queries: DataFrame, dim: Int, k: Int,
                  precomputedBuckets: Option[BucketTable] = None): DataFrame = {
-    val spark = vecs.sparkSession
     import graft.functions.GraftFunctions.dot
     // the query side MUST hash at the CORPUS's width — widths derived
     // from each side's own count would never share a bucket. A supplied
@@ -270,14 +268,14 @@ object HyperplaneLSH {
     val bcast = graft.sqlx.Counts.of(vecs) * dim * 8L * RescoreOverheadFactor <=
       RescoreBroadcastMaxBytes
     def side(df: DataFrame) = if (bcast) broadcast(df) else df
-    val vn = side(vecs.withColumn("nrm", sqrt(dot(spark, col("emb"), col("emb")))))
-    val qn = queries.withColumn("qnrm", sqrt(dot(spark, col("qemb"), col("qemb"))))
+    val vn = side(vecs.withColumn("nrm", sqrt(dot(col("emb"), col("emb")))))
+    val qn = queries.withColumn("qnrm", sqrt(dot(col("qemb"), col("qemb"))))
     val scored = cand
       .join(vn, "vec_id")
       .join(qn, "query_id")
       .select(col("query_id"), col("vec_id"),
         round(when(col("qnrm") =!= 0.0 && col("nrm") =!= 0.0,
-          dot(spark, col("qemb"), col("emb")) / (col("qnrm") * col("nrm"))), 6).as("cosine"))
+          dot(col("qemb"), col("emb")) / (col("qnrm") * col("nrm"))), 6).as("cosine"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id"))
     scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)

@@ -81,7 +81,7 @@ object IvfIndex {
     import spark.implicits._
     val centroids = fittedCentroids(vecs, nCells, seed, maxTrain, driverFitMaxCells)
     val assigned = vecs.select(col("vec_id"), col("emb"),
-      graft.functions.NearestCell.nearest(spark, col("emb"), centroids).as("cell"))
+      graft.functions.NearestCell.nearest(col("emb"), centroids).as("cell"))
     val cents = centroids.zipWithIndex.toSeq
       .map { case (c, i) => (i, c.toSeq) }
       .toDF("cell", "centroid")
@@ -229,19 +229,17 @@ object IvfIndex {
       // driver (10⁵ cells × 64 dims ≈ 6.4M decimals ≈ low hundreds of
       // MB); past that, shrink the sample stride or the cell count — the
       // coarse quantizer needs spread, not optimality.
-      val (fname, nearestCol) =
-        graft.functions.NearestCell.nearestNamed(spark, col("emb"), cents)
+      // each pass binds its interim matrix into its own plan, so the
+      // snapshot lives only as long as that plan
       val stats = sample
-        .select(nearestCol.as("cell"), posexplode(col("emb")))
+        .select(graft.functions.NearestCell.nearest(col("emb"), cents).as("cell"),
+          posexplode(col("emb")))
         .groupBy("cell", "pos")
         .agg(sum(graft.sqlx.Exact.dec(col("col"))).as("s"), count(lit(1)).as("n"))
         .groupBy("cell")
         .agg(max(col("n")).as("n"), // n is the cell's member count — identical across dims
           sort_array(collect_list(struct(col("pos"), col("s")))).as("dims"))
         .collect()
-      // the iteration's plan is fully executed: release this centroid
-      // snapshot from the registry (each iteration registers a fresh one)
-      graft.functions.NearestCell.drop(spark, fname)
       val next = cents.map(_.clone)
       stats.foreach { r =>
         val cell = r.getInt(0)
@@ -260,13 +258,12 @@ object IvfIndex {
     * cosine — a broadcast cross of the driver-sized centroid table.
     * (private[ann]: [[IvfPq]] shares the probe.) */
   private[ann] def probeCells(queries: DataFrame, cents: DataFrame, nProbe: Int): DataFrame = {
-    val spark = queries.sparkSession
     import graft.functions.GraftFunctions.dot
     queries.crossJoin(broadcast(cents))
       .withColumn("cdist",
-        -dot(spark, col("qemb"), col("centroid")) /
-          (sqrt(dot(spark, col("qemb"), col("qemb"))) *
-            sqrt(dot(spark, col("centroid"), col("centroid")))))
+        -dot(col("qemb"), col("centroid")) /
+          (sqrt(dot(col("qemb"), col("qemb"))) *
+            sqrt(dot(col("centroid"), col("centroid")))))
       .withColumn("prb", row_number().over(
         Window.partitionBy("query_id").orderBy(col("cdist"), col("cell"))))
       .where(col("prb") <= nProbe)
@@ -275,15 +272,14 @@ object IvfIndex {
 
   /** Exact re-score of the probed cells' members + per-query top-k. */
   private def rescoreTopK(qcells: DataFrame, assigned: DataFrame, k: Int): DataFrame = {
-    val spark = assigned.sparkSession
     import graft.functions.GraftFunctions.dot
-    val vn = assigned.withColumn("nrm", sqrt(dot(spark, col("emb"), col("emb"))))
+    val vn = assigned.withColumn("nrm", sqrt(dot(col("emb"), col("emb"))))
     val scored = qcells.join(vn, Seq("cell"))
       .where(col("vec_id") =!= col("query_id"))
-      .withColumn("qnrm", sqrt(dot(spark, col("qemb"), col("qemb"))))
+      .withColumn("qnrm", sqrt(dot(col("qemb"), col("qemb"))))
       .select(col("query_id"), col("vec_id"),
         round(when(col("qnrm") =!= 0.0 && col("nrm") =!= 0.0,
-          dot(spark, col("qemb"), col("emb")) / (col("qnrm") * col("nrm"))), 6).as("cosine"))
+          dot(col("qemb"), col("emb")) / (col("qnrm") * col("nrm"))), 6).as("cosine"))
       // no distinct needed: cells partition the corpus, so each (query, vec)
       // pair surfaces from exactly one probed cell
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id"))
@@ -321,7 +317,7 @@ object IvfIndex {
       val centroids = fittedCentroids(vecs, cells, seed, maxTrain)
       // the nCells-row centroid table is a driver write (TinyParquet)
       (vecs.select(col("vec_id"), col("emb"),
-        graft.functions.NearestCell.nearest(spark, col("emb"), centroids).as("cell")),
+        graft.functions.NearestCell.nearest(col("emb"), centroids).as("cell")),
         Seq(("centroids", Seq("cell" -> "int", "centroid" -> "array<double>"),
           centroids.zipWithIndex.toSeq.map { case (c, i) => Seq[Any](i, c) })))
     }
@@ -356,7 +352,7 @@ object IvfIndex {
     IndexStore.append(spark, path, "IvfIndex.appendToIndex", incrementId) { head =>
       val cents = storedCentroids(spark, path, head).map(_._2).toArray
       newVecs.select(col("vec_id"), col("emb"),
-        graft.functions.NearestCell.nearest(spark, col("emb"), cents).as("cell"))
+        graft.functions.NearestCell.nearest(col("emb"), cents).as("cell"))
     }
 
   /** Probe a stored index. The head version is resolved once; the union of

@@ -70,12 +70,10 @@ object IvfPq {
     * columns are [[Pq.codeCols]], the one definition shared with
     * [[Pq.encode]] and the oracle's `cd` CTE. */
   private def indexRows(vecs: DataFrame, coarse: Array[Array[Double]],
-                        cbs: Array[Array[Array[Double]]]): DataFrame = {
-    val spark = vecs.sparkSession
+                        cbs: Array[Array[Array[Double]]]): DataFrame =
     vecs.select(col("vec_id") +:
-      graft.functions.NearestCell.nearest(spark, col("emb"), coarse).as("cell") +:
-      Pq.codeCols(spark, cbs): _*)
-  }
+      graft.functions.NearestCell.nearest(col("emb"), coarse).as("cell") +:
+      Pq.codeCols(cbs): _*)
 
   /** Materialize the index in the layout the header promises: the
     * PQ-coded rows written one directory per cell — m small ints per
@@ -332,12 +330,12 @@ object IvfPq {
       .map { case (c, i) => (i, c.toSeq) }.toDF("cell", "centroid")
     // index rows: assign, subtract the cell centroid, code the residual
     val assigned = vecs.select(col("vec_id"), col("emb"),
-      graft.functions.NearestCell.nearest(spark, col("emb"), coarse).as("cell"))
+      graft.functions.NearestCell.nearest(col("emb"), coarse).as("cell"))
     val resRows = assigned.join(broadcast(cents), Seq("cell"))
       .select(col("vec_id"), col("cell"),
         zip_with(col("emb"), col("centroid"), (a, b) => a - b).as("emb"))
     val codeLong = Pq.meltCodes(
-      resRows.select(col("vec_id") +: col("cell") +: Pq.codeCols(spark, cbs): _*),
+      resRows.select(col("vec_id") +: col("cell") +: Pq.codeCols(cbs): _*),
       m, Seq("vec_id", "cell"))
 
     // driver metadata tables: centroid subspace slices and |c_j + r̂|²
@@ -352,10 +350,10 @@ object IvfPq {
     import graft.functions.GraftFunctions.dot
     val qc = qcells.join(queries, Seq("query_id")).join(broadcast(cellSub), Seq("cell"))
       .select(col("query_id"), col("cell"), col("j"),
-        round(dot(spark, slice(col("qemb"), col("j") * sd + 1, lit(sd)), col("csub")), 10).as("qc"))
+        round(dot(slice(col("qemb"), col("j") * sd + 1, lit(sd)), col("csub")), 10).as("qc"))
     val qr = queries.crossJoin(broadcast(Pq.codebookDf(spark, cbs)))
       .select(col("query_id"), col("j"), col("code"),
-        round(dot(spark, slice(col("qemb"), col("j") * sd + 1, lit(sd)), col("cent")), 10).as("qr"))
+        round(dot(slice(col("qemb"), col("j") * sd + 1, lit(sd)), col("cent")), 10).as("qr"))
     val pairs = qcells.join(codeLong, Seq("cell"))
       .where(col("vec_id") =!= col("query_id"))
       .join(qc, Seq("query_id", "cell", "j"))
@@ -443,7 +441,7 @@ object IvfPq {
         Seq("vec_id"), "left")
       .withColumn("diff",
         zip_with(slice(col("emb"), col("j") * sd + 1, lit(sd)), col("cent"), (a, b) => a - b))
-      .withColumn("d2", graft.functions.GraftFunctions.dot(spark, col("diff"), col("diff")))
+      .withColumn("d2", graft.functions.GraftFunctions.dot(col("diff"), col("diff")))
       .select(col("cell"), coalesce(col("is_inc"), lit(false)).as("is_inc"), col("d2"))
     val perCell = terms.groupBy("cell").agg(
       (count(lit(1)) / lit(m)).cast("long").as("n_vectors"),

@@ -111,11 +111,10 @@ object Pq {
     * slicing + NearestCell encode expression, shared by [[encode]] and
     * [[IvfPq]]'s one-pass index row so the two cannot drift from the SQL
     * oracle's `cd` CTE. */
-  private[ann] def codeCols(spark: org.apache.spark.sql.SparkSession,
-                            codebooks: Array[Array[Array[Double]]]): Seq[Column] = {
+  private[ann] def codeCols(codebooks: Array[Array[Array[Double]]]): Seq[Column] = {
     val sd = codebooks(0)(0).length
     codebooks.indices.map { j =>
-      graft.functions.NearestCell.nearest(spark,
+      graft.functions.NearestCell.nearest(
         slice(col("emb"), j * sd + 1, sd), codebooks(j)).as(s"code_$j")
     }
   }
@@ -131,10 +130,8 @@ object Pq {
     * whole-stage codegen, no shuffle, no boxing). This frame IS the PQ
     * index: at 100 TB it is what gets persisted/cached instead of the raw
     * vectors (m ints vs d doubles per row). */
-  def encode(vecs: DataFrame, codebooks: Array[Array[Array[Double]]]): DataFrame = {
-    val spark = vecs.sparkSession
-    vecs.select(col("vec_id") +: codeCols(spark, codebooks): _*)
-  }
+  def encode(vecs: DataFrame, codebooks: Array[Array[Array[Double]]]): DataFrame =
+    vecs.select(col("vec_id") +: codeCols(codebooks): _*)
 
   private def dec10(c: Column): Column = c.cast(DecimalType(25, 10))
 
@@ -151,16 +148,15 @@ object Pq {
     import graft.functions.GraftFunctions.dot
     (for { j <- cbs.indices; c <- cbs(j).indices }
       yield (j, c, cbs(j)(c).toSeq)).toDF("j", "code", "cent")
-      .withColumn("cn2", round(dot(spark, col("cent"), col("cent")), 10))
+      .withColumn("cn2", round(dot(col("cent"), col("cent")), 10))
   }
 
   /** Per-query LUT: m·codes partial dots, 10-dp quantized (ditto). */
   private[ann] def lutFor(queries: DataFrame, cbDf: DataFrame, sd: Int): DataFrame = {
-    val spark = queries.sparkSession
     import graft.functions.GraftFunctions.dot
     queries.crossJoin(broadcast(cbDf))
       .select(col("query_id"), col("j"), col("code"),
-        round(dot(spark, slice(col("qemb"), col("j") * sd + 1, lit(sd)), col("cent")), 10)
+        round(dot(slice(col("qemb"), col("j") * sd + 1, lit(sd)), col("cent")), 10)
           .as("pdot"),
         col("cn2"))
   }
@@ -176,14 +172,13 @@ object Pq {
     * candidate pair, self-matches already excluded. */
   private[ann] def adcRankExact(vecs: DataFrame, queries: DataFrame, pairs: DataFrame,
                                 rerank: Int, k: Int): DataFrame = {
-    val spark = vecs.sparkSession
     import graft.functions.GraftFunctions.dot
     val adc = pairs
       .groupBy("query_id", "vec_id")
       .agg(sum(dec10(col("pdot"))).cast("double").as("adot"),
         sum(dec10(col("cn2"))).cast("double").as("rec2"))
     val qn = queries.select(col("query_id"),
-      sqrt(dot(spark, col("qemb"), col("qemb"))).as("qnrm"), col("qemb"))
+      sqrt(dot(col("qemb"), col("qemb"))).as("qnrm"), col("qemb"))
     val cand = adc.join(broadcast(qn), Seq("query_id"))
       .withColumn("approx", when(col("qnrm") =!= 0.0 && col("rec2") > 0.0,
         col("adot") / (col("qnrm") * sqrt(col("rec2")))))
@@ -191,11 +186,11 @@ object Pq {
         Window.partitionBy("query_id").orderBy(col("approx").desc, col("vec_id"))))
       .where(col("crk") <= rerank)
     // exact re-rank of the bounded candidate set (rerank·|queries| rows)
-    val vn = vecs.withColumn("nrm", sqrt(dot(spark, col("emb"), col("emb"))))
+    val vn = vecs.withColumn("nrm", sqrt(dot(col("emb"), col("emb"))))
     val rescored = cand.join(vn, Seq("vec_id"))
       .select(col("query_id"), col("vec_id"),
         round(when(col("qnrm") =!= 0.0 && col("nrm") =!= 0.0,
-          dot(spark, col("qemb"), col("emb")) / (col("qnrm") * col("nrm"))), 6)
+          dot(col("qemb"), col("emb")) / (col("qnrm") * col("nrm"))), 6)
           .as("cosine"))
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id"))
     rescored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)

@@ -66,9 +66,8 @@ object SemDeDup {
     * corpora have no collision-proof fingerprint and would re-fit — the
     * reuse here is what bounds dedup to one fit on EVERY corpus.) */
   private def pairsFromAssigned(assigned: DataFrame, threshold: Double): DataFrame = {
-    val spark = assigned.sparkSession
     val a = assigned.select(col("vec_id"), col("emb"), col("cell"),
-      sqrt(graft.functions.GraftFunctions.dot(spark, col("emb"), col("emb"))).as("nrm"))
+      sqrt(graft.functions.GraftFunctions.dot(col("emb"), col("emb"))).as("nrm"))
     // in-cell pairs above threshold: equi-join on cell, upper triangle
     val l = a.select(col("cell"), col("vec_id").as("vec_a"),
       col("emb").as("ea"), col("nrm").as("na"))
@@ -77,7 +76,7 @@ object SemDeDup {
     l.join(r, Seq("cell")).where(col("vec_a") < col("vec_b"))
       .withColumn("cosine",
         round(when(col("na") =!= 0.0 && col("nb") =!= 0.0,
-          graft.functions.GraftFunctions.dot(spark, col("ea"), col("eb")) /
+          graft.functions.GraftFunctions.dot(col("ea"), col("eb")) /
             (col("na") * col("nb"))), 6))
       .where(col("cosine") >= threshold)
       .select(col("vec_a"), col("vec_b"), col("cosine"))

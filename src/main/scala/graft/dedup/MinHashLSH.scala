@@ -75,7 +75,6 @@ object MinHashLSH {
     * streaming TTL path needs the event time beside each banded row — a
     * post-hoc join would be a second stateful operator in that plan). */
   def bandBucketsFromArrays(docs: DataFrame, carry: Seq[String]): DataFrame = {
-    val spark = docs.sparkSession
     // guard on the CHEAP input, not the signature: a `sig IS NOT NULL`
     // filter gets pushed below the project and re-evaluates the whole
     // md5 loop a second time per row (seen in the PLANS.md audit) —
@@ -83,7 +82,7 @@ object MinHashLSH {
     // null iff the array is empty) at scan-cheap cost
     val sig = docs.where(size(col("shingles")) > 0)
       .select(col("doc_id") +: carry.map(col) :+
-        graft.functions.MinHashSig.sig(spark, col("shingles"), permA, permB, Prime).as("sig"): _*)
+        graft.functions.MinHashSig.sig(col("shingles"), permA, permB, Prime).as("sig"): _*)
     val bandCols = (0 until Bands).map { b =>
       struct(lit(b).as("band"),
         concat_ws(",", slice(col("sig"), b * RowsPerBand + 1, RowsPerBand)).as("bucket"))

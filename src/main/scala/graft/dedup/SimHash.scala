@@ -40,8 +40,7 @@ object SimHash {
   def fingerprints(docs: DataFrame): DataFrame =
     docs.where(col("text").isNotNull)
       .select(col("doc_id"),
-        graft.functions.SimHash64.fingerprint(docs.sparkSession,
-          split(trim(col("text")), " ")).as("simhash"))
+        graft.functions.SimHash64.fingerprint(split(trim(col("text")), " ")).as("simhash"))
 
   /** Hot-bucket skew guard, DEFAULT-ON like [[MinHashLSH.MaxBucketSize]]
     * and [[graft.ann.HyperplaneLSH]]'s cap: a band bucket with more than

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftColumn}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -52,17 +52,7 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object GraftFunctions {
-  /** Register graft_dot in the session's function registry. Unconditional,
-    * like `Kmv.register`: createOrReplaceTempFunction is idempotent, and a
-    * memo keyed on session identity can collide across GC'd sessions. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-
   /** Column API for the codegen'd dot product. */
-  def dot(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    // go through the parser-facing registry so no private Column ctor is needed
-    org.apache.spark.sql.functions.call_function("graft_dot", a, b)
-  }
+  def dot(a: Column, b: Column): Column =
+    GraftColumn(DotProduct(GraftColumn.expr(a), GraftColumn.expr(b)))
 }

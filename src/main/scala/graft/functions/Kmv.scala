@@ -3,7 +3,7 @@ package graft.functions
 import java.nio.ByteBuffer
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftColumn}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -74,10 +74,7 @@ object Kmv {
     * build and the md5 run inside whole-stage codegen (inside the
     * imperative aggregate they are interpreted per row — measured ~1.9×
     * on the 11-column approx profile). */
-  def hash52Col(spark: SparkSession, canonical: Column): Column = {
-    register(spark)
-    call_function("graft_hash52", canonical)
-  }
+  def hash52Col(canonical: Column): Column = GraftColumn(Hash52(GraftColumn.expr(canonical)))
 
   /** The estimator as SQL, over a ranked bottom-k CTE exposing `rn`
     * (hash rank ascending), `nd` (distinct-hash count) and `hv`. */
@@ -91,34 +88,9 @@ object Kmv {
     else ((k - 1).toLong * Scale) / math.max(kth, 1L)
 
   // ------------------------------------------------------------ Column API
-
-  /** Register the KMV aggregates in the session registry. Unconditional:
-    * createOrReplaceTempFunction is already idempotent and a memo keyed on
-    * session identity can collide across GC'd sessions (review finding) —
-    * skipping registration for a session that never had the functions. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_hash52",
-      exprs => Hash52(exprs(0)), "built-in")
-    // the optional third/fourth arg DECLARES a prehashed (Hash52) LONG key;
-    // without the declaration a long child is an analysis error, never a
-    // silently-garbage estimate (review finding)
-    reg.createOrReplaceTempFunction("graft_kmv_distinct",
-      exprs => KmvDistinct(exprs(0),
-        exprs(1).eval().asInstanceOf[Int],
-        prehashed = exprs.length > 2 && exprs(2).eval().asInstanceOf[Boolean]),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_kmv_sample",
-      exprs => KmvSample(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Int],
-        prehashed = exprs.length > 3 && exprs(3).eval().asInstanceOf[Boolean]),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_kmv_state",
-      exprs => KmvState(exprs(0),
-        exprs(1).eval().asInstanceOf[Int],
-        prehashed = exprs.length > 2 && exprs(2).eval().asInstanceOf[Boolean]),
-      "built-in")
-  }
+  // Each method builds its expression directly; `k` and `prehashed` are
+  // constructor arguments, so a LONG key without `prehashed = true` fails
+  // the aggregate's own type check at analysis.
 
   // --------------------------------------------------- persisted states
 
@@ -127,10 +99,8 @@ object Kmv {
     * states once, answer ANY later rollup by merging states (bottom-k of
     * the union is the union sketch, Beyer et al. §4) with NO rescan of
     * the data. A state is ≤ k BIGINTs; merging is plain array algebra. */
-  def stateHashed(spark: SparkSession, hashed: Column, k: Int = K): Column = {
-    register(spark)
-    call_function("graft_kmv_state", hashed, lit(k), lit(true))
-  }
+  def stateHashed(hashed: Column, k: Int = K): Column =
+    GraftColumn(KmvState(GraftColumn.expr(hashed), k, prehashed = true))
 
   /** Merge an agg-collected list of states (`collect_list(state)`) into
     * the union's state: bottom-k of the distinct union. Input is
@@ -150,34 +120,26 @@ object Kmv {
 
   /** Deterministic distinct-count estimate of a canonical STRING column.
     * Exact below k distinct values, (k−1)·2^52 div h_k above. */
-  def distinctCount(spark: SparkSession, canonical: Column, k: Int = K): Column = {
-    register(spark)
-    call_function("graft_kmv_distinct", canonical, lit(k))
-  }
+  def distinctCount(canonical: Column, k: Int = K): Column =
+    GraftColumn(KmvDistinct(GraftColumn.expr(canonical), k))
 
   /** [[distinctCount]] over an already-[[hash52Col]]ed LONG column — the
     * codegen-friendly split (hash in a projection, insert in the
     * aggregate). The flag is explicit: raw longs into the string form are
     * an analysis error, not a silently wrong estimate. */
-  def distinctCountHashed(spark: SparkSession, hashed: Column, k: Int = K): Column = {
-    register(spark)
-    call_function("graft_kmv_distinct", hashed, lit(k), lit(true))
-  }
+  def distinctCountHashed(hashed: Column, k: Int = K): Column =
+    GraftColumn(KmvDistinct(GraftColumn.expr(hashed), k, prehashed = true))
 
   /** Bottom-k-by-hash uniform sample of `value`, keyed by a canonical
     * STRING identity column; returns the sampled values sorted ascending,
     * ready for [[quantileFromSorted]]. */
-  def sample(spark: SparkSession, key: Column, value: Column, k: Int = K): Column = {
-    register(spark)
-    call_function("graft_kmv_sample", key, value, lit(k))
-  }
+  def sample(key: Column, value: Column, k: Int = K): Column =
+    GraftColumn(KmvSample(GraftColumn.expr(key), GraftColumn.expr(value), k))
 
   /** [[sample]] with an already-[[hash52Col]]ed LONG key. */
-  def sampleHashed(spark: SparkSession, hashedKey: Column, value: Column,
-                   k: Int = K): Column = {
-    register(spark)
-    call_function("graft_kmv_sample", hashedKey, value, lit(k), lit(true))
-  }
+  def sampleHashed(hashedKey: Column, value: Column, k: Int = K): Column =
+    GraftColumn(KmvSample(GraftColumn.expr(hashedKey), GraftColumn.expr(value), k,
+      prehashed = true))
 
   /** numpy-default linear interpolation over a SORTED sample array — the
     * identical IEEE op DAG as the franked-window oracle replay

@@ -2,7 +2,7 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftColumn}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -86,13 +86,9 @@ case class MinHashSig(child: Expression, a: Array[Long], b: Array[Long], prime: 
 }
 
 object MinHashSig {
-  /** Column API (registry route, same as [[GraftFunctions.dot]]). The
-    * permutation parameters are fixed module constants on the caller's
-    * side, so one function name per session is unambiguous. */
-  def sig(spark: SparkSession, shingles: Column,
-          a: Array[Long], b: Array[Long], prime: Long): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_sig", exprs => MinHashSig(exprs.head, a, b, prime), "built-in")
-    org.apache.spark.sql.functions.call_function("graft_minhash_sig", shingles)
-  }
+  /** Column API: builds the expression directly with the caller's
+    * permutation parameters (SQL text reaches it through
+    * [[graft.GraftExtensions]], bound to the library's LSH constants). */
+  def sig(shingles: Column, a: Array[Long], b: Array[Long], prime: Long): Column =
+    GraftColumn(MinHashSig(GraftColumn.expr(shingles), a, b, prime))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftColumn}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -80,63 +80,8 @@ case class NearestCell(child: Expression, cents: Array[Array[Double]])
 }
 
 object NearestCell {
-
-  /** Registration key = MD5 of the centroid matrix content. Re-registering
-    * the SAME matrix (every re-run of a registered ANN query against the
-    * memoized fit — the common case in a long-lived session or a bench
-    * loop) reuses one registry entry instead of minting a fresh name per
-    * call, so the function registry stays bounded by the number of DISTINCT
-    * fitted matrices (a handful per session), not by query executions. A
-    * content hash rather than identity: two fits of the same (data, seed)
-    * produce equal matrices and legitimately share the entry; MD5 makes an
-    * accidental collision between different matrices (which would silently
-    * swap quantizers) cryptographically improbable. */
-  private def contentKey(cents: Array[Array[Double]]): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val buf = java.nio.ByteBuffer.allocate(8)
-    cents.foreach { row =>
-      row.foreach { v =>
-        buf.clear(); buf.putDouble(v); md.update(buf.array())
-      }
-    }
-    md.digest().map("%02x".format(_)).mkString
-  }
-
-  private val transientCounter = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Column API. Registers a temp function binding THIS centroid matrix
-    * (the registry path avoids private Column ctors, same as
-    * [[GraftFunctions.dot]]), keyed by CONTENT so repeated calls with the
-    * same matrix share one entry — the registry stays bounded by the
-    * number of distinct fitted matrices, never by query executions.
-    * Content-keyed entries are NEVER dropped (a shared name one caller
-    * could drop from under another's unanalyzed plan would be a race);
-    * a handful of k·d arrays per session is the accepted residency.
-    * Callers whose matrix is TRANSIENT (the distributed Lloyd's
-    * iterations — a different interim matrix every pass) use
-    * [[nearestNamed]] + [[drop]] instead. */
-  def nearest(spark: SparkSession, emb: Column, cents: Array[Array[Double]]): Column = {
-    val name = s"graft_nearest_cell_${contentKey(cents)}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => NearestCell(exprs.head, cents), "built-in")
-    org.apache.spark.sql.functions.call_function(name, emb)
-  }
-
-  /** Uniquely-named registration for eager consumers that [[drop]] the
-    * entry (and its captured centroids) after their plan executes. The
-    * per-call unique suffix makes drop race-free under concurrent
-    * identical fits — two callers can never share (and so never yank) one
-    * another's registration, which a pure content key would allow. */
-  def nearestNamed(spark: SparkSession, emb: Column,
-                   cents: Array[Array[Double]]): (String, Column) = {
-    val name = s"graft_nearest_cell_${contentKey(cents)}_t${transientCounter.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => NearestCell(exprs.head, cents), "built-in")
-    (name, org.apache.spark.sql.functions.call_function(name, emb))
-  }
-
-  /** Unregister a [[nearestNamed]] function once its plan has executed. */
-  def drop(spark: SparkSession, name: String): Unit =
-    spark.sessionState.functionRegistry.dropFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier(name))
+  /** Column API: binds THIS centroid matrix into the expression itself, so
+    * the matrix lives exactly as long as the plans that reference it. */
+  def nearest(emb: Column, cents: Array[Array[Double]]): Column =
+    GraftColumn(NearestCell(GraftColumn.expr(emb), cents))
 }

@@ -2,7 +2,7 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftColumn}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -79,10 +79,7 @@ case class SimHash64(child: Expression) extends UnaryExpression {
 }
 
 object SimHash64 {
-  /** Column API (registry route, same as [[GraftFunctions.dot]]). */
-  def fingerprint(spark: SparkSession, tokens: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash64", exprs => SimHash64(exprs.head), "built-in")
-    org.apache.spark.sql.functions.call_function("graft_simhash64", tokens)
-  }
+  /** Column API: builds the expression directly (SQL text reaches it
+    * through [[graft.GraftExtensions]]). */
+  def fingerprint(tokens: Column): Column = GraftColumn(SimHash64(GraftColumn.expr(tokens)))
 }

@@ -288,12 +288,12 @@ object AggregateQueries {
         // hashes precomputed in a codegen'd projection (Kmv.hash52Col);
         // the aggregate updates are then pure bounded-set inserts
         .select(col("event_type"), col("value"),
-          graft.functions.Kmv.hash52Col(s, col("user_id").cast("string")).as("uh"),
-          graft.functions.Kmv.hash52Col(s, col("event_id").cast("string")).as("eh"))
+          graft.functions.Kmv.hash52Col(col("user_id").cast("string")).as("uh"),
+          graft.functions.Kmv.hash52Col(col("event_id").cast("string")).as("eh"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"),
-          graft.functions.Kmv.distinctCountHashed(s, col("uh"), k).as("kmv_users"),
-          graft.functions.Kmv.sampleHashed(s, col("eh"), col("value"), k).as("samp"))
+          graft.functions.Kmv.distinctCountHashed(col("uh"), k).as("kmv_users"),
+          graft.functions.Kmv.sampleHashed(col("eh"), col("value"), k).as("samp"))
         .select(col("event_type"), col("n_events"), col("kmv_users"),
           graft.functions.Kmv.quantileFromSorted(col("samp"), 0.5).as("p50_value"),
           graft.functions.Kmv.quantileFromSorted(col("samp"), 0.95).as("p95_value"))
@@ -360,9 +360,9 @@ object AggregateQueries {
       graft.Tables.events(s, d)
         .select(col("event_type"),
           expr("CAST(datediff(CAST(ts AS DATE), DATE'2024-01-01') AS INT) div 7").as("week"),
-          graft.functions.Kmv.hash52Col(s, col("user_id").cast("string")).as("uh"))
+          graft.functions.Kmv.hash52Col(col("user_id").cast("string")).as("uh"))
         .groupBy("event_type", "week")
-        .agg(graft.functions.Kmv.stateHashed(s, col("uh"), k).as("state"))
+        .agg(graft.functions.Kmv.stateHashed(col("uh"), k).as("state"))
         .write.mode("overwrite").parquet(store)
       // rollups from STORED states only — no events scan below this line
       val st = s.read.parquet(store)

@@ -100,8 +100,8 @@ object Profile {
         val splits = df.queryExecution.toRdd.getNumPartitions
         val wide = if (splits < 2 * cores) df.repartition(2 * cores) else df
         wide.select(col("*") +: fields.map { f =>
-          graft.functions.Kmv.hash52Col(df.sparkSession,
-            canonical(col(f.name), f.dataType)).as(s"__h52_${f.name}")
+          graft.functions.Kmv.hash52Col(canonical(col(f.name), f.dataType))
+            .as(s"__h52_${f.name}")
         }: _*)
       }
     // exact: one shared cache, one native COUNT(DISTINCT) job per column,
@@ -132,8 +132,8 @@ object Profile {
       val c = col(f.name)
       val base = Seq(count(c).as(s"${f.name}__nonnull")) ++
         (if (exact) Nil
-         else Seq(graft.functions.Kmv.distinctCountHashed(
-           df.sparkSession, col(s"__h52_${f.name}")).as(s"${f.name}__distinct")))
+         else Seq(graft.functions.Kmv.distinctCountHashed(col(s"__h52_${f.name}"))
+           .as(s"${f.name}__distinct")))
       val typed = f.dataType match {
         case _: NumericType => Seq(
           min(c).cast("double").as(s"${f.name}__min_num"),

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The `spark.sql.extensions` entry point: a session built with
   * GraftExtensions can call the graft functions from plain SQL text, and
-  * the SQL results match the Scala-API (registry-route) results exactly. */
+  * the SQL results match the Scala-API (directly built) results exactly. */
 class GraftExtensionsSpec extends AnyFunSuite {
 
   test("a withExtensions session exposes graft functions to plain SQL") {

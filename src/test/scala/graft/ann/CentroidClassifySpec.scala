@@ -18,7 +18,7 @@ class CentroidClassifySpec extends SparkSpec {
     }
     val e = rows.map(r => (r._1, r._2)).toDF("vec_id", "emb")
     val d = rows.map(r => (r._1, r._3)).toDF("doc_id", "source")
-    val out = CentroidClassify.classifyFrames(spark, e, d).collect()
+    val out = CentroidClassify.classifyFrames(e, d).collect()
     assert(out.length == 40)
     out.foreach { r =>
       assert(r.getBoolean(4), s"doc ${r.getLong(0)} predicted ${r.getString(2)}")

@@ -35,7 +35,7 @@ class IvfIncrementalSpec extends SparkSpec {
     val centRows = IndexStore.table(spark, appended, head, "centroids").sortBy(_.int("cell"))
     val cents = centRows.map(_.doubles("centroid")).toArray
     val full = emb.select(col("vec_id"), col("emb"),
-      graft.functions.NearestCell.nearest(spark, col("emb"), cents).as("cell"))
+      graft.functions.NearestCell.nearest(col("emb"), cents).as("cell"))
     IndexStore.build(spark, rebuilt, "spec rebuild") {
       (full, Seq(("centroids", Seq("cell" -> "int", "centroid" -> "array<double>"),
         centRows.map(r => Seq[Any](r.int("cell"), r.doubles("centroid"))))))

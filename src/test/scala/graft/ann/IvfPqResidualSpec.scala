@@ -43,15 +43,14 @@ class IvfPqResidualSpec extends SparkSpec {
   private def bruteTopK(k: Int): Set[(Long, Long)] = {
     val a = clustered.select(col("vec_id").as("query_id"), col("emb").as("qemb"))
       .where(col("query_id") % 40 === 0)
-    val spark2 = spark
     import graft.functions.GraftFunctions.dot
     val b = clustered
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id"))
     a.crossJoin(b).where(col("vec_id") =!= col("query_id"))
       .withColumn("cosine",
-        dot(spark2, col("qemb"), col("emb")) /
-          (sqrt(dot(spark2, col("qemb"), col("qemb"))) * sqrt(dot(spark2, col("emb"), col("emb")))))
+        dot(col("qemb"), col("emb")) /
+          (sqrt(dot(col("qemb"), col("qemb"))) * sqrt(dot(col("emb"), col("emb")))))
       .withColumn("rank", row_number().over(w)).where(col("rank") <= k)
       .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
   }

@@ -4,49 +4,27 @@ import graft.SparkSpec
 import graft.functions.NearestCell
 import org.apache.spark.sql.functions._
 
-/** The function-registry contract of [[NearestCell]]: registrations are
-  * keyed by centroid CONTENT, so re-running a registered ANN query against
-  * the same memoized fit reuses one entry instead of growing the registry
-  * (and pinning a fresh k·d snapshot) per execution — the round-11 ADVICE
-  * leak. Distinct matrices still get distinct entries, and a dropped entry
-  * releases its snapshot. */
+/** [[NearestCell]] binds its centroid matrix into the expression itself:
+  * re-running an ANN query against the same fit neither grows the
+  * session's function registry nor changes the assignment (the round-11
+  * ADVICE leak was one registry entry, and one pinned k·d snapshot, per
+  * execution). */
 class NearestCellRegistrySpec extends SparkSpec {
 
   private val m1 = Array(Array(0.0, 0.0), Array(1.0, 1.0))
-  private val m2 = Array(Array(0.0, 0.0), Array(2.0, 2.0))
-
-  test("transient registrations are per-call unique (drop is race-free); " +
-    "shared registrations key by content") {
-    // nearestNamed: unique names even for IDENTICAL matrices — one eager
-    // caller's drop can never yank a concurrent caller's registration
-    val (n1, _) = NearestCell.nearestNamed(spark, col("emb"), m1)
-    val (n1again, _) = NearestCell.nearestNamed(spark, col("emb"), m1.map(_.clone()))
-    val (n2, _) = NearestCell.nearestNamed(spark, col("emb"), m2)
-    assert(n1 != n1again, "transient registrations must be per-call unique")
-    assert(n1 != n2)
-    Seq(n1, n1again, n2).foreach(NearestCell.drop(spark, _))
-    // nearest: equal content must resolve to ONE registry name (asserted
-    // indirectly by the growth test below; here check determinism of the
-    // shared-name prefix via two registrations not growing the registry)
-    val before = spark.sessionState.functionRegistry.listFunction().size
-    NearestCell.nearest(spark, col("emb"), m1)
-    NearestCell.nearest(spark, col("emb"), m1.map(_.clone()))
-    val after = spark.sessionState.functionRegistry.listFunction().size
-    assert(after - before <= 1, "equal content must share one shared-path registration")
-  }
 
   test("repeated registration does not grow the registry") {
     import spark.implicits._
     val before = spark.sessionState.functionRegistry.listFunction().size
     val df = Seq((1L, Seq(0.1, 0.2)), (2L, Seq(0.9, 1.1))).toDF("vec_id", "emb")
     val cells = (1 to 5).map { _ =>
-      df.select(NearestCell.nearest(spark, col("emb"), m1).as("cell"))
+      df.select(NearestCell.nearest(col("emb"), m1).as("cell"))
         .collect().map(_.getInt(0)).toSeq
     }
     val after = spark.sessionState.functionRegistry.listFunction().size
     assert(cells.distinct.size == 1, "assignment must be deterministic across calls")
     assert(cells.head == Seq(0, 1))
-    assert(after - before <= 1,
+    assert(after == before,
       s"5 identical-fit queries grew the registry by ${after - before} entries")
   }
 }

@@ -18,7 +18,7 @@ class KmvSpec extends SparkSpec {
     import spark.implicits._
     // 500 distinct keys, each repeated 4× — well under k
     val df = ids(500).flatMap(s => Seq.fill(4)(s)).toDF("s").repartition(8)
-    val est = df.agg(Kmv.distinctCount(spark, col("s"), 2048)).head().getLong(0)
+    val est = df.agg(Kmv.distinctCount(col("s"), 2048)).head().getLong(0)
     assert(est === 500L)
   }
 
@@ -27,7 +27,7 @@ class KmvSpec extends SparkSpec {
     val n = 50000
     val df = ids(n).toDF("s").repartition(16)
     val k = 2048
-    val est = df.agg(Kmv.distinctCount(spark, col("s"), k)).head().getLong(0)
+    val est = df.agg(Kmv.distinctCount(col("s"), k)).head().getLong(0)
     // brute-force replay: sort all 52-bit hashes, apply (k−1)·2^52 div h_k
     val hashes = ids(n).map(s => Kmv.hash52(UTF8String.fromString(s))).distinct.sorted
     val expected = ((k - 1).toLong * Kmv.Scale) / hashes(k - 1)
@@ -43,8 +43,8 @@ class KmvSpec extends SparkSpec {
     def run(parts: Int): (Long, Seq[Double]) = {
       val df = rows.toDF("s", "v").repartition(parts)
       val r = df.agg(
-        Kmv.distinctCount(spark, col("s"), 512).as("d"),
-        Kmv.sample(spark, col("s"), col("v"), 512).as("samp")).head()
+        Kmv.distinctCount(col("s"), 512).as("d"),
+        Kmv.sample(col("s"), col("v"), 512).as("samp")).head()
       (r.getLong(0), r.getSeq[Double](1))
     }
     assert(run(1) === run(32), "bottom-k union must be order/partitioning independent")
@@ -54,7 +54,7 @@ class KmvSpec extends SparkSpec {
     import spark.implicits._
     val vals = (1 to 1000).map(i => (s"k$i", i.toDouble * 0.5))
     val df = vals.toDF("s", "v").repartition(8)
-    val got = df.agg(Kmv.sample(spark, col("s"), col("v"), 2048).as("samp"))
+    val got = df.agg(Kmv.sample(col("s"), col("v"), 2048).as("samp"))
       .select(Kmv.quantileFromSorted(col("samp"), 0.5).as("p50"),
         Kmv.quantileFromSorted(col("samp"), 0.95).as("p95"))
       .head()
@@ -68,11 +68,11 @@ class KmvSpec extends SparkSpec {
     val rows = ids(5000).map(s => (s, s.length.toDouble))
     val df = rows.toDF("s", "v").repartition(8)
     val direct = df.agg(
-      Kmv.distinctCount(spark, col("s"), 512).as("d"),
-      Kmv.sample(spark, col("s"), col("v"), 512).as("samp")).head()
-    val pre = df.select(col("v"), Kmv.hash52Col(spark, col("s")).as("h"))
-      .agg(Kmv.distinctCountHashed(spark, col("h"), 512).as("d"),
-        Kmv.sampleHashed(spark, col("h"), col("v"), 512).as("samp")).head()
+      Kmv.distinctCount(col("s"), 512).as("d"),
+      Kmv.sample(col("s"), col("v"), 512).as("samp")).head()
+    val pre = df.select(col("v"), Kmv.hash52Col(col("s")).as("h"))
+      .agg(Kmv.distinctCountHashed(col("h"), 512).as("d"),
+        Kmv.sampleHashed(col("h"), col("v"), 512).as("samp")).head()
     assert(direct.getLong(0) === pre.getLong(0))
     assert(direct.getSeq[Double](1) === pre.getSeq[Double](1))
   }
@@ -81,7 +81,7 @@ class KmvSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq((1L, 1.0), (2L, 2.0)).toDF("id", "v")
     val e = intercept[org.apache.spark.sql.AnalysisException] {
-      df.agg(Kmv.distinctCount(spark, col("id"))).collect()
+      df.agg(Kmv.distinctCount(col("id"))).collect()
     }
     assert(e.getMessage.toLowerCase.contains("graft_kmv_distinct"))
   }
@@ -90,8 +90,8 @@ class KmvSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq.empty[(String, Double)].toDF("s", "v")
     val r = df.agg(
-      Kmv.distinctCount(spark, col("s")).as("d"),
-      Kmv.sample(spark, col("s"), col("v")).as("samp"))
+      Kmv.distinctCount(col("s")).as("d"),
+      Kmv.sample(col("s"), col("v")).as("samp"))
       .select(col("d"), Kmv.quantileFromSorted(col("samp"), 0.5).as("p50")).head()
     assert(r.getLong(0) === 0L)
     assert(r.isNullAt(1))
@@ -102,8 +102,8 @@ class KmvSpec extends SparkSpec {
     val df = Seq(("a", Some(1.0)), ("b", None), (null, Some(3.0)), ("a", Some(1.0)))
       .toDF("s", "v")
     val r = df.agg(
-      Kmv.distinctCount(spark, col("s")).as("d"),
-      size(Kmv.sample(spark, col("s"), col("v"))).as("n")).head()
+      Kmv.distinctCount(col("s")).as("d"),
+      size(Kmv.sample(col("s"), col("v"))).as("n")).head()
     assert(r.getLong(0) === 2L) // a, b — null key skipped
     assert(r.getInt(1) === 1)   // (a,1.0) deduped; (b,null)/(null,3.0) skipped
   }
@@ -116,13 +116,13 @@ class KmvSpec extends SparkSpec {
     val a = ids(3000).toDF("s")
     val b = (2000 to 6000).map(i => s"id-$i").toDF("s")
     def state(df: org.apache.spark.sql.DataFrame) = df.agg(
-      Kmv.stateHashed(spark, Kmv.hash52Col(spark, col("s")), k).as("state"))
+      Kmv.stateHashed(Kmv.hash52Col(col("s")), k).as("state"))
     val states = state(a).unionByName(state(b))
       .agg(collect_list("state").as("states"))
       .select(Kmv.mergeStatesCol(col("states"), k).as("merged"))
     val mergedEst = states.select(Kmv.estimateFromState("merged", k)).head().getLong(0)
     val directEst = a.unionByName(b)
-      .agg(Kmv.distinctCount(spark, col("s"), k)).head().getLong(0)
+      .agg(Kmv.distinctCount(col("s"), k)).head().getLong(0)
     assert(mergedEst === directEst,
       "bottom-k of the union of bottom-k states must equal the union's own sketch")
   }
@@ -133,7 +133,7 @@ class KmvSpec extends SparkSpec {
     val a = ids(100).toDF("s")
     val b = ids(150).toDF("s") // superset overlap: union distinct = 150
     def st(df: org.apache.spark.sql.DataFrame) = df.agg(
-      Kmv.stateHashed(spark, Kmv.hash52Col(spark, col("s")), k).as("state"))
+      Kmv.stateHashed(Kmv.hash52Col(col("s")), k).as("state"))
     val est = st(a).unionByName(st(b))
       .agg(collect_list("state").as("states"))
       .select(Kmv.mergeStatesCol(col("states"), k).as("merged"))
