@@ -20,11 +20,7 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"
     val bars = graft.features.Bars.daily(graft.Tables.events(spark, dir))
-    val features = graft.features.Recursive.withRecursive(
-      graft.features.Indicators.withHighLow(
-        graft.features.Indicators.windowed(bars, Seq(3, 5, 10, 20, 50))))
-    graft.signals.Strategies.all(features, ribbonPeriods = Seq(3, 5, 10, 20), trendSma = 20)
-      .join(bars, Seq("symbol_id", "date"))
+    SignalQueries.signals(SignalQueries.features(bars)).join(bars, Seq("symbol_id", "date"))
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */

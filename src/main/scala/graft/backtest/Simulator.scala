@@ -2,7 +2,6 @@ package graft.backtest
 
 import java.sql.Date
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.plans.SortedGroupScan
@@ -18,6 +17,11 @@ import graft.plans.SortedGroupScan
   * a constant fraction of initial capital, so a per-(strategy, symbol)
   * ordered scan is semantics-preserving and embarrassingly parallel — one
   * [[SortedGroupScan]] shuffle, O(1) state per group, linear in signals.
+  *
+  * Each strategy's last signal date is a `groupBy` maximum broadcast back to
+  * the signals, not a window partitioned by strategy: the scan's input is
+  * then clustered by (strategy, symbol), never inherited from an 11-way
+  * strategy partitioning whose largest partition holds a whole strategy.
   */
 object Simulator {
   val Cooldown = 60
@@ -61,8 +65,11 @@ object Simulator {
                initialCapital: Double = InitialCapital,
                positionSize: Double = PositionSize,
                commission: Double = Commission): DataFrame = {
-    val withLast = signals.withColumn("strategy_last_date",
-      max(col("date")).over(Window.partitionBy("trade_strategy")))
+    val lastDates = signals.groupBy(col("trade_strategy").as("last_strategy"))
+      .agg(max(col("date")).as("strategy_last_date"))
+    val withLast = signals
+      .join(broadcast(lastDates), col("trade_strategy") <=> col("last_strategy"))
+      .drop("last_strategy")
     val schema = withLast.schema
     val iStrat = schema.fieldIndex("trade_strategy")
     val iSym = schema.fieldIndex("symbol_id")

@@ -1,7 +1,7 @@
 package graft.dedup
 
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** MinHash + banded LSH near-duplicate detection — the scale path for

@@ -45,9 +45,9 @@ object Orchestrator {
   }
 
   /** The reference's daily pipeline shape: bars → features → signals, with
-    * fundamentals and sentiment independent branches. Configured with the
-    * SAME window/ribbon periods as the registered signal queries
-    * (SignalQueries — testdata histories are 30 bars), so the registered
+    * fundamentals and sentiment independent branches. Features and signals
+    * are built by the registered signal queries' own functions
+    * (`SignalQueries.features`/`signals`), so the registered
     * `pipeline_daily_run` status report can reuse their oracle CTEs.
     *
     * The two expensive stages memoize their output per (session, dir,
@@ -62,8 +62,8 @@ object Orchestrator {
     * benched through the always-fresh stage registrations (feat_*,
     * sig_*, fund_* queries), so memoizing the orchestration demo masks
     * nothing the per-stage baselines don't already gate. localCheckpoint
-    * also truncates the ~60-window recursive lineage, the same reasoning
-    * as SignalQueries.signalFeatures. */
+    * also truncates the feature lineage, the same reasoning as
+    * SignalQueries.signalFeatures. */
   private def eventsFingerprint(s: SparkSession, d: String): String =
     graft.sources.SourceFingerprint.of(s, d, "events")
 
@@ -72,15 +72,11 @@ object Orchestrator {
     Step("features", Seq("bars"), (s, d, r) =>
       graft.sqlx.FrameCache.getOrElseUpdate(
         graft.sqlx.FrameCache.key(s, "pipeline-features", d, eventsFingerprint(s, d)))(
-        graft.features.Recursive.withRecursive(
-          graft.features.Indicators.withHighLow(
-            graft.features.Indicators.windowed(r("bars"), Seq(3, 5, 10, 20, 50))))
-          .transform(graft.sqlx.Lineage.truncate))),
+        graft.queries.SignalQueries.features(r("bars")).transform(graft.sqlx.Lineage.truncate))),
     Step("signals", Seq("features"), (s, d, r) =>
       graft.sqlx.FrameCache.getOrElseUpdate(
         graft.sqlx.FrameCache.key(s, "pipeline-signals", d, eventsFingerprint(s, d)))(
-        graft.signals.Strategies.all(r("features"),
-          ribbonPeriods = Seq(3, 5, 10, 20), trendSma = 20).transform(graft.sqlx.Lineage.truncate))),
+        graft.queries.SignalQueries.signals(r("features")).transform(graft.sqlx.Lineage.truncate))),
     Step("fundamentals", Nil, (s, d, _) => graft.fundamentals.Statements.full(s, d)),
     Step("sentiment", Nil, (s, d, _) => graft.text.SentimentAgg.aggregated(s, d)))
 }

@@ -37,8 +37,12 @@ object Ewm {
   * EMA ladder (8/21/34/55) + ratios + 8/21 cross, RSI(7,14) + zone flags,
   * MACD(12,26,9) + histogram + bullish, ATR(10,14) + pct.
   *
-  * One [[SortedGroupScan]] pass per table: one shuffle keyed by symbol,
-  * every group streamed in date order with O(1) state. Semantics (SURVEY.md
+  * One [[SortedGroupScan]] pass per table: every symbol streamed in date
+  * order with O(1) state. The scan needs its input clustered by symbol and
+  * sorted by (symbol, date), which the windowed ladder's output already is,
+  * so the signal-feature build pays one exchange and one sort for both
+  * halves; over raw bars, or any input clustered otherwise, the planner adds
+  * them, and a bucketed read by symbol needs no exchange. Semantics (SURVEY.md
   * §3): EMA = ewm(span, adjust=True) from the first row; RSI = 100·G/(G+L)
   * with G/L = ewm(α=1/p, adjust=True) over gains/losses, null until p diffs;
   * MACD/signal from the first row; ATR = ewm(α=1/p) over TR with

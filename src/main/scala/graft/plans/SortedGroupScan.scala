@@ -4,16 +4,21 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
-/** Distributed per-key ordered scan: `repartition(key)` →
-  * `sortWithinPartitions(key, order)` → streaming `mapPartitions` that resets
-  * scanner state on key change.
+/** Distributed per-key ordered scan: `groupBy(keys).flatMapSortedGroups(order)`
+  * streams every group through a [[SortedGroupScan.Scanner]] in `order`.
   *
   * This is the Spark-native replacement for the reference's one-symbol-at-a-
-  * time Python loop (transform_time_series_daily_adjusted.py:725-791): one
-  * shuffle for the whole table, every group processed in a single linear pass
-  * with O(1) state, no per-group materialization. The same cost shape as a
-  * shuffle-based aggregation, so it scales to arbitrarily many keys and long
-  * histories (state per key does not grow with history length).
+  * time Python loop (transform_time_series_daily_adjusted.py:725-791): every
+  * group processed in a single linear pass with O(1) state, no per-group
+  * materialization. The same cost shape as a shuffle-based aggregation, so it
+  * scales to arbitrarily many keys and long histories (state per key does not
+  * grow with history length).
+  *
+  * The plan is a plain `MapGroups` node that requires its child clustered by
+  * `keys` and sorted by `keys ++ order`, so the planner adds an exchange and
+  * a sort only where the input lacks them: a scan over the windowed feature
+  * ladder reuses the ladder's exchange and sort by symbol, and a bucketed read
+  * plans none.
   *
   * Used for the recursive indicator family (EMA/RSI/MACD/ATR — recurrences
   * SQL window frames can't express) and the backtest trade state machine.
@@ -35,43 +40,17 @@ object SortedGroupScan {
       orderCols: Seq[Column],
       outSchema: StructType,
       scanner: Scanner[S]): DataFrame = {
-    val spark = df.sparkSession
-    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val keyIdx = keyCols.map(df.schema.fieldIndex)
-    val sorted = df
-      .repartition(shufflePartitions, keyCols.map(col): _*)
-      .sortWithinPartitions(keyCols.map(col) ++ orderCols: _*)
-    sorted.mapPartitions { rows =>
-      new Iterator[Row] {
-        private var state: S = scanner.init
-        private var currentKey: Seq[Any] = null
-        private var pending: Iterator[Row] = Iterator.empty
-        private val in = rows.buffered
-
-        private def keyOf(r: Row): Seq[Any] = keyIdx.map(r.get)
-
-        override def hasNext: Boolean = {
-          while (!pending.hasNext && (in.hasNext || currentKey != null)) {
-            if (in.hasNext) {
-              val k = keyOf(in.head)
-              if (currentKey == null) { currentKey = k; state = scanner.init }
-              if (k == currentKey) {
-                val (s2, out) = scanner.onRow(state, in.next())
-                state = s2
-                pending = out
-              } else {
-                pending = scanner.onGroupEnd(state)
-                currentKey = null
-              }
-            } else {
-              pending = scanner.onGroupEnd(state)
-              currentKey = null
-            }
-          }
-          pending.hasNext
-        }
-        override def next(): Row = { if (!hasNext) throw new NoSuchElementException; pending.next() }
-      }
-    }(Encoders.row(outSchema))
+    val keySchema = StructType(keyCols.map(df.schema(_)))
+    df.groupBy(keyCols.map(col): _*)
+      .as(Encoders.row(keySchema), Encoders.row(df.schema))
+      .flatMapSortedGroups(orderCols: _*) { (_: Row, rows: Iterator[Row]) =>
+        var state = scanner.init
+        rows.flatMap { r =>
+          val (next, out) = scanner.onRow(state, r)
+          state = next
+          out
+        } ++ scanner.onGroupEnd(state)
+      }(Encoders.row(outSchema))
+      .toDF()
   }
 }

@@ -4,8 +4,6 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.backtest.{Enrich, Metrics, Simulator}
 import graft.etl.SymbolUniverse
-import graft.features.Bars
-import graft.signals.Strategies
 import OracleSql.rd
 
 /** Backtest queries: the stateful trade simulation + metrics register

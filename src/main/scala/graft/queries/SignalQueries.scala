@@ -20,32 +20,43 @@ import OracleSql._
   */
 object SignalQueries {
 
+  /** The registered research configuration. Testdata histories are 30
+    * bars, so the ribbon and trend strategies read shorter SMAs than the
+    * reference's 5/10/20/50 and 50 defaults. */
+  val FeatureSmaPeriods: Seq[Int] = Seq(3, 5, 10, 20, 50)
+  val RibbonPeriods: Seq[Int] = Seq(3, 5, 10, 20)
+  val TrendSma: Int = 20
+
+  /** The signal-feature frame over daily bars: the windowed ladder with the
+    * 20-day breakout high/low, then the recursive family, which reuses the
+    * ladder's exchange and sort by symbol. Every caller of the research path
+    * (the registered queries, `SparkEntry.entry`, the daily pipeline) builds
+    * its features here. */
+  def features(bars: DataFrame): DataFrame =
+    Recursive.withRecursive(Indicators.windowed(bars, FeatureSmaPeriods, breakout = Some(20)))
+
+  /** All 11 strategies over [[features]] at the registered configuration. */
+  def signals(features: DataFrame): DataFrame =
+    Strategies.all(features, RibbonPeriods, TrendSma)
+
   /** Spark-side feature table for signals — memoized + persisted per
     * (session, dir): eleven strategy queries and the backtest all reuse one
-    * cached build instead of re-running the shuffle + recursive scan. */
+    * cached build instead of re-running the shuffle + recursive scan.
+    * localCheckpoint (not persist) truncates the lineage so the strategy
+    * plans and the backtest start from a materialized leaf. */
   def signalFeatures(s: SparkSession, d: String): DataFrame =
     graft.sqlx.FrameCache.getOrElseUpdate(graft.sqlx.FrameCache.key(s, "sigfeat", d)) {
-      val bars = Bars.daily(Tables.events(s, d))
-      // localCheckpoint (not persist): truncates the ~60-window-expression
-      // lineage so the 11 strategy plans + backtest start from a
-      // materialized leaf — without it every downstream task serializes the
-      // full feature expression tree (>1.3 MiB task binaries)
-      Recursive.withRecursive(
-        Indicators.withHighLow(Indicators.windowed(bars, Seq(3, 5, 10, 20, 50))))
-        .transform(graft.sqlx.Lineage.truncate)
+      features(Bars.daily(Tables.events(s, d))).transform(graft.sqlx.Lineage.truncate)
     }
 
-  /** Memoized union of all 11 strategies over the shared feature frame —
-    * one execution per (session, dir) serves the chart frame, the daily
-    * recommendation scorer, the pipeline status report, the backtest
-    * simulation input and the bucketed signal table, instead of each
-    * consumer re-running the 11-branch union. localCheckpoint (like
-    * [[signalFeatures]]) also truncates the 11-way union's lineage so
-    * downstream task binaries stay small. */
+  /** Memoized [[signals]] over the shared feature frame — one execution per
+    * (session, dir) serves the chart frame, the daily recommendation scorer,
+    * the pipeline status report, the backtest simulation input and the
+    * bucketed signal table. localCheckpoint (like [[signalFeatures]])
+    * truncates its lineage so downstream task binaries stay small. */
   def allSignals(s: SparkSession, d: String): DataFrame =
     graft.sqlx.FrameCache.getOrElseUpdate(graft.sqlx.FrameCache.key(s, "sigall", d)) {
-      Strategies.all(signalFeatures(s, d), ribbonPeriods = Seq(3, 5, 10, 20), trendSma = 20)
-        .transform(graft.sqlx.Lineage.truncate)
+      signals(signalFeatures(s, d)).transform(graft.sqlx.Lineage.truncate)
     }
 
   private def run(f: DataFrame => DataFrame): (SparkSession, String) => DataFrame =
@@ -319,14 +330,14 @@ object SignalQueries {
     run(Strategies.williamsExtremes), lagOracle(byName("williams_extremes")))
 
   private val sigMaRibbon = Q(
-    run(f => Strategies.maRibbon(f, Seq(3, 5, 10, 20))),
+    run(Strategies.maRibbon(_, RibbonPeriods)),
     lagOracle(byName("ma_ribbon")))
 
   private val sigPriceBreakout = Q(
     run(Strategies.priceBreakout(_)), lagOracle(byName("price_breakout")))
 
   private val sigTrendFollowing = Q(
-    run(f => Strategies.trendFollowing(f, smaPeriod = 20)),
+    run(Strategies.trendFollowing(_, TrendSma)),
     lagOracle(byName("trend_following")))
 
   private val sigRsiDivergence = Q(

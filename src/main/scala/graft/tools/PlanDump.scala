@@ -4,17 +4,36 @@ import java.nio.file.{Files, Paths}
 
 /** Dev utility: dump formatted physical plans of representative queries to
   * docs/PLANS.md — the `.explain("formatted")` audit trail for the SURVEY §5
-  * design rules (pushdown, pruning, exchange counts, join strategies). */
+  * design rules (pushdown, pruning, exchange counts, join strategies).
+  *
+  * The output is normalized so that a regeneration differs only where a plan
+  * does: expression, RDD and `plan_id` ids, lambda and object hashes, and the
+  * per-run parts of `graft-*` store paths (temp root, run hash, uuids,
+  * version numbers) are replaced by fixed tokens. Broadcast size estimates
+  * scale with the driver heap, so run it with a 4 GB heap:
+  * `SPARK_DRIVER_MEM=4g sbt "runMain graft.tools.PlanDump"`. */
 object PlanDump {
+  /** Replaces the run-dependent tokens of an explain string. */
+  def normalize(plan: String): String = Seq(
+    """file:[^\s,\]]*/(graft-[a-z-]+?)-[0-9a-f]{12}""" -> "file:<tmp>/$1",
+    """[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}""" -> "<uuid>",
+    """(<tmp>/graft-[^\s,\]]*?\b(?:v|gen|w))=\d+""" -> "$1=N",
+    """#\d+""" -> "#N",
+    """plan_id=\d+""" -> "plan_id=N",
+    """RDD\[\d+\]""" -> "RDD[N]",
+    """\$\$Lambda\$?[0-9]*/0x[0-9a-f]+@[0-9a-f]+""" -> "\\$\\$Lambda",
+    """@[0-9a-f]{6,8}\b""" -> "@hash"
+  ).foldLeft(plan) { case (s, (re, to)) => s.replaceAll(re, to) }
+
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     // 4 partitions: the committed plans are read against the spec suite's session
     val spark = graft.Session.local(4)
     val picks = Seq(
       "bars_daily" -> "one hash aggregation, pruned scan (no props/event_type)",
-      "feat_sma" -> "whole windowed ladder: single exchange + sort after the bars agg",
-      "feat_ema" -> "recursive scan: one exchange, sortWithinPartitions, mapPartitions",
-      "sig_ema_crossover" -> "signals: filter + lag windows over the (cached) feature table",
+      "feat_sma" -> "whole windowed ladder: one exchange + sort after the bars agg, every aggregate in one Window (OBV's running sum in a second)",
+      "feat_ema" -> "recursive scan: MapGroups requiring symbol clustering + (symbol, date) order, so the planner adds the one exchange + sort",
+      "sig_ema_crossover" -> "signals: the rule evaluator over the (cached) feature table: keep flag, one ignore-nulls lag Window, explode + filter",
       "fund_balance_sheet" ->
         "window ladder over a scan of the truncated line-item base: one pass per partitioning, unread windows pruned",
       "dedup_minhash" -> "banded bucket equi-join + candidate-restricted exact verify, no cartesian",
@@ -92,12 +111,14 @@ object PlanDump {
     val sb = new StringBuilder
     sb.append("# Physical-plan audit (generated by graft.tools.PlanDump at sf0.001)\n\n")
     sb.append("Each section is `df.explain(\"formatted\")` output for a representative\n")
-    sb.append("registered query, with the design intent it demonstrates.\n")
+    sb.append("registered query, with the design intent it demonstrates. Run-dependent\n")
+    sb.append("ids, hashes and store paths are normalized; generated with a ")
+    sb.append(s"${Runtime.getRuntime.maxMemory / (1L << 30)} GiB driver heap.\n")
     picks.foreach { case (name, why) =>
       val df = graft.SparkEntry.queries(name)(spark, dir)
       sb.append(s"\n## $name — $why\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+      sb.append(normalize(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)))
       sb.append("\n```\n")
     }
     Files.createDirectories(Paths.get("docs"))

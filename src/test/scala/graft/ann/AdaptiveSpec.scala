@@ -1,7 +1,6 @@
 package graft.ann
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** The adaptive-capacity rules' load-bearing properties: the floors must
   * decide EXACTLY at the driver-SF boundary (2 048 vectors) — that is

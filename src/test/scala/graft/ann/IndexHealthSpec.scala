@@ -1,7 +1,6 @@
 package graft.ann
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** The drift monitor actually DETECTS drift: a distribution-shifted
   * increment must push mse_increment well past mse_base (the documented

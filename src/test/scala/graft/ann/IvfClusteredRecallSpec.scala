@@ -1,7 +1,6 @@
 package graft.ann
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** The IVF selling point (IvfIndex.scala header): on CLUSTERED data —
   * the shape of real embedding corpora — probing nProbe ≪ nCells cells

@@ -15,7 +15,6 @@ import org.apache.spark.sql.functions._
   * improvement over its own init.
   */
 class IvfDistributedFitSpec extends SparkSpec {
-  import spark.implicits._
 
   private val N = 20000
   private val K = 10000

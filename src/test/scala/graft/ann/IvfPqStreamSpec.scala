@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
   * at-least-once delivery into foreachBatch) is a no-op guarded by the
   * head version's applied id. */
 class IvfPqStreamSpec extends SparkSpec {
-  import spark.implicits._
 
   private lazy val e = graft.Tables.embeddings(spark, sf("sf0.001"))
     .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))

@@ -9,7 +9,6 @@ import org.apache.spark.sql.functions._
   * bound, and a single giant star converges immediately without any
   * set-valued aggregation holding the neighborhood in one task. */
 class CcScaleSpec extends SparkSpec {
-  import spark.implicits._
 
   private def rounds(edges: org.apache.spark.sql.DataFrame, maxIter: Int): Int = {
     var e = edges

@@ -1,7 +1,6 @@
 package graft.dedup
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** The planted-hot-bucket skew guard (MinHashLSH.MaxBucketSize): one
   * degenerate bucket with far more members than the cap must contribute

@@ -1,7 +1,6 @@
 package graft.etl
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** CDC semantics on a hand fixture: latest-wins with DELETE, the
   * delete-then-reinsert race, and SCD2 intervals closed by any next

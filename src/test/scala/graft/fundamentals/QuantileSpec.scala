@@ -1,7 +1,6 @@
 package graft.fundamentals
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Unit contract of the distributed interpolated quantile behind the FCF
   * bounds: numpy-default interpolation on a known fixture, stability under

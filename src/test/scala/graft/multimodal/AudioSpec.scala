@@ -63,7 +63,6 @@ class AudioSpec extends SparkSpec {
   }
 
   test("frame energies partition the total energy exactly") {
-    import spark.implicits._
     val recs = Audio.records(spark, sf("sf0.001")).limit(20)
     val frames = Audio.frameEnergies(recs).collect()
     val feats = recs.collect().map { r =>

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** DatasetDiff fixture semantics the registered rollup can't show:
   * per-row status assignment, and the fingerprint's null-safety — NULL

@@ -72,6 +72,60 @@ class PlanAuditSpec extends SparkSpec {
     assert(exchanges.size <= 2, s"expected <=2 exchanges, got ${exchanges.size}")
   }
 
+  private def windows(plan: org.apache.spark.sql.execution.SparkPlan) =
+    allNodes(plan).collect { case w: org.apache.spark.sql.execution.window.WindowExec => w }
+  private def exchanges(plan: org.apache.spark.sql.execution.SparkPlan) =
+    allNodes(plan).collect { case e: ShuffleExchangeExec => e }
+  private def bars = graft.features.Bars.daily(graft.Tables.events(spark, sf("sf0.001")))
+
+  test("signal features: one window pass and the recursive scan share the ladder's exchange") {
+    val plan = executed(graft.queries.SignalQueries.features(bars))
+    // the bars aggregation and the ladder's symbol exchange; the sliding
+    // frames share one Window, the running frame (OBV sums over a lag) a second
+    assert(windows(plan).size <= 2, s"expected <=2 windows, got ${windows(plan).size}:\n$plan")
+    assert(exchanges(plan).size <= 2, s"expected <=2 exchanges, got ${exchanges(plan).size}:\n$plan")
+  }
+
+  test("all strategies: one exchange for the eleven strategies, divergence included") {
+    val features = graft.queries.SignalQueries.signalFeatures(spark, sf("sf0.001"))
+      .repartition(3, col("date")) // clustered by anything but the symbol
+    val plan = executed(graft.queries.SignalQueries.signals(features))
+    val byKey = exchanges(plan).map(_.outputPartitioning.toString)
+    assert(byKey.size <= 2 && byKey.count(_.contains("symbol_id")) == 1,
+      s"expected one symbol exchange besides the input's, got $byKey:\n$plan")
+  }
+
+  test("the recursive scan over a symbol-clustered input plans no exchange") {
+    val clustered = bars.repartition(col("symbol_id")).sortWithinPartitions("symbol_id", "date")
+    val before = exchanges(executed(clustered)).size
+    val plan = executed(graft.features.Recursive.withRecursive(clustered))
+    assert(exchanges(plan).size == before, s"the scan added an exchange:\n$plan")
+    assert(allNodes(plan).exists(_.isInstanceOf[org.apache.spark.sql.execution.MapGroupsExec]),
+      s"expected a MapGroups scan:\n$plan")
+    // a bucketed read is clustered by its bucket key: no exchange at all
+    graft.sources.BucketedTables.write(bars, "plan_audit_bars", Seq("symbol_id"), 4, Seq("date"))
+    val bucketed = executed(graft.features.Recursive.withRecursive(
+      graft.sources.BucketedTables.read(spark, "plan_audit_bars")))
+    assert(exchanges(bucketed).isEmpty, s"bucketed recursive scan exchanged:\n$bucketed")
+  }
+
+  test("backtest: the simulation's scan input is exchanged on (strategy, symbol)") {
+    import spark.implicits._
+    val signals = Seq(("s", 1L, java.sql.Date.valueOf("2024-01-01"), true, false, 10.0))
+      .toDF("trade_strategy", "symbol_id", "date", "buy_signal", "sell_signal", "close")
+    val plan = executed(graft.backtest.Simulator.simulate(signals))
+    // the exchanges moving signal rows (not the per-strategy max's 11 rows)
+    val keys = exchanges(plan).filter(_.child.output.exists(_.name == "buy_signal"))
+      .map(_.outputPartitioning).collect {
+        case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+          h.references.map(_.name).toSet
+      }
+    assert(keys == Seq(Set("trade_strategy", "symbol_id")),
+      s"expected one (strategy, symbol) exchange of the signals, got $keys:\n$plan")
+    // and no window partitioned by the strategy alone
+    assert(windows(plan).isEmpty, s"strategy window in the simulation plan:\n$plan")
+  }
+
   test("quality scores: no single-partition window touches the data (distributed quantile)") {
     val df = graft.fundamentals.QualityScores.scores(spark, sf("sf0.001"))
     val windows = allNodes(executed(df)).collect {

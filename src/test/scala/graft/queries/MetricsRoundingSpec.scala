@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions.col
 
 /** backtest_metrics on a 5th-decimal rounding tie: two trades whose pnl
   * averages to −287.77455 — the binary double lies just above the tie, so

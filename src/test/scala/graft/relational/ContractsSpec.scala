@@ -1,7 +1,6 @@
 package graft.relational
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Key-integrity contracts (Contracts.scala): the testdata tables honor
   * their declared PKs, and planted violations (duplicate key, NULL key)

@@ -1,7 +1,6 @@
 package graft.relational
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Profile operator: the approx (HLL++) scale path tracks the exact
   * registered path, and its plan carries no Expand (the exact path's N×

@@ -1,7 +1,6 @@
 package graft.retrieval
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Hand-computed fixtures for the retrieval metrics: perfect retrieval
   * scores 1.0 across the board, a known partial ranking reproduces the

@@ -47,7 +47,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("stream-static enrichment broadcast-joins the dimension per micro-batch") {
-    import org.apache.spark.sql.functions._
     implicit val sqlCtx = spark.sqlContext
     val dim = Seq((1L, "AUTOMOBILE"), (2L, "MACHINERY")).toDF("user_id", "segment")
     val in = MemoryStream[Ev]

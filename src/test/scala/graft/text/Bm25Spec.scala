@@ -54,7 +54,6 @@ class Bm25Spec extends SparkSpec {
   }
 
   test("queries never retrieve themselves; ranks contiguous from 1") {
-    import spark.implicits._
     val got = Bm25.moreLikeThis(spark, sf("sf0.001"), k = 10).collect()
     assert(got.forall(r => r.getAs[Long]("query_id") != r.getAs[Long]("doc_id")))
     val byQ = got.groupBy(_.getAs[Long]("query_id"))

@@ -1,7 +1,6 @@
 package graft.text
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Differential test of the distributed BPE trainer against an independent
   * single-node reference implementation (greedy leftmost non-overlapping

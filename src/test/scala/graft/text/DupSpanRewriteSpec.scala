@@ -1,7 +1,6 @@
 package graft.text
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Exact-substring removal semantics on planted fixtures (w = 4 here):
   * the canonical first occurrence of a repeated window survives, every
