@@ -18,34 +18,57 @@ import graft.Tables
   *    na/nb stay exact — only pairs whose overlap is entirely hot shingles
   *    can be missed). The cap defaults to off so the oracle check stays
   *    bit-exact at test SF.
-  *  - LSH verify (`pairsForCandidates`): exact Jaccard computed only for
-  *    LSH candidate pairs — cost proportional to candidates × shingles/doc,
-  *    never to corpus². This is the verify stage [[MinHashLSH]] uses.
+  *  - LSH verify (`pairsForCandidateSets`): exact Jaccard computed only for
+  *    LSH candidate pairs, by intersecting the two documents' shingle SETS
+  *    (one row per doc, [[shingleSets]]) — each candidate joins its two
+  *    sets by doc id and intersects them in place, so the cost is
+  *    O(candidates × shingles/doc) with no shingle ever exploded or
+  *    shuffled, never O(corpus²). This is the verify stage [[MinHashLSH]]
+  *    uses.
   */
 object Jaccard {
   /** Distinct word-trigram shingle SET of a text column, as one array —
     * the per-row form a stream can compute without aggregation state;
-    * [[shingles]] is its exploded table twin. */
+    * [[shingles]] is its exploded table twin. Linear in the word count:
+    * `w` is split once, outside the lambda, and the lambda reads only its
+    * own (w[i], w[i+1], w[i+2]) struct from the zip of three shifted
+    * slices (a lambda naming `w` would re-split the whole text per
+    * trigram — subexpression elimination does not reach into lambdas). */
   def shingleArray(text: Column): Column = {
     val w = split(trim(text), " ")
+    val k = size(w) - 2
     val tri = when(size(w) >= 3,
-      transform(sequence(lit(1), size(w) - 2),
-        i => concat_ws(" ", element_at(w, i), element_at(w, i + 1), element_at(w, i + 2))))
+      transform(arrays_zip(slice(w, lit(1), k), slice(w, lit(2), k), slice(w, lit(3), k)),
+        t => concat_ws(" ", t.getField("0"), t.getField("1"), t.getField("2"))))
       .otherwise(array().cast("array<string>"))
     array_distinct(tri)
   }
 
-  /** Distinct word-trigram shingles per document. */
+  /** Distinct word-trigram shingles per document. The explode runs over
+    * the expression itself: exploding a projected attribute would let the
+    * optimizer infer a `size(shingles) > 0` filter and inline the whole
+    * shingle build into it a second time. */
   def shingles(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), explode(shingleArray(col("text"))).as("shingle"))
 
-  /** Memoized + persisted shingle index per (session, dir): the exact-pair
-    * self-join reads it twice and the MinHash path reads it for signatures
-    * AND verify — one explode instead of four. */
-  def cachedShingles(spark: SparkSession, dir: String): DataFrame =
-    graft.sqlx.FrameCache.getOrElseUpdate(graft.sqlx.FrameCache.key(spark, "shingles", dir))(
-      shingles(Tables.documents(spark, dir))
+  /** (doc_id, shingles): each document's distinct-trigram set as one row —
+    * the unit MinHash signs and the LSH verify intersects. */
+  def shingleSets(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), shingleArray(col("text")).as("shingles"))
+
+  /** Memoized + persisted shingle sets per (session, dir): MinHash signs
+    * them map-side, the LSH verify intersects them, and [[cachedShingles]]
+    * explodes them for the inverted-index consumers — one shingle build
+    * per session and corpus. */
+  def cachedShingleSets(spark: SparkSession, dir: String): DataFrame =
+    graft.sqlx.FrameCache.getOrElseUpdate(graft.sqlx.FrameCache.key(spark, "shingle_sets", dir))(
+      shingleSets(Tables.documents(spark, dir))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+
+  /** The (doc_id, shingle) inverted-index table, exploded from the cached
+    * sets. */
+  def cachedShingles(spark: SparkSession, dir: String): DataFrame =
+    cachedShingleSets(spark, dir).select(col("doc_id"), explode(col("shingles")).as("shingle"))
 
   def pairs(spark: SparkSession, dir: String, threshold: Double): DataFrame =
     graft.sqlx.FrameCache.getOrElseUpdate(
@@ -111,15 +134,22 @@ object Jaccard {
   }
 
   /** Exact Jaccard restricted to candidate (doc_a < doc_b) pairs — the LSH
-    * verify path. Joins candidates to doc_a's shingles (fan-out = shingles
-    * per doc), then hash-joins on (doc_b, shingle) to count the overlap:
-    * cost is O(candidates × shingles/doc), independent of corpus size. */
-  def pairsForCandidates(sh: DataFrame, cand: DataFrame, threshold: Double): DataFrame = {
-    val counts = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val shA = sh.select(col("doc_id").as("doc_a"), col("shingle"))
-    val shB = sh.select(col("doc_id").as("doc_b"), col("shingle"))
-    val inter = cand.join(shA, "doc_a").join(shB, Seq("doc_b", "shingle"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("inter"))
-    score(inter, counts, threshold)
-  }
+    * verify path, over [[shingleSets]] rows. Each candidate joins both
+    * documents' sets and intersects them: |A∩B| = size(array_intersect),
+    * |A| and |B| the set sizes — equal to the inverted-index counts of
+    * [[pairsFromShingles]] because both sides are distinct sets. A pair
+    * sharing no shingle yields no row, as in the inverted index. Cost is
+    * O(candidates × shingles/doc), independent of corpus size. */
+  def pairsForCandidateSets(sets: DataFrame, cand: DataFrame, threshold: Double): DataFrame =
+    cand
+      .join(sets.select(col("doc_id").as("doc_a"), col("shingles").as("sa")), "doc_a")
+      .join(sets.select(col("doc_id").as("doc_b"), col("shingles").as("sb")), "doc_b")
+      .select(col("doc_a"), col("doc_b"),
+        size(array_intersect(col("sa"), col("sb"))).cast("bigint").as("inter"),
+        size(col("sa")).cast("bigint").as("na"),
+        size(col("sb")).cast("bigint").as("nb"))
+      .where(col("inter") > 0)
+      .withColumn("jaccard",
+        col("inter").cast("double") / (col("na") + col("nb") - col("inter")).cast("double"))
+      .where(col("jaccard") >= threshold)
 }

@@ -1,6 +1,5 @@
 package graft.dedup
 
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -17,7 +16,7 @@ import org.apache.spark.sql.functions._
   *     become candidates — a bucket equi-join, never all-pairs. The bucket
   *     key is the comma-joined r-value slice itself (exact equality, no
   *     second-level hash), so every engine computes identical buckets.
-  *  4. candidates exactly verified with [[Jaccard]]
+  *  4. candidates exactly verified with [[Jaccard.pairsForCandidateSets]]
   *
   * Because every stage is deterministic md5/affine arithmetic, the
   * registered `dedup_minhash` query is hash-checked against a DuckDB
@@ -26,8 +25,17 @@ import org.apache.spark.sql.functions._
   *
   * For Jaccard threshold t, P(candidate) = 1 − (1 − t^r)^b — with k=128,
   * b=32, r=4 the S-curve midpoint is ≈ (1/32)^(1/4) ≈ 0.42; pairs at
-  * t ≥ 0.6 are found with probability > 0.999. At 100 TB every stage is a
-  * shuffle on (band, bucket) keys; signature size is k·8 bytes per doc.
+  * t ≥ 0.6 are found with probability > 0.999.
+  *
+  * Scale shape: the unit is each document's distinct-trigram SET, one row
+  * per doc ([[Jaccard.shingleSets]]). Signatures and bands are per-row
+  * expressions over it, so stages 1–3 up to the bucket key run map-side
+  * with no shuffle of shingles; the only corpus-sized exchanges are the
+  * (band, bucket) rows of the bucket join — k·8 signature bytes per doc
+  * collapse to b bucket keys — and the verify's doc-id joins of candidate
+  * pairs to their sets. Batch and stream band through the one kernel,
+  * [[bandBucketsFromArrays]], so they bucket identically by construction
+  * ([[graft.streaming.StreamNearDup]]).
   */
 object MinHashLSH {
   val NumHashes = 128
@@ -54,20 +62,13 @@ object MinHashLSH {
   // x < 2^32 stays below 2^63 — no overflow in either engine.
   private val (permA, permB) = (params.map(_._1), params.map(_._2))
 
-  /** doc_id → (band, bucket) rows, from precomputed shingles. The bucket is
-    * the exact comma-joined slice of r signature values (collision-free).
-    * The signature is the codegen'd [[graft.functions.MinHashSig]]
-    * expression (was a Scala UDF — same md5/affine arithmetic, no String
-    * boxing, stays in whole-stage codegen). */
-  def bandBuckets(sh: DataFrame): DataFrame =
-    bandBucketsFromArrays(
-      sh.groupBy("doc_id").agg(collect_list("shingle").as("shingles")))
-
-  /** (doc_id, band, bucket) from per-row shingle ARRAYS — the variant a
-    * STREAM can run (no global collect_list aggregation, which would be a
-    * second stateful operator in a streaming plan): every stage is a
-    * per-row deterministic expression. [[bandBuckets]] delegates here, so
-    * batch and stream band identically by construction. */
+  /** (doc_id, band, bucket) from per-row shingle ARRAYS ([[Jaccard.shingleSets]]
+    * rows): every stage is a per-row deterministic expression, so batch and
+    * STREAM run the same kernel (a stream cannot aggregate shingles back
+    * into sets — that would be a second stateful operator in its plan).
+    * The bucket is the exact comma-joined slice of r signature values
+    * (collision-free); the signature is the codegen'd
+    * [[graft.functions.MinHashSig]] expression. */
   def bandBucketsFromArrays(docs: DataFrame): DataFrame =
     bandBucketsFromArrays(docs, Nil)
 
@@ -75,19 +76,18 @@ object MinHashLSH {
     * streaming TTL path needs the event time beside each banded row — a
     * post-hoc join would be a second stateful operator in that plan). */
   def bandBucketsFromArrays(docs: DataFrame, carry: Seq[String]): DataFrame = {
-    // guard on the CHEAP input, not the signature: a `sig IS NOT NULL`
-    // filter gets pushed below the project and re-evaluates the whole
-    // md5 loop a second time per row (seen in the PLANS.md audit) —
-    // size(shingles) > 0 is the exact same predicate (the signature is
-    // null iff the array is empty) at scan-cheap cost
-    val sig = docs.where(size(col("shingles")) > 0)
-      .select(col("doc_id") +: carry.map(col) :+
-        graft.functions.MinHashSig.sig(col("shingles"), permA, permB, Prime).as("sig"): _*)
+    // an empty set signs to null, and exploding null yields no rows: the
+    // guard lives in the explode, not in a filter — a filter on the
+    // shingles (or on sig) is pushed below the projection and inlines the
+    // whole shingle build (or the md5 loop) a second time per row
+    val sig = docs.select(col("doc_id") +: carry.map(col) :+
+      graft.functions.MinHashSig.sig(col("shingles"), permA, permB, Prime).as("sig"): _*)
     val bandCols = (0 until Bands).map { b =>
       struct(lit(b).as("band"),
         concat_ws(",", slice(col("sig"), b * RowsPerBand + 1, RowsPerBand)).as("bucket"))
     }
-    sig.select(col("doc_id") +: carry.map(col) :+ explode(array(bandCols: _*)).as("bb"): _*)
+    sig.select(col("doc_id") +: carry.map(col) :+
+        explode(when(col("sig").isNotNull, array(bandCols: _*))).as("bb"): _*)
       .select(col("doc_id") +: carry.map(col) :+ col("bb.band") :+ col("bb.bucket"): _*)
   }
 
@@ -108,19 +108,21 @@ object MinHashLSH {
 
   /** Candidate pairs from shared band buckets (bucket equi-join). */
   def candidates(docs: DataFrame): DataFrame =
-    candidatesFromShingles(Jaccard.shingles(docs))
+    candidatesFromSets(Jaccard.shingleSets(docs))
 
-  def candidatesFromShingles(sh: DataFrame): DataFrame = {
-    // localCheckpoint: the banding kernel (signature + band explode) now
-    // has THREE consumers — the hot-bucket rollup and both self-join
-    // sides — and they cannot share a plan subtree, so without the
+  /** Candidate pairs over precomputed [[Jaccard.shingleSets]] rows. */
+  def candidatesFromSets(sets: DataFrame): DataFrame = {
+    // localCheckpoint: the banding kernel (signature + band explode) has
+    // THREE consumers — the hot-bucket rollup and both self-join sides —
+    // and they cannot share a plan subtree, so without the
     // materialization the corpus-sized banding pass would run three times
-    // (review finding; the oracle shares its `bands` CTE the same way)
-    val bb = bandBuckets(sh).transform(graft.sqlx.Lineage.truncate)
+    // (the oracle shares its `bands` CTE the same way)
+    val bb = bandBucketsFromArrays(sets).transform(graft.sqlx.Lineage.truncate)
     // oversized buckets excluded BEFORE the self-join: the size rollup
     // shuffles on the same (band, bucket) key the join uses, and the hot
     // set is metadata-sized (buckets over cap), so the anti-join
     // broadcasts — the guard never costs a corpus-sized extra exchange
+    // (a window count instead would put a hot bucket in one task)
     val hot = bb.groupBy(col("band"), col("bucket"))
       .count().where(col("count") > MaxBucketSize)
       .select(col("band"), col("bucket"))
@@ -134,16 +136,16 @@ object MinHashLSH {
   }
 
   /** LSH candidates verified with exact Jaccard ≥ threshold. The verify
-    * stage is candidate-restricted ([[Jaccard.pairsForCandidates]]): it
-    * joins candidate pairs to their shingle sets — never the full-corpus
-    * shingle self-join, which is exactly the quadratic job LSH exists to
-    * avoid. Cost at 100 TB: signatures O(N·k), bucket join O(matches),
-    * verify O(candidates × shingles/doc). */
+    * stage is candidate-restricted ([[Jaccard.pairsForCandidateSets]]): it
+    * intersects each candidate pair's two shingle sets — never the
+    * full-corpus shingle self-join, which is exactly the quadratic job LSH
+    * exists to avoid. Cost at 100 TB: signatures O(N·k) map-side, bucket
+    * join O(matches), verify O(candidates × shingles/doc). */
   def nearDuplicates(docs: DataFrame, threshold: Double): DataFrame =
-    nearDuplicatesFromShingles(Jaccard.shingles(docs), threshold)
+    nearDuplicatesFromSets(Jaccard.shingleSets(docs), threshold)
 
-  /** Variant over precomputed (persisted) shingles — see Jaccard.cachedShingles. */
-  def nearDuplicatesFromShingles(sh: DataFrame, threshold: Double): DataFrame =
-    Jaccard.pairsForCandidates(sh, candidatesFromShingles(sh), threshold)
+  /** Variant over precomputed (persisted) sets — see Jaccard.cachedShingleSets. */
+  def nearDuplicatesFromSets(sets: DataFrame, threshold: Double): DataFrame =
+    Jaccard.pairsForCandidateSets(sets, candidatesFromSets(sets), threshold)
       .select("doc_a", "doc_b", "jaccard")
 }

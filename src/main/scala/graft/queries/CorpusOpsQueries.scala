@@ -279,7 +279,7 @@ object CorpusOpsQueries {
     (s, d) => Decontaminate.fuzzy(
         Tables.documents(s, d), col("doc_id") % 20 >= 18,
         LlmQueries.JaccardThreshold,
-        precomputedShingles = Some(Jaccard.cachedShingles(s, d)))
+        precomputedSets = Some(Jaccard.cachedShingleSets(s, d)))
       .orderBy("doc_id", "benchmark_id"),
     s"""WITH ${LlmQueries.minhashBandCtes},
        |cand AS (

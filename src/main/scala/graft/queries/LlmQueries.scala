@@ -118,8 +118,8 @@ object LlmQueries {
   private[queries] val minhashNearDupSql: String = minhashNearDupSqlWith("")
 
   private val dedupMinhash = Q(
-    (s, d) => MinHashLSH.nearDuplicatesFromShingles(
-        Jaccard.cachedShingles(s, d), JaccardThreshold)
+    (s, d) => MinHashLSH.nearDuplicatesFromSets(
+        Jaccard.cachedShingleSets(s, d), JaccardThreshold)
       .orderBy("doc_a", "doc_b"),
     minhashNearDupSql)
 

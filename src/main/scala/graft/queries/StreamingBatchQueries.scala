@@ -220,10 +220,10 @@ object StreamingBatchQueries {
     * that still crosses a trigger boundary), shingle/sign/band each batch
     * with the shared codegen kernel, pair against bucket state, drain the
     * candidate stream into a memory sink, then batch-verify the distinct
-    * candidates against the static corpus (Jaccard.pairsForCandidates —
-    * the stream-detects / store-verifies split). With the whole corpus
-    * streamed, candidates ≡ the batch bucket join, so the result shares
-    * `dedup_minhash`'s bit-exact oracle. */
+    * candidates against the static corpus's shingle sets
+    * (Jaccard.pairsForCandidateSets — the stream-detects / store-verifies
+    * split). With the whole corpus streamed, candidates ≡ the batch bucket
+    * join, so the result shares `dedup_minhash`'s bit-exact oracle. */
   /** Shared stage-stream-drain-verify scaffold for the near-dup streaming
     * queries: stage `toStage` as TWO arriving parquet files (stage-once
     * guard keyed on the _SUCCESS marker, not the directory — a crash
@@ -291,8 +291,8 @@ object StreamingBatchQueries {
         .writeStream.format("memory").queryName(qname)
         .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()))
     } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    graft.dedup.Jaccard.pairsForCandidates(
-        graft.dedup.Jaccard.cachedShingles(s, d),
+    graft.dedup.Jaccard.pairsForCandidateSets(
+        graft.dedup.Jaccard.cachedShingleSets(s, d),
         s.table(qname).distinct(),
         LlmQueries.JaccardThreshold)
       .select("doc_a", "doc_b", "jaccard")

@@ -33,9 +33,9 @@ import graft.dedup.{Jaccard, MinHashLSH}
   * Candidate verification stays OUT of the stream: exact Jaccard needs the
   * shingle sets of both sides, i.e. a lookup against the document store, so
   * the emitted pairs are joined to the static corpus downstream
-  * ([[Jaccard.pairsForCandidates]]) — the classic stream-detects /
+  * ([[Jaccard.pairsForCandidateSets]]) — the classic stream-detects /
   * store-verifies split. When every document has streamed through, the
-  * pair set equals the batch [[MinHashLSH.candidatesFromShingles]] output
+  * pair set equals the batch [[MinHashLSH.candidatesFromSets]] output
   * (the pair SET over a bucket is arrival-order invariant: any split of a
   * bucket's members into micro-batches yields the same unordered pairs),
   * so the registered `stream_neardup` query shares `dedup_minhash`'s
@@ -59,8 +59,7 @@ object StreamNearDup {
     * `doc_id` and `text` — per-row expressions only, so the plan's single
     * stateful operator is the pairing stage. */
   def bandedDocs(docs: DataFrame): DataFrame =
-    MinHashLSH.bandBucketsFromArrays(
-      docs.select(col("doc_id"), Jaccard.shingleArray(col("text")).as("shingles")))
+    MinHashLSH.bandBucketsFromArrays(Jaccard.shingleSets(docs))
 
   /** Pair a bucket's newly-arrived docs against everything the bucket has
     * seen (and each other). Pure function of (state, batch) — emitted pair

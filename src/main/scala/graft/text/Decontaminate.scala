@@ -81,31 +81,34 @@ object Decontaminate {
     * pass of LLM dataset pipelines (cf. the GPT-3 appendix's 13-gram fuzzy
     * decontamination).
     *
-    * Scale shape: corpus-side signatures are the already-shared MinHash
-    * band table (O(N·bands) rows); the holdout's band table is
-    * holdout-sized × bands — small by construction, broadcast — so
-    * candidate generation is a map-side broadcast join, never a shuffle of
-    * corpus signatures. Verification is candidate-restricted exact Jaccard
-    * ([[Jaccard.pairsForCandidates]]), O(candidates · shingles/doc).
+    * Scale shape: both sides band per-document shingle SETS
+    * ([[Jaccard.shingleSets]], the cached per-session frame in the
+    * registered query) with the map-side MinHash kernel — no shingle is
+    * exploded or shuffled to sign a document. The corpus side is
+    * O(N·bands) band rows; the holdout's band table is holdout-sized ×
+    * bands — small by construction, broadcast — so candidate generation is
+    * a map-side broadcast join, never a shuffle of corpus signatures.
+    * Verification intersects each candidate's two sets
+    * ([[Jaccard.pairsForCandidateSets]]), O(candidates · shingles/doc).
     *
     * Returns one row per (corpus doc, benchmark doc) verified pair at
     * jaccard ≥ `threshold`: doc_id, benchmark_id, inter, na, nb, jaccard.
     * Probabilistic (LSH recall < 1 below the band S-curve midpoint) ⇒
     * registered rows-only; planted-pair recall is spec-asserted. */
   def fuzzy(docs: DataFrame, isHoldout: Column, threshold: Double,
-            precomputedShingles: Option[DataFrame] = None): DataFrame = {
-    val sh = precomputedShingles.getOrElse(Jaccard.shingles(docs))
+            precomputedSets: Option[DataFrame] = None): DataFrame = {
+    val sets = precomputedSets.getOrElse(Jaccard.shingleSets(docs))
     val holdIds = docs.where(isHoldout).select("doc_id")
-    // signatures are per-doc, so banding only the holdout's shingles is
+    // signatures are per-doc, so banding only the holdout's sets is
     // identical to banding everything and then filtering — and skips a
     // second full-corpus signature pass for the small side
-    val holdBb = MinHashLSH.bandBuckets(sh.join(holdIds, "doc_id"))
+    val holdBb = MinHashLSH.bandBucketsFromArrays(sets.join(holdIds, "doc_id"))
       .select(col("doc_id").as("bench_id"), col("band"), col("bucket"))
-    val corpusBb = MinHashLSH.bandBuckets(sh.join(holdIds, Seq("doc_id"), "left_anti"))
+    val corpusBb = MinHashLSH.bandBucketsFromArrays(sets.join(holdIds, Seq("doc_id"), "left_anti"))
     val cand = corpusBb.join(broadcast(holdBb), Seq("band", "bucket"))
       .select(col("doc_id").as("doc_a"), col("bench_id").as("doc_b"))
       .distinct()
-    Jaccard.pairsForCandidates(sh, cand, threshold)
+    Jaccard.pairsForCandidateSets(sets, cand, threshold)
       .withColumnRenamed("doc_a", "doc_id")
       .withColumnRenamed("doc_b", "benchmark_id")
   }

@@ -36,7 +36,7 @@ object PlanDump {
       "sig_ema_crossover" -> "signals: the rule evaluator over the (cached) feature table: keep flag, one ignore-nulls lag Window, explode + filter",
       "fund_balance_sheet" ->
         "window ladder over a scan of the truncated line-item base: one pass per partitioning, unread windows pruned",
-      "dedup_minhash" -> "banded bucket equi-join + candidate-restricted exact verify, no cartesian",
+      "dedup_minhash" -> "map-side signatures over the cached shingle sets, banded bucket equi-join, exact verify by set intersection: no shingle shuffle, no cartesian",
       "dedup_embedding_lsh" -> "cell-routed (low threshold): k-means cell equi-join + exact cosine re-score, no nested loop",
       "dedup_embedding_lsh_hi" -> "sign-LSH regime: hyperplane bucket join + exact cosine re-score, no nested loop",
       "ann_topk" -> "broadcast query side + codegen graft_dot, top-k window",
@@ -70,7 +70,7 @@ object PlanDump {
       "corpus_bpe_encode" -> "distinct-word segmentation + word equi-join rollup",
       "text_bm25" -> "inverted-index token join, maxQueryTerms-gated broadcast query terms, corpus scalars broadcast",
       "retrieval_rrf" -> "rank-list fusion: full-outer join + per-query window over metadata-sized top-k lists",
-      "stream_neardup" -> "batch half of the stream-detects/store-verifies split: candidate-restricted exact verify (the streaming stage ran before this plan)",
+      "stream_neardup" -> "batch half of the stream-detects/store-verifies split: exact verify by intersecting the cached shingle sets (the streaming stage ran before this plan)",
       "table_contracts" -> "per-table single-scan PK check: key-columns-only distinct shuffle",
       "ann_ivf" -> "stored-index probe: probed cells' files only + broadcast centroid probe",
       "dedup_simhash" -> "codegen graft_simhash64 fingerprints + 16-bit band bucket self-join",

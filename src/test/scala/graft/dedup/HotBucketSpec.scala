@@ -29,8 +29,8 @@ class HotBucketSpec extends SparkSpec {
   }
 
   test("an over-cap bucket contributes no pairs; under-cap clusters are unaffected") {
-    val sh = Jaccard.shingles(docs)
-    val cands = MinHashLSH.candidatesFromShingles(sh)
+    val sets = Jaccard.shingleSets(docs)
+    val cands = MinHashLSH.candidatesFromSets(sets)
       .as[(Long, Long)].collect().toSet
     // the hot cluster alone would be 3·cap choose 2 ≈ 4.7M pairs; the cap
     // must remove ALL of them (identical docs share every band bucket)

@@ -253,6 +253,70 @@ class PlanAuditSpec extends SparkSpec {
       s"all corpus reads must come from the persisted frames:\n$plan")
   }
 
+  /** Every optimized logical plan and executed physical plan a fresh
+    * session runs for one registered query — lineage truncations and the
+    * builds of the persisted frames it reads included (a cached frame's
+    * plans hang off its InMemoryRelation, not off the reader's tree). */
+  private def sessionPlans(query: String): (Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan],
+      Seq[org.apache.spark.sql.execution.SparkPlan]) = {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    val s = spark.newSession()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    s.listenerManager.register(listener)
+    val df = graft.SparkEntry.registry(query).run(s, sf("sf0.001"))
+    df.collect()
+    import scala.jdk.CollectionConverters._
+    // the bus delivers in order: once the final collect is seen, so is every earlier run
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (!seen.asScala.exists(_ eq df.queryExecution) && System.nanoTime() < deadline)
+      Thread.sleep(20)
+    s.listenerManager.unregister(listener)
+    assert(seen.asScala.exists(_ eq df.queryExecution), s"$query never finished")
+    def logical(p: LogicalPlan): Seq[LogicalPlan] = p.collect { case n => n }.flatMap {
+      case m: InMemoryRelation => m +: logical(m.cacheBuilder.logicalPlan)
+      case n => Seq(n)
+    }
+    def physical(p: SparkPlan): Seq[SparkPlan] = allNodes(p).flatMap {
+      case m: InMemoryTableScanExec => m +: physical(m.relation.cacheBuilder.cachedPlan)
+      case n => Seq(n)
+    }
+    val qes = seen.asScala.toSeq
+    (qes.flatMap(qe => logical(qe.optimizedPlan)), qes.flatMap(qe => physical(qe.executedPlan)))
+  }
+
+  for (query <- Seq("dedup_minhash", "decontaminate_fuzzy"))
+    test(s"$query signs and verifies shingle sets: no collect_list, no shingle exchange, " +
+      "an O(n) trigram lambda") {
+      import org.apache.spark.sql.catalyst.expressions.{Expression, LambdaFunction, StringSplit}
+      import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
+      val (logical, physical) = sessionPlans(query)
+      def exprs = logical.flatMap(_.expressions) ++ physical.flatMap(_.expressions)
+      def has(e: Expression)(pf: PartialFunction[Expression, Boolean]) =
+        e.exists(x => pf.applyOrElse(x, (_: Expression) => false))
+      // the sets are rebuilt, never reassembled from exploded rows
+      assert(!exprs.exists(has(_) { case _: CollectList => true }),
+        s"$query plans a collect_list")
+      val shingleExchanges = physical.collect {
+        case e: ShuffleExchangeExec if e.child.output.exists(_.name == "shingle") => e
+      }
+      assert(shingleExchanges.isEmpty, s"$query shuffles shingle rows:\n${shingleExchanges.mkString}")
+      // the trigram lambda reads its own struct; the split stays outside it
+      val lambdas = exprs.flatMap(_.collect { case l: LambdaFunction => l })
+      assert(lambdas.nonEmpty, s"$query plans no trigram lambda: the pin cannot bite")
+      assert(!lambdas.exists(has(_) { case _: StringSplit => true }),
+        s"$query splits the text inside a lambda:\n${lambdas.mkString("\n")}")
+      val conds = logical.collect { case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition } ++
+        physical.collect { case f: org.apache.spark.sql.execution.FilterExec => f.condition }
+      assert(!conds.exists(has(_) { case _: StringSplit | _: LambdaFunction => true }),
+        s"$query filters on the trigram expression:\n${conds.mkString("\n")}")
+    }
+
   test("no registered query degenerates into a CartesianProduct except declared all-pairs baselines") {
     val allowed = Set("dedup_embedding", "ann_topk") // documented exact all-pairs baselines
     graft.SparkEntry.registry.foreach { case (name, q) =>

@@ -34,8 +34,8 @@ class StreamNearDupSpec extends SparkSpec {
 
     val streamed = spark.table("neardup_stream")
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    val batch = MinHashLSH.candidatesFromShingles(
-        Jaccard.shingles(docs.toDF()))
+    val batch = MinHashLSH.candidatesFromSets(
+        Jaccard.shingleSets(docs.toDF()))
       .as[(Long, Long)].collect().toSet
 
     assert(batch.nonEmpty, "fixture has no LSH candidates — spec can't bite")
@@ -66,7 +66,7 @@ class StreamNearDupSpec extends SparkSpec {
 
     val streamed = spark.table("neardup_incr_stream")
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    val expected = MinHashLSH.candidatesFromShingles(Jaccard.shingles(docsDF))
+    val expected = MinHashLSH.candidatesFromSets(Jaccard.shingleSets(docsDF))
       .as[(Long, Long)].collect().toSet
       .filter(p => isNew(p._1) || isNew(p._2))
     assert(expected.nonEmpty, "fixture increment collides with nothing — spec can't bite")
