@@ -1,5 +1,6 @@
 package graft.ann
 
+import graft.sources.CellStore
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -302,14 +303,14 @@ object IvfIndex {
 
   /** Materialize the index in the layout the header promises: assignments
     * written one directory per cell with the centroid table beside them,
-    * published as a new [[IndexStore]] version (fresh increment history).
+    * published as a new [[CellStore]] version (fresh increment history).
     * A stored probe then reads only the probed cells' files — at 100 TB
     * the probe scan is nProbe/nCells of the index, not a reshuffle of the
     * whole assigned-vector frame per query batch. */
   def writeIndex(vecs: DataFrame, path: String, nCells: Int = 0,
                  seed: Long = 42L, maxTrain: Int = 65536): Unit = {
     val spark = vecs.sparkSession
-    IndexStore.build(spark, path, "IvfIndex.writeIndex") {
+    CellStore.build(spark, path, "IvfIndex.writeIndex") {
       // nCells = 0 (default) resolves FAISS's √N serving rule
       // ([[Adaptive.cellsForServing]]) — 16 at every driver SF
       val cells =
@@ -325,14 +326,14 @@ object IvfIndex {
 
   /** The stored centroids of version `v`, cell-ordered (driver read). */
   private def storedCentroids(spark: org.apache.spark.sql.SparkSession, path: String,
-                              v: IndexStore.Version): Seq[(Int, Array[Double])] =
-    IndexStore.table(spark, path, v, "centroids")
+                              v: CellStore.Version): Seq[(Int, Array[Double])] =
+    CellStore.table(spark, path, v, "centroids")
       .map(r => (r.int("cell"), r.doubles("centroid"))).sortBy(_._1)
 
   /** Incremental index maintenance — the production ANN ingest path: new
     * vectors are assigned against the STORED quantizer (fixed centroids,
     * FAISS's add-after-train) and appended to their cells copy-on-write
-    * ([[IndexStore.append]]: the increment's files land in a fresh write
+    * ([[CellStore.append]]: the increment's files land in a fresh write
     * dir, the next version lists them beside the head's). No refit and no
     * rewrite of existing cells: the job's cost is one codegen assignment
     * scan of the increment plus the appended files — O(increment), never
@@ -349,7 +350,7 @@ object IvfIndex {
     * [[writeIndex]] rebuild — the ANN analogue of table compaction. */
   def appendToIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                     newVecs: DataFrame, incrementId: Long): Boolean =
-    IndexStore.append(spark, path, "IvfIndex.appendToIndex", incrementId) { head =>
+    CellStore.append(spark, path, "IvfIndex.appendToIndex", incrementId) { head =>
       val cents = storedCentroids(spark, path, head).map(_._2).toArray
       newVecs.select(col("vec_id"), col("emb"),
         graft.functions.NearestCell.nearest(col("emb"), cents).as("cell"))
@@ -361,7 +362,7 @@ object IvfIndex {
     * (asserted by IvfStoreSpec on the scan's file set). */
   def approxTopKStored(spark: org.apache.spark.sql.SparkSession, path: String,
                        queries: DataFrame, k: Int, nProbe: Int = 8): DataFrame = {
-    val head = IndexStore.head(spark, path)
+    val head = CellStore.head(spark, path)
     // centroids as a LOCAL relation: the probe's broadcast cross then
     // builds without a file-scan job (round 17)
     import spark.implicits._
@@ -370,6 +371,6 @@ object IvfIndex {
     val qcells = probeCells(queries, cents, nProbe)
     val probed = qcells.select("cell").distinct().collect()
       .map(_.getInt(0)).toSeq
-    rescoreTopK(qcells, IndexStore.read(spark, path, head, Some(probed)), k)
+    rescoreTopK(qcells, CellStore.read(spark, path, head, Some(probed)), k)
   }
 }

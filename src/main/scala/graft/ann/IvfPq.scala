@@ -1,5 +1,6 @@
 package graft.ann
 
+import graft.sources.CellStore
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -79,7 +80,7 @@ object IvfPq {
     * PQ-coded rows written one directory per cell — m small ints per
     * vector in the scan table, the raw vectors stay in the base table —
     * with the centroid and codebook metadata beside them, published as a
-    * new [[IndexStore]] version with a fresh increment history. At 100 TB
+    * new [[CellStore]] version with a fresh increment history. At 100 TB
     * this is what makes the composition real: a probe reads nProbe/nCells
     * of an already-64×-compressed table, and the raw table is touched only
     * for the rerank·|queries| exact re-scores. */
@@ -92,7 +93,7 @@ object IvfPq {
   private def build(vecs: DataFrame, path: String, store: String, dim: Int,
                     nCells: Int, m: Int, codes: Int, seed: Long, maxTrain: Int,
                     carryApplied: Boolean): Unit = {
-    IndexStore.build(vecs.sparkSession, path, store, carryApplied) {
+    CellStore.build(vecs.sparkSession, path, store, carryApplied) {
       // nCells = 0 (default) resolves FAISS's √N serving rule
       // ([[Adaptive.cellsForServing]]) — 16 at every driver SF
       val cells =
@@ -126,10 +127,10 @@ object IvfPq {
     * spark.read...collect() here was a measured fixed-cost job on every
     * append/refit (round 17). */
   private def readMeta(spark: org.apache.spark.sql.SparkSession, path: String,
-                       v: IndexStore.Version): (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val coarse = IndexStore.table(spark, path, v, "centroids")
+                       v: CellStore.Version): (Array[Array[Double]], Array[Array[Array[Double]]]) = {
+    val coarse = CellStore.table(spark, path, v, "centroids")
       .sortBy(_.int("cell")).map(_.doubles("centroid")).toArray
-    val cbRows = IndexStore.table(spark, path, v, "codebooks")
+    val cbRows = CellStore.table(spark, path, v, "codebooks")
       .map(r => (r.int("j"), r.int("code"), r.doubles("cent")))
     val m = cbRows.map(_._1).max + 1
     val cbs = Array.tabulate(m)(j =>
@@ -138,7 +139,7 @@ object IvfPq {
   }
 
   /** Sub-space count of a stored version, from its data schema (no job). */
-  private def subSpaces(v: IndexStore.Version): Int =
+  private def subSpaces(v: CellStore.Version): Int =
     v.schema.fieldNames.count(_.startsWith("code_"))
 
   /** Incremental index maintenance — [[IvfIndex.appendToIndex]]'s twin
@@ -146,7 +147,7 @@ object IvfPq {
     * against the STORED metadata (fixed centroids and codebooks — FAISS's
     * add-after-train; raw coding means the codes don't even depend on the
     * assigned cell) in one codegen projection, then appended to their
-    * cells copy-on-write ([[IndexStore.append]]). O(increment) per ingest,
+    * cells copy-on-write ([[CellStore.append]]). O(increment) per ingest,
     * no refit, no rewrite; because every index column is a per-row
     * function of the stored metadata, append ≡ bulk-indexing the union
     * with the same quantizer (IvfPqSpec asserts it row-for-row).
@@ -158,14 +159,16 @@ object IvfPq {
     * `foreachBatch`-replayed increment is a NO-OP (returns false). A crash
     * before the commit leaves the head untouched, so the retry applies the
     * increment exactly once; probes keep serving the head meanwhile.
-    * Increment ids must be monotone per store (single ingest writer), like
-    * MaterializedAgg.refreshOnce's batch ids. Distinctness of vec_ids
+    * Increment ids must be monotone per store (single ingest writer): the
+    * guard is the [[CellStore]] head's applied id, the same one that makes
+    * MaterializedAgg.refreshOnce's replayed batch a no-op on its store of
+    * the same format. Distinctness of vec_ids
     * ACROSS increments remains the ingest layer's contract (the
     * dedup_incremental operator). Drift limit as for IVF: enough
     * distribution shift ⇒ refit + [[writeIndex]] rebuild. */
   def appendToIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                     newVecs: DataFrame, incrementId: Long): Boolean =
-    IndexStore.append(spark, path, "IvfPq.appendToIndex", incrementId) { head =>
+    CellStore.append(spark, path, "IvfPq.appendToIndex", incrementId) { head =>
       val (coarse, cbs) = readMeta(spark, path, head)
       indexRows(newVecs, coarse, cbs)
     }
@@ -175,8 +178,9 @@ object IvfPq {
     * GDPR request arrives as vec_ids only, so affected cells are located
     * by a column-pruned semi-join over the head's codes' (vec_id, cell) —
     * never by re-embedding — and ONLY those cells are rewritten
-    * (anti-join survivors, into a fresh write dir); the next version swaps
-    * those cells' file lists and keeps every other cell's files. A cell
+    * ([[CellStore.rewrite]]: anti-join survivors, into a fresh write dir);
+    * the next version swaps those cells' file lists and keeps every other
+    * cell's files. A cell
     * whose last vector is deleted lists no files (probing it yields no
     * candidates). Quantizer metadata is untouched by construction — raw
     * PQ codes are per-row functions of the codebooks, so delete ≡
@@ -202,25 +206,19 @@ object IvfPq {
     * original training set. */
   def deleteFromIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                       ids: DataFrame, incrementId: Long): Boolean = {
-    val dir = IndexStore.writeDir(path)
-    val head = IndexStore.head(spark, path)
+    val head = CellStore.head(spark, path)
     if (incrementId <= head.applied) false
     else {
       // delete requests are request-sized: broadcast them to both the
       // cell-locating semi-join and the survivor anti-join
       val keys = broadcast(ids.select("vec_id").distinct())
-      val affected = IndexStore.read(spark, path, head)
+      val affected = CellStore.read(spark, path, head)
         .join(keys, Seq("vec_id"), "left_semi")
         .select("cell").distinct().collect().map(_.getInt(0)).toSeq
       // nothing stored for these ids: the next version still records the
       // id, so a replay of THIS delete is a no-op
-      val rewritten =
-        if (affected.isEmpty) Map.empty[Int, Seq[String]]
-        else IndexStore.writeCells(
-          IndexStore.read(spark, path, head, Some(affected))
-            .join(keys, Seq("vec_id"), "left_anti"), path, dir)
-      IndexStore.publish(spark, path, "IvfPq.deleteFromIndex", Some(head), dir,
-        head.withCells(incrementId, affected.map(c => c -> rewritten.getOrElse(c, Nil)).toMap))
+      CellStore.rewrite(spark, path, "IvfPq.deleteFromIndex", head, incrementId, affected)(
+        CellStore.read(spark, path, head, Some(affected)).join(keys, Seq("vec_id"), "left_anti"))
       true
     }
   }
@@ -231,7 +229,7 @@ object IvfPq {
     * ends with. A store with no committed version refuses, like every
     * probe. */
   def storedIds(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    IndexStore.read(spark, path, IndexStore.head(spark, path)).select("vec_id", "cell")
+    CellStore.read(spark, path, CellStore.head(spark, path)).select("vec_id", "cell")
 
   /** Probe a stored index: the head version is resolved once,
     * centroids/codebooks are metadata reads, only the probed cells' listed
@@ -242,16 +240,16 @@ object IvfPq {
   def approxTopKStored(spark: org.apache.spark.sql.SparkSession, path: String,
                        vecs: DataFrame, queries: DataFrame, k: Int, dim: Int,
                        nProbe: Int = 8, rerank: Int = Pq.Rerank): DataFrame = {
-    val head = IndexStore.head(spark, path)
+    val head = CellStore.head(spark, path)
     import spark.implicits._
     // quantizer metadata as LOCAL relations (driver-read, k·m rows): their
     // broadcasts then build without a file-scan job each — three fewer
     // fixed-cost jobs per stored probe (round-17 measurement); the CODES
     // table stays a parquet scan, it is the data
-    val cents = IndexStore.table(spark, path, head, "centroids")
+    val cents = CellStore.table(spark, path, head, "centroids")
       .map(r => (r.int("cell"), r.doubles("centroid").toSeq))
       .toDF("cell", "centroid")
-    val cbRows = IndexStore.table(spark, path, head, "codebooks")
+    val cbRows = CellStore.table(spark, path, head, "codebooks")
     val cbDf = cbRows
       .map(r => (r.int("j"), r.int("code"), r.doubles("cent").toSeq, r.double("cn2")))
       .toDF("j", "code", "cent", "cn2") // (j, code, cent, cn2)
@@ -268,7 +266,7 @@ object IvfPq {
     val probed = qcells.select("cell").distinct().collect()
       .map(_.getInt(0)).toSeq
     val codeLong = Pq.meltCodes(
-      IndexStore.read(spark, path, head, Some(probed)), m, Seq("vec_id", "cell"))
+      CellStore.read(spark, path, head, Some(probed)), m, Seq("vec_id", "cell"))
     val lut = Pq.lutFor(queries, cbDf, sd)
     val pairs = qcells.join(codeLong, Seq("cell"))
       .where(col("vec_id") =!= col("query_id"))
@@ -422,14 +420,14 @@ object IvfPq {
     * as an inflated cell mse vs the oracle's min-distance replay. */
   def indexHealth(spark: org.apache.spark.sql.SparkSession, path: String,
                   vecs: DataFrame, increment: DataFrame, dim: Int): DataFrame = {
-    val head = IndexStore.head(spark, path)
+    val head = CellStore.head(spark, path)
     import spark.implicits._
-    val codesDf = IndexStore.read(spark, path, head)
+    val codesDf = CellStore.read(spark, path, head)
     val m = subSpaces(head)
     val sd = dim / m
     // metadata counts/tables from driver-side reads — no per-call jobs
-    val nCells = IndexStore.table(spark, path, head, "centroids").size
-    val cb = IndexStore.table(spark, path, head, "codebooks")
+    val nCells = CellStore.table(spark, path, head, "centroids").size
+    val cb = CellStore.table(spark, path, head, "codebooks")
       .map(r => (r.int("j"), r.int("code"), r.doubles("cent").toSeq))
       .toDF("j", "code", "cent")
     val dec = (c: org.apache.spark.sql.Column) =>
@@ -508,9 +506,9 @@ object IvfPq {
     if (drifted) {
       // geometry from the stored index, not parameter defaults —
       // driver-side metadata reads (three Spark jobs here before round 17)
-      val head = IndexStore.head(spark, path)
-      val nCells = IndexStore.table(spark, path, head, "centroids").size
-      val codes = IndexStore.table(spark, path, head, "codebooks").map(_.int("code")).max + 1
+      val head = CellStore.head(spark, path)
+      val nCells = CellStore.table(spark, path, head, "centroids").size
+      val codes = CellStore.table(spark, path, head, "codebooks").map(_.int("code")).max + 1
       build(corpus, path, "IvfPq.refitIfDrifted", dim, nCells, subSpaces(head), codes,
         seed, maxTrain, carryApplied = true)
     }

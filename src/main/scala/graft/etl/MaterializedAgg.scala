@@ -1,8 +1,8 @@
 package graft.etl
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.CellStore
 import graft.sqlx.Exact
 
 /** Incremental materialized-view maintenance for algebraic aggregates —
@@ -17,180 +17,46 @@ import graft.sqlx.Exact
   * Derived values that are NOT algebraic (avg) finalize at read time from
   * the state (sum/count), the standard MV trick.
   *
-  * Scale layout: state is hash-bucketed on the group keys and stored as
-  * per-bucket GENERATIONS under `root/data/bucket=B/gen=G/`, with a
-  * versioned MANIFEST (`root/_manifest/v=N/`, committed by its `_SUCCESS`
-  * marker like [[Watermarks.writeState]]) mapping each bucket to its
-  * current generation. An increment only touches the buckets its groups
-  * hash into: a refresh reads ONLY those buckets' current generations,
-  * merges increment-sized data, writes the merged state as NEW generation
-  * directories (never touching live files), and then flips the manifest in
-  * one committed write. Untouched buckets are never read, never shuffled,
-  * never rewritten — refresh cost is O(increment + touched-bucket state),
-  * independent of view size.
+  * Scale layout: state is hash-bucketed on the group keys and kept in a
+  * [[CellStore]] — the copy-on-write format the stored ANN indexes use —
+  * one store cell per bucket (the `bucket` column is written as the
+  * store's `cell` and read back as `bucket`). An increment only touches
+  * the buckets its groups hash into: a refresh reads ONLY those buckets'
+  * files listed by the head version, merges increment-sized data, writes
+  * the merged state into a fresh write dir and publishes the next version
+  * with those buckets' file lists swapped ([[CellStore.rewrite]]).
+  * Untouched buckets are never read, never shuffled, never rewritten —
+  * refresh cost is O(increment + touched-bucket state), independent of
+  * view size. A bucket whose state emptied leaves the layout.
   *
-  * Crash consistency (the round-11 ADVICE fix — the old layout renamed
-  * live bucket directories and a failure between delete and rename lost
-  * the bucket): every data write lands in fresh generation directories, a
-  * manifest version only counts once its `_SUCCESS` exists, and readers
-  * resolve paths through the latest COMMITTED manifest — so a crash at any
-  * point leaves the previous manifest (and every directory it references)
-  * fully intact, and the orphaned new-generation files are invisible until
-  * vacuumed / overwritten by the next successful refresh of that bucket.
-  * There are no renames to check and no delete-first window. The manifest
-  * also carries the exactly-once `applied_batch` high-water mark, so
-  * [[refreshOnce]]'s state swap and its replay mark commit ATOMICALLY —
-  * the old "crash between swap and mark double-counts" window is closed,
-  * not documented away.
-  *
-  * Concurrent writers (round 13 — Delta/Iceberg's optimistic concurrency,
-  * re-expressed on the file store): generation ids are exclusive-create
-  * CLAIMS (disjoint write targets per refresher) and the manifest flip is
-  * a check-and-fail CAS at `v = read-version + 1` — exactly one refresher
-  * wins each manifest version; the loser gets a loud
-  * ConcurrentCommitException (its snapshot was stale; re-read and re-run),
-  * and its orphaned generation dirs are vacuumed once the head passes
-  * them. ConcurrencySpec runs two racing refreshers and proves one-winner-
-  * per-version, no lost updates, loud loser.
+  * Crash consistency and concurrency are the store's: live files are
+  * never touched, a version counts once its manifest is committed, and
+  * readers resolve the committed head once — a crash at any point leaves
+  * the previous version (and every file it lists) serving, the crashed
+  * writer's dir unreferenced until vacuumed. The version also carries the
+  * applied-batch high-water mark, so [[refreshOnce]]'s state swap and its
+  * replay mark commit ATOMICALLY. Two refreshers racing from the same
+  * head both CAS `head + 1`: exactly one wins, the loser gets a loud
+  * [[graft.sources.ConcurrentCommitException]] (its snapshot was stale;
+  * re-read and re-run) and deletes its write dir. ConcurrencySpec runs two
+  * racing refreshers and proves one-winner-per-version, no lost updates,
+  * loud loser.
   */
-/** One bucket's live generation (+ the store-wide applied-batch mark,
-  * duplicated per row so the manifest stays a single tiny table).
-  * Top-level and public so the Dataset encoder stays codegen-friendly. */
-final case class MvManifestRow(bucket: Int, gen: Long, applied_batch: Long)
-
 object MaterializedAgg {
 
   val NBuckets = 16
 
-  /** Manifest versions kept by vacuum: old generations referenced by a
-    * retained manifest stay readable for lagging scans. */
-  val RetainManifests = 3
-
-  /** Unreferenced generations / staging dirs younger than this survive
-    * vacuum: "unreferenced and below the head" alone cannot distinguish a
-    * CAS loser's dead orphan from a LIVE rival still writing its claimed
-    * gen (whose commit would then die mid-write with an opaque
-    * FileNotFound instead of its clean CAS loss) — Delta's VACUUM
-    * retention window exists for exactly this reason. Mutable as a test /
-    * operations hook (ConcurrencySpec reaps deterministically at 0 once
-    * no writer is in flight). */
-  private[graft] var OrphanAgeMs: Long = 60L * 60 * 1000
-
   /** Pinned on-disk type for the exact running sum. Spark widens decimal
     * precision on every sum() (25,10 → 35,10 → 38,10), so WITHOUT the pin
     * a refresh writes its touched buckets at a wider precision than the
-    * init generation and the mixed-generation store stops being readable
-    * (parquet decimal physical types differ by precision). 28 integer
-    * digits of headroom; a value domain that could overflow it needs a
-    * two-level sum split, not a wider decimal. */
+    * init version and the store's one manifest schema stops describing
+    * every file (parquet decimal physical types differ by precision). 28
+    * integer digits of headroom; a value domain that could overflow it
+    * needs a two-level sum split, not a wider decimal. */
   private val SumType = org.apache.spark.sql.types.DecimalType(38, 10)
 
   private def bucketCol(keys: Seq[String]): org.apache.spark.sql.Column =
     pmod(hash(keys.map(col): _*), lit(NBuckets))
-
-  private def fileSystem(spark: SparkSession, root: String): FileSystem =
-    FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-
-  // ------------------------------------------------------------ manifest
-
-  /** Committed manifest versions — the shared `_SUCCESS`-gated protocol
-    * ([[graft.sources.CommittedVersions]]): a crashed manifest write is
-    * invisible, so readers always resolve a complete flip. */
-  private def manifestVersions(spark: SparkSession, root: String): Seq[Long] =
-    graft.sources.CommittedVersions.list(spark, s"$root/_manifest")
-
-  /** The manifest is ≤ NBuckets rows: read it on the driver
-    * ([[graft.sources.TinyParquet]]) — a Spark job per manifest read was
-    * measured fixed cost on every refresh/retract/read (round 17). */
-  private def manifestAt(spark: SparkSession, root: String, v: Long): Seq[MvManifestRow] =
-    graft.sources.TinyParquet.rows(spark, s"$root/_manifest/v=$v")
-      .map(r => MvManifestRow(r.int("bucket"), r.long("gen"), r.long("applied_batch")))
-
-  private def readManifest(spark: SparkSession, root: String): (Long, Seq[MvManifestRow]) = {
-    val v = manifestVersions(spark, root).maxOption.getOrElse(
-      sys.error(s"no committed manifest under $root — writeInit never completed"))
-    (v, manifestAt(spark, root, v))
-  }
-
-  /** Commit manifest version `v` via the shared check-and-fail CAS
-    * (stage + atomic rename, [[graft.sources.CommittedVersions
-    * .publishVersion]]). The conflict rule: a refresher commits the
-    * version AFTER the manifest it read its bucket generations from; if a
-    * rival committed that number first, this refresher merged against
-    * stale generations and is REJECTED loudly (ConcurrentCommitException)
-    * — its already-written generation dirs are unreferenced orphans the
-    * next successful vacuum removes. Re-read the head and re-run the
-    * refresh (increments are kept by the caller; partials re-merge
-    * exactly against the new state). */
-  private def writeManifest(spark: SparkSession, root: String, v: Long,
-                            rows: Seq[MvManifestRow]): Unit = {
-    // ≤ NBuckets driver-resident rows: staged driver-side
-    // (TinyParquet.write) — one Spark job per manifest flip removed per
-    // refresh/retract/init (round 18); the CAS publish is unchanged
-    graft.sources.CommittedVersions.publishRowsVersion(
-      spark, s"$root/_manifest", v, "MaterializedAgg manifest",
-      Seq("bucket" -> "int", "gen" -> "long", "applied_batch" -> "long"),
-      // Seq[Any], NOT Seq(...): weak conformance would widen the Int
-      // bucket to Long to unify with the Long fields, and the writer
-      // then fails the int-field cast loudly
-      rows.map(r => Seq[Any](r.bucket, r.gen, r.applied_batch)))
-  }
-
-  /** Drop manifest versions beyond [[RetainManifests]] and every data
-    * generation no retained manifest references — crashed-refresh
-    * leftovers AND CAS losers' orphaned gens. Only gens strictly BELOW
-    * the live head are eligible: a higher unreferenced gen may be a
-    * CONCURRENT refresher's claimed in-flight write (deleting it under
-    * that writer was the one mutual-destruction window the claim protocol
-    * left; the loser's orphan is cleaned by the NEXT vacuum, once the
-    * head has passed it). Dead claims, staging leftovers, and stale
-    * manifest stagings go the same way. */
-  private def vacuum(spark: SparkSession, root: String): Unit = {
-    val fs = fileSystem(spark, root)
-    val versions = manifestVersions(spark, root).sorted
-    versions.dropRight(RetainManifests).foreach { v =>
-      fs.delete(new Path(s"$root/_manifest/v=$v"), true)
-    }
-    // each retained manifest read once, on the driver; the oldest-head
-    // claim floor below reuses this pass instead of re-reading
-    val retained: Seq[(Long, Seq[MvManifestRow])] =
-      versions.takeRight(RetainManifests).map(v => v -> manifestAt(spark, root, v))
-    val live: Set[(Int, Long)] =
-      retained.flatMap(_._2.map(r => (r.bucket, r.gen))).toSet
-    val maxLive = live.map(_._2).maxOption.getOrElse(0L)
-    val cutoff = System.currentTimeMillis() - OrphanAgeMs
-    val dataRoot = new Path(s"$root/data")
-    if (fs.exists(dataRoot)) {
-      fs.listStatus(dataRoot).toSeq.filter(_.getPath.getName.startsWith("bucket=")).foreach { bdir =>
-        val b = bdir.getPath.getName.stripPrefix("bucket=").toInt
-        fs.listStatus(bdir.getPath).toSeq.filter(_.getPath.getName.startsWith("gen=")).foreach { gdir =>
-          val g = gdir.getPath.getName.stripPrefix("gen=").toLong
-          if (g < maxLive && !live.contains((b, g)) && gdir.getModificationTime < cutoff)
-            fs.delete(gdir.getPath, true)
-        }
-      }
-      // superseded AND old — an age gate alone would reap a LIVE
-      // refresher's staging mid-write once its job outlives the window
-      fs.listStatus(dataRoot).toSeq
-        .filter { s =>
-          val n = s.getPath.getName
-          n.startsWith("_stage-gen-") &&
-            n.stripPrefix("_stage-gen-").toLongOption.exists(_ < maxLive) &&
-            s.getModificationTime < cutoff
-        }
-        .foreach(s => fs.delete(s.getPath, true))
-    }
-    // dead claims = at or below the OLDEST retained manifest's head (any
-    // retained writer claims from its read manifest's max gen + 1); the
-    // newer heads' claims must survive or a stale rival could re-claim a
-    // generation that is still live
-    val oldestRetainedHead = retained.headOption.map {
-      case (_, rows) => rows.map(_.gen).maxOption.getOrElse(0L)
-    }.getOrElse(0L)
-    graft.sources.CommittedVersions.vacuumClaims(
-      spark, s"$root/data/_genclaims", oldestRetainedHead)
-    graft.sources.CommittedVersions.vacuumStaging(spark, s"$root/_manifest", OrphanAgeMs)
-  }
 
   // ------------------------------------------------------------ state algebra
 
@@ -217,87 +83,45 @@ object MaterializedAgg {
         min(col("vmin")).as("vmin"),
         max(col("vmax")).as("vmax"))
 
-  /** Write partial-state rows as generation `gen` of their buckets: one
-    * Spark job into a gen-unique staging dir, then a metadata rename per
-    * bucket into place. The staging indirection is load-bearing for
-    * concurrency — the old `mode("append")` into the shared data root let
-    * two concurrent refreshers collide on the job committer's
-    * `_temporary` dir even with disjoint claimed gens; per-gen staging
-    * gives every writer a private output path, and `gen` itself is
-    * exclusive-create-claimed so the rename targets never collide. */
-  private def writeGen(spark: SparkSession, root: String, state: DataFrame,
-                       buckets: Seq[Int], gen: Long): Unit = {
-    val fs = fileSystem(spark, root)
-    val stage = s"$root/data/_stage-gen-$gen"
-    fs.delete(new Path(stage), true)
-    state.repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(stage)
-    buckets.foreach { b =>
-      val dst = new Path(s"$root/data/bucket=$b/gen=$gen")
-      fs.delete(dst, true) // defensive: gens are claim-unique, dst is ours
-      fs.mkdirs(dst.getParent)
-      val src = new Path(s"$stage/bucket=$b")
-      if (fs.exists(src)) {
-        if (!fs.rename(src, dst))
-          sys.error(s"writeGen: failed to publish $dst from staging")
-      } else {
-        // a touched bucket whose state EMPTIED (retract removed its last
-        // group): partitionBy stages nothing for it, but the manifest
-        // still flips the bucket to this generation, so it needs a
-        // readable zero-row file carrying the state schema
-        state.drop("bucket").where(lit(false))
-          .coalesce(1).write.mode("overwrite").parquet(dst.toString)
-      }
-    }
-    fs.delete(new Path(stage), true)
-    ()
-  }
+  /** State rows as the store's cell rows: one file per touched bucket. */
+  private def asCells(state: DataFrame): DataFrame =
+    state.withColumnRenamed("bucket", "cell").repartition(col("cell"))
+
+  /** The buckets `state` touches, sorted (metadata-sized: ≤ NBuckets). */
+  private def bucketsOf(state: DataFrame): Seq[Int] =
+    state.select("bucket").distinct().collect().map(_.getInt(0)).toSeq.sorted
+
+  /** The state of `buckets` at `head` (all buckets by default), `bucket`
+    * recovered from the store's `cell`. Read through the manifest's schema
+    * and file list: no footer-inference job. */
+  private def readState(spark: SparkSession, root: String, head: CellStore.Version,
+                        buckets: Option[Seq[Int]] = None): DataFrame =
+    CellStore.read(spark, root, head, buckets).withColumnRenamed("cell", "bucket")
+
+  /** The commit shared by [[refresh]] and [[retract]]: `merged` (the
+    * touched buckets' complete new state) replaces their files in the
+    * version after `head`, which records `appliedBatch` (< 0 keeps the
+    * head's mark). No touched bucket: a publish that only records the
+    * mark — an empty micro-batch still advances it, so the replay mark
+    * never lags what refreshOnce/retractOnce report applied. */
+  private def commit(spark: SparkSession, root: String, store: String, head: CellStore.Version,
+                     touched: Seq[Int], appliedBatch: Long)(merged: => DataFrame): Unit =
+    CellStore.rewrite(spark, root, store, head,
+      if (appliedBatch >= 0) appliedBatch else head.applied, touched)(asCells(merged))
 
   // ------------------------------------------------------------ public API
 
-  /** Initialize the view store from a base frame: all buckets at gen 1,
-    * manifest v=1, applied-batch mark reset. Unlike refresh/retract —
-    * which must know their touched buckets BEFORE reading old state —
-    * init has no prior state, so the bucket list is discovered from the
-    * staged `bucket=` directories the partitionBy write itself produces:
-    * one Spark action total, no persist, no separate distinct job
-    * (round 17; the extra job was pure fixed cost on every writeInit). */
-  def writeInit(base: DataFrame, keys: Seq[String], valueCol: String, root: String): Unit = {
-    val spark = base.sparkSession
-    val fs = fileSystem(spark, root)
-    fs.delete(new Path(root), true)
-    val state = partials(base, keys, valueCol)
-    val stage = s"$root/data/_stage-gen-1"
-    state.repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(stage)
-    val buckets = fs.listStatus(new Path(stage)).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("bucket="))
-      .map(_.stripPrefix("bucket=").toInt).sorted
-    buckets.foreach { b =>
-      val dst = new Path(s"$root/data/bucket=$b/gen=1")
-      fs.mkdirs(dst.getParent)
-      if (!fs.rename(new Path(s"$stage/bucket=$b"), dst))
-        sys.error(s"writeInit: failed to publish $dst from staging")
+  /** Initialize the view from a base frame: the base's partial state is
+    * published as the store's next version with a fresh applied-batch
+    * mark. A reader of the previous version keeps serving it meanwhile. */
+  def writeInit(base: DataFrame, keys: Seq[String], valueCol: String, root: String): Unit =
+    CellStore.build(base.sparkSession, root, "MaterializedAgg.writeInit") {
+      (asCells(partials(base, keys, valueCol)), Nil)
     }
-    fs.delete(new Path(stage), true)
-    writeManifest(spark, root, 1L, buckets.map(MvManifestRow(_, 1L, -1L)))
-  }
-
-  /** Paths of the given manifest entries (leaf generation dirs). */
-  private def entryPaths(root: String, entries: Seq[MvManifestRow]): Seq[String] =
-    entries.map(e => s"$root/data/bucket=${e.bucket}/gen=${e.gen}")
-
-  /** Read the current partial state of `entries`, with the `bucket`
-    * partition column recovered (basePath) and `gen` dropped. */
-  private def readState(spark: SparkSession, root: String,
-                        entries: Seq[MvManifestRow]): DataFrame =
-    spark.read.option("basePath", s"$root/data")
-      .parquet(entryPaths(root, entries): _*)
-      .drop("gen")
 
   /** Incremental refresh: fold `increment`'s partials into the store,
     * touching only the bucket partitions the increment's groups hash to,
-    * and flip the manifest atomically. Returns the touched bucket ids
+    * and publish the next version. Returns the touched bucket ids
     * (sorted). `appliedBatch` < 0 preserves the current high-water mark
     * ([[refreshOnce]] passes the new one so mark and swap commit
     * together). */
@@ -305,42 +129,12 @@ object MaterializedAgg {
               keys: Seq[String], valueCol: String,
               appliedBatch: Long = -1L): Seq[Int] = {
     val inc = partials(increment, keys, valueCol)
-    // metadata-sized: at most NBuckets values
-    val touched = inc.select("bucket").distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    if (touched.isEmpty) {
-      // An empty increment still ADVANCES the applied-batch mark when one
-      // was supplied: without the mark-only flip, refreshOnce would report
-      // the batch applied while the manifest's high-water mark lags it —
-      // benign for replay (re-merging nothing is a no-op) but a broken
-      // "mark and swap commit atomically" contract. Data dirs untouched.
-      if (appliedBatch >= 0) {
-        val (v, entries) = readManifest(spark, root)
-        writeManifest(spark, root, v + 1L,
-          entries.map(e => MvManifestRow(e.bucket, e.gen, appliedBatch)))
-        vacuum(spark, root)
-      }
-      return touched
+    val touched = bucketsOf(inc)
+    if (touched.nonEmpty || appliedBatch >= 0) {
+      val head = CellStore.head(spark, root)
+      commit(spark, root, "MaterializedAgg.refresh", head, touched, appliedBatch)(
+        combine(readState(spark, root, head, Some(touched)), inc, keys))
     }
-    val (v, entries) = readManifest(spark, root)
-    val touchedSet = touched.toSet
-    val (touchedEntries, untouched) = entries.partition(e => touchedSet(e.bucket))
-    val merged =
-      if (touchedEntries.isEmpty) inc
-      else combine(readState(spark, root, touchedEntries), inc, keys)
-    // exclusive-create claim: two concurrent refreshers get DISJOINT
-    // generation dirs (interleaved appends into a shared gen dir was the
-    // pre-CAS corruption window); the manifest CAS below then rejects the
-    // one whose read snapshot lost, and its claimed gens become orphans
-    val newGen = graft.sources.CommittedVersions.claimId(
-      spark, s"$root/data/_genclaims", entries.map(_.gen).maxOption.getOrElse(0L) + 1L)
-    writeGen(spark, root, merged, touched, newGen)
-    val mark = if (appliedBatch >= 0) appliedBatch
-               else entries.headOption.map(_.applied_batch).getOrElse(-1L)
-    val next = (untouched.map(e => MvManifestRow(e.bucket, e.gen, mark)) ++
-      touched.map(MvManifestRow(_, newGen, mark))).sortBy(_.bucket)
-    writeManifest(spark, root, v + 1L, next)
-    vacuum(spark, root)
     touched
   }
 
@@ -361,9 +155,9 @@ object MaterializedAgg {
     * a subtraction that would drive any count negative aborts loudly
     * BEFORE anything is written (the state is never poisoned by a bad
     * delete batch). Commit/concurrency discipline is [[refresh]]'s
-    * verbatim: claimed generation dirs for the touched buckets only,
-    * manifest CAS at read-version + 1, loud [[graft.sources
-    * .ConcurrentCommitException]] loser. Returns the touched buckets. */
+    * verbatim: the touched buckets rewritten copy-on-write, the store's
+    * CAS at head + 1, loud [[graft.sources.ConcurrentCommitException]]
+    * loser. Returns the touched buckets. */
   def retract(spark: SparkSession, root: String, deletes: DataFrame,
               remaining: DataFrame, keys: Seq[String], valueCol: String,
               appliedBatch: Long = -1L): Seq[Int] = {
@@ -374,30 +168,17 @@ object MaterializedAgg {
         col("vmax").as("d_max")): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val touched = del.select("bucket").distinct()
-        .collect().map(_.getInt(0)).toSeq.sorted
+      val touched = bucketsOf(del)
       if (touched.isEmpty) {
-        // empty delete batch: mark-only manifest flip, same contract as
-        // refresh's empty-increment case — the replay mark never lags
-        // what retractOnce reports applied
-        if (appliedBatch >= 0) {
-          val (v, entries) = readManifest(spark, root)
-          writeManifest(spark, root, v + 1L,
-            entries.map(e => MvManifestRow(e.bucket, e.gen, appliedBatch)))
-          vacuum(spark, root)
-        }
+        if (appliedBatch >= 0)
+          commit(spark, root, "MaterializedAgg.retract", CellStore.head(spark, root),
+            touched, appliedBatch)(del)
         return touched
       }
-      val (v, entries) = readManifest(spark, root)
-      val touchedSet = touched.toSet
-      val (touchedEntries, untouched) = entries.partition(e => touchedSet(e.bucket))
-      // a delete aimed ONLY at buckets the manifest has never held is the
-      // orphan-group contract breach — raise it here rather than letting
-      // the zero-path state read fail with an opaque parquet error
-      require(touchedEntries.nonEmpty,
-        s"retract: delete batch touches only buckets ($touched) the view has no " +
-          "state for — deletes must be rows the view folded in")
-      val state = readState(spark, root, touchedEntries)
+      val head = CellStore.head(spark, root)
+      // a delete aimed at buckets the view holds no state for reads an
+      // empty state, and the orphan guard below refuses it
+      val state = readState(spark, root, head, Some(touched))
       val joined = state.join(del.drop("bucket"), keys, "left")
       // subtraction operands narrowed to (37,10): Spark sizes a decimal
       // difference at max(p-s)+s+1 digits, so (38,10)-(38,10) would spill
@@ -467,15 +248,7 @@ object MaterializedAgg {
             col("n_vals") :+ col("sum_dec") :+
             when(col("dirty"), col("r_min")).otherwise(col("vmin")).as("vmin") :+
             when(col("dirty"), col("r_max")).otherwise(col("vmax")).as("vmax")): _*)
-        val newGen = graft.sources.CommittedVersions.claimId(
-          spark, s"$root/data/_genclaims", entries.map(_.gen).maxOption.getOrElse(0L) + 1L)
-        writeGen(spark, root, merged, touched, newGen)
-        val mark = if (appliedBatch >= 0) appliedBatch
-                   else entries.headOption.map(_.applied_batch).getOrElse(-1L)
-        val next = (untouched.map(e => MvManifestRow(e.bucket, e.gen, mark)) ++
-          touched.map(MvManifestRow(_, newGen, mark))).sortBy(_.bucket)
-        writeManifest(spark, root, v + 1L, next)
-        vacuum(spark, root)
+        commit(spark, root, "MaterializedAgg.retract", head, touched, appliedBatch)(merged)
         touched
       } finally { updated.unpersist(false); () }
     } finally { del.unpersist(false); () }
@@ -484,7 +257,7 @@ object MaterializedAgg {
   /** [[retract]] with exactly-once semantics under micro-batch REPLAY —
     * [[refreshOnce]]'s twin for a CDC DELETE stream: batch ids from one
     * stream are monotone, only the last batch replays, and the
-    * applied-batch mark rides in the manifest, so the retraction and its
+    * applied-batch mark rides in the store's version, so the retraction and its
     * mark commit atomically (a replayed delete batch would otherwise
     * subtract twice — the exact dual of the insert double-count).
     *
@@ -501,9 +274,7 @@ object MaterializedAgg {
     * the contract the oracle checks. */
   def retractOnce(spark: SparkSession, root: String, batchId: Long, deletes: DataFrame,
                   remaining: DataFrame, keys: Seq[String], valueCol: String): Boolean = {
-    val (_, entries) = readManifest(spark, root)
-    val applied = entries.headOption.map(_.applied_batch).getOrElse(-1L)
-    if (batchId <= applied) false
+    if (batchId <= CellStore.head(spark, root).applied) false
     else {
       retract(spark, root, deletes, remaining, keys, valueCol, appliedBatch = batchId)
       true
@@ -516,16 +287,13 @@ object MaterializedAgg {
     * replayed increment double-counts). Batch ids from one stream are
     * monotonically increasing and only the LAST batch is ever replayed, so
     * one high-water mark (the max applied id) suffices — and it rides IN
-    * the manifest, so the state flip and the mark are one atomic commit:
-    * a crash before the manifest write replays the batch against the OLD
-    * state+mark (the half-written generations are overwritten
-    * idempotently), a crash after it makes the replay a no-op. No
-    * double-count window remains. */
+    * the store's version, so the state flip and the mark are one atomic
+    * commit: a crash before the CAS replays the batch against the OLD
+    * state+mark (the crashed writer's files are never listed), a crash
+    * after it makes the replay a no-op. No double-count window remains. */
   def refreshOnce(spark: SparkSession, root: String, batchId: Long, increment: DataFrame,
                   keys: Seq[String], valueCol: String): Boolean = {
-    val (_, entries) = readManifest(spark, root)
-    val applied = entries.headOption.map(_.applied_batch).getOrElse(-1L)
-    if (batchId <= applied) false
+    if (batchId <= CellStore.head(spark, root).applied) false
     else {
       refresh(spark, root, increment, keys, valueCol, appliedBatch = batchId)
       true
@@ -535,10 +303,10 @@ object MaterializedAgg {
   /** Finalized view: algebraic columns straight from state, avg derived as
     * exact-decimal sum / value count (the graft.sqlx.Exact double route,
     * so the read is bit-identical to a full recompute in any engine).
-    * Resolves data paths through the latest committed manifest. */
-  def read(spark: SparkSession, root: String, keys: Seq[String]): DataFrame = {
-    val (_, entries) = readManifest(spark, root)
-    readState(spark, root, entries)
+    * Resolves the committed head once and reads the files it lists with
+    * the manifest's schema, so building the frame starts no Spark job. */
+  def read(spark: SparkSession, root: String, keys: Seq[String]): DataFrame =
+    readState(spark, root, CellStore.head(spark, root))
       .select(
         (keys.map(col) :+
           col("n_rows") :+
@@ -547,5 +315,4 @@ object MaterializedAgg {
             .as("value_avg") :+
           col("vmin").as("value_min") :+
           col("vmax").as("value_max")): _*)
-  }
 }

@@ -88,9 +88,10 @@ object Kmv {
     else ((k - 1).toLong * Scale) / math.max(kth, 1L)
 
   // ------------------------------------------------------------ Column API
-  // Each method builds its expression directly; `k` and `prehashed` are
-  // constructor arguments, so a LONG key without `prehashed = true` fails
-  // the aggregate's own type check at analysis.
+  // Each method builds its expression directly. The aggregates take one
+  // key type, the LONG output of [[hash52Col]]; the string forms hash in
+  // a projection first, so a raw LONG key into them fails graft_hash52's
+  // type check at analysis.
 
   // --------------------------------------------------- persisted states
 
@@ -100,7 +101,7 @@ object Kmv {
     * the union is the union sketch, Beyer et al. §4) with NO rescan of
     * the data. A state is ≤ k BIGINTs; merging is plain array algebra. */
   def stateHashed(hashed: Column, k: Int = K): Column =
-    GraftColumn(KmvState(GraftColumn.expr(hashed), k, prehashed = true))
+    GraftColumn(KmvState(GraftColumn.expr(hashed), k))
 
   /** Merge an agg-collected list of states (`collect_list(state)`) into
     * the union's state: bottom-k of the distinct union. Input is
@@ -121,25 +122,23 @@ object Kmv {
   /** Deterministic distinct-count estimate of a canonical STRING column.
     * Exact below k distinct values, (k−1)·2^52 div h_k above. */
   def distinctCount(canonical: Column, k: Int = K): Column =
-    GraftColumn(KmvDistinct(GraftColumn.expr(canonical), k))
+    distinctCountHashed(hash52Col(canonical), k)
 
   /** [[distinctCount]] over an already-[[hash52Col]]ed LONG column — the
     * codegen-friendly split (hash in a projection, insert in the
-    * aggregate). The flag is explicit: raw longs into the string form are
-    * an analysis error, not a silently wrong estimate. */
+    * aggregate). */
   def distinctCountHashed(hashed: Column, k: Int = K): Column =
-    GraftColumn(KmvDistinct(GraftColumn.expr(hashed), k, prehashed = true))
+    GraftColumn(KmvDistinct(GraftColumn.expr(hashed), k))
 
   /** Bottom-k-by-hash uniform sample of `value`, keyed by a canonical
     * STRING identity column; returns the sampled values sorted ascending,
     * ready for [[quantileFromSorted]]. */
   def sample(key: Column, value: Column, k: Int = K): Column =
-    GraftColumn(KmvSample(GraftColumn.expr(key), GraftColumn.expr(value), k))
+    sampleHashed(hash52Col(key), value, k)
 
   /** [[sample]] with an already-[[hash52Col]]ed LONG key. */
   def sampleHashed(hashedKey: Column, value: Column, k: Int = K): Column =
-    GraftColumn(KmvSample(GraftColumn.expr(hashedKey), GraftColumn.expr(value), k,
-      prehashed = true))
+    GraftColumn(KmvSample(GraftColumn.expr(hashedKey), GraftColumn.expr(value), k))
 
   /** numpy-default linear interpolation over a SORTED sample array — the
     * identical IEEE op DAG as the franked-window oracle replay
@@ -193,34 +192,27 @@ case class Hash52(child: Expression)
 }
 
 /** Bottom-k distinct-hash sketch → BIGINT distinct estimate. State is a
-  * TreeSet of ≤k longs (16 KB at k=2048); update is one md5 + an O(log k)
-  * insert (or just the insert when the child is an already-[[Hash52]]ed
-  * LONG — the codegen-friendly split [[Kmv.hash52Col]] documents); merge
-  * is bottom-k of the union — a TypedImperativeAggregate, the same
+  * TreeSet of ≤k longs (16 KB at k=2048); the child is an already-
+  * [[Hash52]]ed LONG (the codegen-friendly split [[Kmv.hash52Col]]
+  * documents), so update is one O(log k) insert; merge is bottom-k of the
+  * union — a TypedImperativeAggregate, the same
   * physical shape (ObjectHashAggregate, partial + final) Spark plans for
   * its own HLL++. */
 case class KmvDistinct(
     child: Expression,
     k: Int,
-    prehashed: Boolean = false,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[java.util.TreeSet[java.lang.Long]] {
 
   require(k > 1, s"KMV sketch needs k > 1, got $k")
 
-  // the prehashed flag must be DECLARED, never inferred from the child
-  // type: a raw bigint key is an analysis error here, not a silently
-  // garbage estimate (review finding)
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val want = if (prehashed) LongType else org.apache.spark.sql.types.StringType
-    if (child.dataType == want)
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    if (child.dataType == LongType)
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"graft_kmv_distinct(prehashed=$prehashed) requires a ${want.simpleString} key " +
-        s"(string form md5-hashes; the hashed form takes graft_hash52 output), " +
+      s"graft_kmv_distinct requires a bigint key (graft_hash52 output), " +
         s"got ${child.dataType.simpleString}")
-  }
   override def prettyName: String = "graft_kmv_distinct"
   override def dataType: DataType = LongType
   override def nullable: Boolean = false
@@ -234,8 +226,7 @@ case class KmvDistinct(
       input: InternalRow): java.util.TreeSet[java.lang.Long] = {
     val v = child.eval(input)
     if (v != null) {
-      val h = if (prehashed) v.asInstanceOf[Long]
-              else Kmv.hash52(v.asInstanceOf[UTF8String])
+      val h = v.asInstanceOf[Long]
       if (buf.size < k) { buf.add(h); () }
       else if (h < buf.last) { if (buf.add(h)) { buf.pollLast(); () } }
     }
@@ -285,21 +276,18 @@ case class KmvSample(
     key: Expression,
     value: Expression,
     k: Int,
-    prehashed: Boolean = false,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[java.util.TreeSet[(Long, Double)]] {
 
   require(k > 1, s"KMV sample needs k > 1, got $k")
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val want = if (prehashed) LongType else org.apache.spark.sql.types.StringType
-    if (key.dataType == want && value.dataType == DoubleType)
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    if (key.dataType == LongType && value.dataType == DoubleType)
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"graft_kmv_sample(prehashed=$prehashed) requires (${want.simpleString}, double), " +
+      s"graft_kmv_sample requires (bigint graft_hash52 key, double), " +
         s"got (${key.dataType.simpleString}, ${value.dataType.simpleString})")
-  }
   override def prettyName: String = "graft_kmv_sample"
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullable: Boolean = false
@@ -317,9 +305,7 @@ case class KmvSample(
     val kv = key.eval(input)
     val vv = value.eval(input)
     if (kv != null && vv != null) {
-      val h = if (prehashed) kv.asInstanceOf[Long]
-              else Kmv.hash52(kv.asInstanceOf[UTF8String])
-      val p = (h, vv.asInstanceOf[Double])
+      val p = (kv.asInstanceOf[Long], vv.asInstanceOf[Double])
       if (buf.size < k) { buf.add(p); () }
       else if (ord.lt(p, buf.last)) { if (buf.add(p)) { buf.pollLast(); () } }
     }
@@ -375,21 +361,18 @@ case class KmvSample(
 case class KmvState(
     child: Expression,
     k: Int,
-    prehashed: Boolean = false,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[java.util.TreeSet[java.lang.Long]] {
 
   require(k > 1, s"KMV sketch needs k > 1, got $k")
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val want = if (prehashed) LongType else org.apache.spark.sql.types.StringType
-    if (child.dataType == want)
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    if (child.dataType == LongType)
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"graft_kmv_state(prehashed=$prehashed) requires a ${want.simpleString} key, " +
+      s"graft_kmv_state requires a bigint key (graft_hash52 output), " +
         s"got ${child.dataType.simpleString}")
-  }
   override def prettyName: String = "graft_kmv_state"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false
@@ -403,8 +386,7 @@ case class KmvState(
       input: InternalRow): java.util.TreeSet[java.lang.Long] = {
     val v = child.eval(input)
     if (v != null) {
-      val h = if (prehashed) v.asInstanceOf[Long]
-              else Kmv.hash52(v.asInstanceOf[UTF8String])
+      val h = v.asInstanceOf[Long]
       if (buf.size < k) { buf.add(h); () }
       else if (h < buf.last) { if (buf.add(h)) { buf.pollLast(); () } }
     }

@@ -31,7 +31,7 @@ object SortedGroupScan {
     /** Process one row in group order; return new state + rows to emit. */
     def onRow(s: S, r: Row): (S, Iterator[Row])
     /** Emit trailing rows when the group ends (e.g. close open positions). */
-    def onGroupEnd(s: S): Iterator[Row] = Iterator.empty
+    def onGroupEnd(@scala.annotation.unused s: S): Iterator[Row] = Iterator.empty
   }
 
   def apply[S](

@@ -454,7 +454,7 @@ object AggregateQueries {
     "event_type" -> "string", "value" -> "double", "props" -> "string")
 
   private def profileSelect(table: String, c: String, dt: String,
-      kmvDistinct: Boolean = false): String = {
+      kmvDistinct: Boolean): String = {
     val numeric = Set("bigint", "int", "double")
     val distinctSql =
       if (kmvDistinct) graft.relational.Profile.kmvDistinctSql(table, c, dt)

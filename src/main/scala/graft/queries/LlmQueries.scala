@@ -807,7 +807,7 @@ object LlmQueries {
           org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))))
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(dir.toString)
-      graft.streaming.Drain.availableNow(stream.writeStream
+      graft.streaming.Drain.availableNow(s, stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
           graft.ann.IvfPq.appendToIndex(batch.sparkSession, path, batch, incrementId = id + 1)
           ()

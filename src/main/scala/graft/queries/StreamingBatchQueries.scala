@@ -183,20 +183,13 @@ object StreamingBatchQueries {
         dir.resolve("events.parquet"),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       val qname = s"stream_file_source_${memSinkId.incrementAndGet()}"
-      // state partitions sized to the micro-batch (the runNearDupStream
-      // discipline): a stateful streaming query fixes its state-store
-      // partition count to spark.sql.shuffle.partitions at START — the
-      // session default (32 at the driver's core count) pays 32 state
-      // commits per trigger for a window count whose state is dozens of
-      // rows; production jobs set this per-stream anyway (round 18)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        graft.streaming.Drain.availableNow(graft.streaming.EventAggregates
-          .windowedCounts(Tables.eventsStream(s, dir.toString))
-          .writeStream.format("memory").queryName(qname)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete()))
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      // a window count whose state is dozens of rows: state partitions
+      // sized to the micro-batch (Drain.SmallStatePartitions)
+      graft.streaming.Drain.availableNow(s, graft.streaming.EventAggregates
+        .windowedCounts(Tables.eventsStream(s, dir.toString))
+        .writeStream.format("memory").queryName(qname)
+        .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete()),
+        Some(graft.streaming.Drain.SmallStatePartitions))
       s.table(qname)
         .select(unix_micros(col("window_start")).as("window_start_us"),
           unix_micros(col("window_end")).as("window_end_us"),
@@ -231,12 +224,9 @@ object StreamingBatchQueries {
     * isDirectory check would stream a truncated corpus forever; the
     * watermark store uses the same marker convention), run the caller's
     * streaming pair detector over the staged stream with state partitions
-    * sized to the increment (a stateful streaming query fixes its
-    * state-store partition count to spark.sql.shuffle.partitions at
-    * START; the session default pays 32 state commits per trigger for no
-    * parallelism gain at micro-batch size — production jobs set this
-    * per-stream anyway), drain into a memory sink, then batch-verify the
-    * distinct candidates against the static corpus. */
+    * sized to the increment ([[graft.streaming.Drain.SmallStatePartitions]]),
+    * drain into a memory sink, then batch-verify the distinct candidates
+    * against the static corpus. */
   /** Cheap content fingerprint of the staged corpus's SOURCE parquet
     * (name + length + mtime per file): folded into the staging dir name so
     * a REGENERATED testdata tree at the same path invalidates the staged
@@ -283,14 +273,11 @@ object StreamingBatchQueries {
       ()
     }
     val qname = s"${dirTag.replace('-', '_')}_${memSinkId.incrementAndGet()}"
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      graft.streaming.Drain.availableNow(pairs(graft.streaming.StreamNearDup.bandedDocs(
-          Tables.documentsStream(s, dir.toString, maxFilesPerTrigger = 16)))
-        .writeStream.format("memory").queryName(qname)
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()))
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    graft.streaming.Drain.availableNow(s, pairs(graft.streaming.StreamNearDup.bandedDocs(
+        Tables.documentsStream(s, dir.toString, maxFilesPerTrigger = 16)))
+      .writeStream.format("memory").queryName(qname)
+      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()),
+      Some(graft.streaming.Drain.SmallStatePartitions))
     graft.dedup.Jaccard.pairsForCandidateSets(
         graft.dedup.Jaccard.cachedShingleSets(s, d),
         s.table(qname).distinct(),
@@ -375,7 +362,7 @@ object StreamingBatchQueries {
         .withColumn("success_probability", round(col("success_probability"), 6))
         .where(col("success_probability") >= RecommendQueries.ProbabilityFloor)
         .select("symbol_id", "date", "success_probability")
-      graft.streaming.Drain.availableNow(scored.writeStream.format("memory").queryName(qname)
+      graft.streaming.Drain.availableNow(s, scored.writeStream.format("memory").queryName(qname)
         .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()))
       s.table(qname).orderBy("symbol_id", "date")
     }) { (s, d) =>
@@ -426,7 +413,7 @@ object StreamingBatchQueries {
       graft.etl.MaterializedAgg.writeInit(
         ev.where(col("event_id") % 4 === 0).withColumn("date", col("ts").cast("date")),
         keys, "value", root)
-      graft.streaming.Drain.availableNow(Tables.eventsStream(s, dir.toString)
+      graft.streaming.Drain.availableNow(s, Tables.eventsStream(s, dir.toString)
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
           graft.etl.MaterializedAgg.refreshOnce(batch.sparkSession, root, id,
@@ -466,7 +453,7 @@ object StreamingBatchQueries {
       graft.etl.MaterializedAgg.writeInit(
         ev.withColumn("date", col("ts").cast("date")), keys, "value", root)
       val remaining = ev.where(!gone).withColumn("date", col("ts").cast("date"))
-      graft.streaming.Drain.availableNow(Tables.eventsStream(s, dir.toString)
+      graft.streaming.Drain.availableNow(s, Tables.eventsStream(s, dir.toString)
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
           graft.etl.MaterializedAgg.retractOnce(batch.sparkSession, root, id,

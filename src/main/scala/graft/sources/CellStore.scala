@@ -1,39 +1,41 @@
-package graft.ann
+package graft.sources
 
-import graft.sources.{CommitArbiter, CommittedVersions, ConcurrentCommitException,
-  TableMaintenance, TinyParquet}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
 
-/** The on-disk format of the stored ANN indexes ([[IvfIndex]], [[IvfPq]]):
-  * copy-on-write index versions published through the one commit protocol
-  * every other store uses ([[CommittedVersions]]).
+/** The copy-on-write cell store: one on-disk format for every derived
+  * store whose rows fall into integer cells and whose mutations rewrite
+  * whole cells — the stored ANN indexes ([[graft.ann.IvfIndex]],
+  * [[graft.ann.IvfPq]]; a cell is an IVF cell) and the materialized view
+  * ([[graft.etl.MaterializedAgg]]; a cell is a hash bucket of its
+  * partial-aggregate state). Versions are published through the one
+  * commit protocol every other store uses ([[CommittedVersions]]).
   *
   * {{{
   *   root/_manifest/v=N/      committed version N (driver-written manifest)
   *   root/w=<uuid>/cell=C/    one mutation's data files for cell C
-  *   root/w=<uuid>/<table>/   a build's quantizer tables (centroids, codebooks)
+  *   root/w=<uuid>/<table>/   a build's side tables (IVF centroids, PQ codebooks)
   * }}}
   *
-  * A version's manifest names everything a reader may touch: the
-  * quantizer tables (written once per build, carried forward by
-  * reference), each cell's live data files, the data schema, and the
-  * last applied increment id — the replay guard of the append/delete
-  * paths (increment ids are monotone per store: one ingest writer, the
-  * [[graft.etl.MaterializedAgg.refreshOnce]] discipline).
+  * A version's manifest names everything a reader may touch: the side
+  * tables (written once per build, carried forward by reference), each
+  * cell's live data files, the data schema, and the last applied
+  * increment id — the replay guard of the incremental paths (increment
+  * ids are monotone per store: one ingest writer, a stream's batch ids).
   *
   * Every mutation writes into its OWN fresh `w=` directory (never shared:
   * two Spark jobs writing one output dir share its `_temporary`), then
   * CASes `v = head + 1`. A reader resolves the head once and reads only the
-  * files it lists, so it keeps serving `v=N` while a writer publishes
-  * `N+1`. A racing loser gets [[ConcurrentCommitException]] and deletes its
-  * write dir; a writer that crashes before the CAS leaves only an
-  * unreferenced dir. [[vacuum]] applies the retention rule of
-  * [[TableMaintenance]]: versions beyond `RetainGens` superseded ones go,
-  * and `w=` dirs no retained version references go once older than
-  * `OrphanAgeMs` (younger ones may be a live writer's). */
-private[graft] object IndexStore {
+  * files it lists, with the manifest's schema (no footer-inference job),
+  * so it keeps serving `v=N` while a writer publishes `N+1`. A racing
+  * loser gets [[ConcurrentCommitException]] and deletes its write dir; a
+  * writer that crashes before the CAS leaves only an unreferenced dir.
+  * [[vacuum]] applies the retention rule of [[TableMaintenance]]: versions
+  * beyond `RetainGens` superseded ones go, and `w=` dirs no retained
+  * version references go once older than `OrphanAgeMs` (younger ones may
+  * be a live writer's). */
+private[graft] object CellStore {
 
   /** One committed version. Paths are relative to the store root. */
   final case class Version(number: Long, applied: Long, schema: StructType,
@@ -56,7 +58,7 @@ private[graft] object IndexStore {
     val rows = TinyParquet.rows(spark, s"${manifests(root)}/v=$v")
     def kind(k: String) = rows.filter(_.string("kind") == k)
     val head = kind("head").headOption.getOrElse(
-      sys.error(s"index manifest $root v=$v has no head row"))
+      sys.error(s"cell store manifest $root v=$v has no head row"))
     Version(v, head.long("applied"), StructType.fromDDL(head.string("ref")),
       kind("table").map(r => new Path(r.string("ref")).getName -> r.string("ref")).toMap,
       kind("file").groupBy(_.int("cell")).map { case (c, rs) => c -> rs.map(_.string("ref")) })
@@ -69,9 +71,9 @@ private[graft] object IndexStore {
   /** The committed head; a store with no committed version refuses. */
   def head(spark: SparkSession, root: String): Version =
     headOption(spark, root).getOrElse(throw new IllegalArgumentException(
-      s"$root has no committed index version: writeIndex never completed"))
+      s"$root has no committed index version: its build never completed"))
 
-  /** Rows of one of the version's quantizer tables (driver-sized). */
+  /** Rows of one of the version's side tables (driver-sized). */
   def table(spark: SparkSession, root: String, v: Version, name: String): Seq[TinyParquet.Rec] =
     TinyParquet.rows(spark, s"$root/${v.tables(name)}")
 
@@ -96,16 +98,16 @@ private[graft] object IndexStore {
   /** A fresh write dir (name relative to root) for one mutation. Refuses
     * filesystems the commit CAS cannot run on BEFORE anything is written
     * or even listed. */
-  def writeDir(root: String): String = {
+  private def writeDir(root: String): String = {
     CommitArbiter.forPath(root)
     s"w=${java.util.UUID.randomUUID}"
   }
 
   /** Write `rows` (with an int `cell` column) into `dir`, one directory
     * per cell, and return the files written per cell. */
-  def writeCells(rows: DataFrame, root: String, dir: String): Map[Int, Seq[String]] = {
+  private def writeCells(rows: DataFrame, root: String, dir: String): Map[Int, Seq[String]] = {
     val spark = rows.sparkSession
-    // append: a build has already written its quantizer tables into this
+    // append: a build has already written its side tables into this
     // fresh dir, which the default mode refuses and overwrite would delete
     rows.write.mode("append").partitionBy("cell").parquet(s"$root/$dir")
     val fs = fsOf(spark, root)
@@ -119,12 +121,12 @@ private[graft] object IndexStore {
       }.toMap
   }
 
-  /** A quantizer table: name, [[TinyParquet]] schema, driver-sized rows. */
+  /** A side table: name, [[TinyParquet]] schema, driver-sized rows. */
   type Table = (String, Seq[(String, String)], Seq[Seq[Any]])
 
   /** A full build published as the next version: `fit` (run after the
     * filesystem check and the head read, so a rival commit during the fit
-    * makes this build lose) yields the cell rows and the quantizer tables,
+    * makes this build lose) yields the cell rows and the side tables,
     * which land in a fresh write dir. A build starts a fresh increment
     * history unless `carryApplied` — a refit over a corpus that already
     * holds every applied increment, whose replayed last increment must
@@ -144,7 +146,7 @@ private[graft] object IndexStore {
   }
 
   /** Copy-on-write append of increment `incrementId`: `rows(head)` (the
-    * increment assigned against the head's quantizer) lands in a fresh
+    * increment assigned against the head's side tables) lands in a fresh
     * write dir and the next version lists the head's files plus the new
     * ones. A replayed increment (id ≤ the head's applied id) is a no-op
     * returning false. */
@@ -161,10 +163,24 @@ private[graft] object IndexStore {
     }
   }
 
+  /** Copy-on-write rewrite of whole cells against `head`: `rows` (the
+    * complete new contents of `cells`, with an int `cell` column) land in
+    * a fresh write dir, and the next version — recording `applied` —
+    * lists them in place of the head's files for those cells. A cell left
+    * with no rows leaves the layout; with no cells, `rows` is never
+    * evaluated and the version only records `applied`. */
+  def rewrite(spark: SparkSession, root: String, store: String, head: Version,
+              applied: Long, cells: Seq[Int])(rows: => DataFrame): Unit = {
+    val dir = writeDir(root)
+    val written = if (cells.isEmpty) Map.empty[Int, Seq[String]] else writeCells(rows, root, dir)
+    publish(spark, root, store, Some(head), dir,
+      head.withCells(applied, cells.map(c => c -> written.getOrElse(c, Nil)).toMap))
+  }
+
   /** CAS `next` as the version after `base` (v=1 on an empty store). The
     * loser deletes its write dir and rethrows; the winner vacuums. */
-  def publish(spark: SparkSession, root: String, store: String,
-              base: Option[Version], dir: String, next: Version): Unit = {
+  private def publish(spark: SparkSession, root: String, store: String,
+                      base: Option[Version], dir: String, next: Version): Unit = {
     val rows =
       Seq[Seq[Any]](Seq("head", next.schema.toDDL, null, next.applied)) ++
         next.tables.values.toSeq.sorted.map(t => Seq[Any]("table", t, null, null)) ++
@@ -191,8 +207,8 @@ private[graft] object IndexStore {
     * `RetainGens` superseded ones, then everything no retained version
     * lists once older than `OrphanAgeMs` — whole `w=` dirs (a crashed or
     * superseded writer's; a younger one may be a live writer's) and the
-    * cell files a delete or rebuild stopped listing (the physical erasure
-    * of forgotten codes). */
+    * cell files a rewrite or rebuild stopped listing (the physical erasure
+    * of forgotten codes and retracted rows). */
   private def vacuum(spark: SparkSession, root: String): Unit = {
     val fs = fsOf(spark, root)
     CommittedVersions.list(spark, manifests(root)).sorted

@@ -15,10 +15,10 @@ final class ConcurrentCommitException(msg: String) extends RuntimeException(msg)
   * committer writes it last), so a crashed mid-write version is invisible
   * and readers always resolve a complete state. Shared by every
   * versioned store in the engine — the watermark state
-  * ([[graft.etl.Watermarks]]), the MV manifest
-  * ([[graft.etl.MaterializedAgg]]) and the table-maintenance generation
-  * pointer ([[TableMaintenance]]) — because three hand-rolled copies of a
-  * crash-consistency scanner is how one copy quietly diverges (round-12
+  * ([[graft.etl.Watermarks]]), the table-maintenance generation pointer
+  * ([[TableMaintenance]]) and the [[CellStore]] manifests of the
+  * materialized view and the ANN indexes — because hand-rolled copies of
+  * a crash-consistency scanner is how one copy quietly diverges (round-12
   * review finding).
   *
   * Round 13 adds the WRITE half of the protocol: [[tryPublish]] makes the

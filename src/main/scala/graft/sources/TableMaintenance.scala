@@ -27,11 +27,10 @@ import scala.util.control.NonFatal
   * under the NEW generation before the pointer version appears, so a crash
   * anywhere leaves the previous generation (and its indexes) live and
   * consistent — same versioned-commit discipline as
-  * [[graft.etl.Watermarks.writeState]] and the
-  * [[graft.etl.MaterializedAgg]] manifest. Readers resolve the current
-  * generation through the pointer and always see data WITH the indexes
-  * harvested from exactly those files — an index can never be paired with
-  * a generation it didn't scan.
+  * [[graft.etl.Watermarks.writeState]] and the [[CellStore]] manifest.
+  * Readers resolve the current generation through the pointer and always
+  * see data WITH the indexes harvested from exactly those files — an
+  * index can never be paired with a generation it didn't scan.
   *
   * At 100 TB each piece keeps its documented cost: the compaction rewrite
   * is the data-sized job (clustered by the scan dimension so footer boxes
@@ -44,10 +43,14 @@ object TableMaintenance {
   /** Generations kept beyond the current one (lagging-reader grace). */
   val RetainGens = 1
 
-  /** Unreferenced generations younger than this survive vacuum — a fresh
-    * below-head orphan may be a LIVE rival's claimed in-flight compaction
-    * (MaterializedAgg.OrphanAgeMs documents the full rationale; Delta's
-    * VACUUM retention window is the same idea). Test/ops hook. */
+  /** Unreferenced generations, write dirs and staging dirs younger than
+    * this survive vacuum — here and in every [[CellStore]]. "Unreferenced
+    * and below the head" alone cannot tell a CAS loser's dead orphan from
+    * a LIVE rival still writing its in-flight compaction or cell rewrite,
+    * whose commit would then die mid-write with an opaque FileNotFound
+    * instead of its clean CAS loss; Delta's VACUUM retention window exists
+    * for exactly this reason. Mutable as a test / operations hook (specs
+    * reap deterministically at 0 once no writer is in flight). */
   private[graft] var OrphanAgeMs: Long = 60L * 60 * 1000
 
   def dataPath(root: String, gen: Long): String = s"$root/gen=$gen/data"

@@ -67,7 +67,7 @@ object StreamNearDup {
     * to doc_a < doc_b and each (old × new) + (new × new) pair surfaces in
     * exactly the trigger where its later member arrives. */
   private[streaming] def pairBucket(cap: Int)(
-      key: (Int, String), rows: Iterator[BandedDoc],
+      @scala.annotation.unused key: (Int, String), rows: Iterator[BandedDoc],
       state: GroupState[Seq[Long]]): Iterator[CandPair] = {
     val prev = state.getOption.getOrElse(Seq.empty)
     val seen = prev.toSet
@@ -146,7 +146,7 @@ object StreamNearDup {
     * it keeps matching. The trade is explicit: a duplicate arriving after
     * its partner's bucket expired is NOT detected — the dedup horizon. */
   private[streaming] def pairBucketTTL(ttlMs: Long, cap: Int = MinHashLSH.MaxBucketSize)(
-      key: (Int, String), rows: Iterator[BandedDocT],
+      @scala.annotation.unused key: (Int, String), rows: Iterator[BandedDocT],
       state: GroupState[Seq[Long]]): Iterator[CandPair] = {
     if (state.hasTimedOut) { state.remove(); Iterator.empty }
     else {

@@ -265,19 +265,4 @@ object Corpus {
       .withColumn("fingerprint", graft.dedup.Exact.normalizedExact(col("text")))
       .withColumn("fingerprint_prefix", substring(col("fingerprint"), 1, 8))
       .select("doc_id", "fingerprint", "fingerprint_prefix")
-
-  /** Polynomial rolling hash over tokens (Rabin-Karp style, mod 2^61−1) —
-    * the streaming fingerprint primitive used in shingling; golden-tested. */
-  def rollingHash(tokens: Seq[String]): Long = {
-    val Mod = 2305843009213693951L // 2^61 - 1
-    val Base = 1000003L
-    var h = 0L
-    tokens.foreach { t =>
-      val th = (scala.util.hashing.MurmurHash3.stringHash(t) & 0xffffffffL) % Mod
-      h = (mulMod(h, Base, Mod) + th) % Mod
-    }
-    h
-  }
-  private def mulMod(a: Long, b: Long, m: Long): Long =
-    (BigInt(a) * b % m).toLong
 }

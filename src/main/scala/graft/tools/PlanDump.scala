@@ -82,7 +82,7 @@ object PlanDump {
       "ann_pq" -> "PQ ADC: codegen encode pass, broadcast LUT join, map-side-combined exact sums, bounded exact re-rank",
       "ann_ivfpq" -> "IVF+PQ: probed-cell equi-join gates the ADC; broadcast LUT + centroids; no unprobed-cell scan",
       "ann_ivfpq_incremental" -> "IVFPQ incremental probe: the head manifest's code-file list for the probed cells, appended increments included",
-      "mv_incremental_refresh" -> "MV read-back: finalized algebraic columns off the bucketed partial-state store",
+      "mv_incremental_refresh" -> "MV read-back: finalized algebraic columns over the head manifest's per-bucket file list (explicit schema, no inference job)",
       "events_skipping_scan" -> "manifest-pruned scan: file-list read of intersecting z-order boxes + residual filter",
       "events_point_lookup" -> "bloom-pruned point read: surviving files only + exact equality residual",
       "table_fk_contracts" -> "per-edge LEFT ANTI orphan join against distinct parent keys (dimension side broadcasts)",
@@ -100,12 +100,12 @@ object PlanDump {
       "stream_ann_ingest" -> "probe AFTER streamed foreachBatch appends: same manifest file-list read of the probed cells as the batch-incremental store",
       "sql_extensions_simhash" -> "plain-SQL text through the injected graft_simhash64 (extensions session): same codegen fingerprint plan as the Scala route",
       "events_forget" -> "tombstone-masked read (broadcast anti-join) unioned with the post-purge physical read — masking never shuffles the data side",
-      "mv_delete_refresh" -> "MV read-back after retraction: algebraic subtraction + boundary-only min/max recompute, untouched buckets unread",
+      "mv_delete_refresh" -> "MV read-back after retraction: the head lists the touched buckets' rewritten files beside the untouched buckets' old ones",
       "ann_forget" -> "probe AFTER index-level deletes: the head manifest lists only the rewritten cells' survivor files, quantizer carried by reference",
       "corpus_version_diff" -> "release diff: per-side fingerprint at the scan, full-outer join moves 16-byte hashes not documents",
-      "forget_cascade" -> "one takedown request audited on BOTH surfaces: purged base-store scan unioned with the retracted MV state read",
+      "forget_cascade" -> "one takedown request audited on BOTH surfaces: purged base-store scan unioned with the retracted MV's head-manifest file list",
       "text_dup_span_rewrite" -> "exact-substring removal: one gram-keyed rank shuffle, position anti-join, per-doc bounded reassembly sort",
-      "stream_mv_retraction" -> "MV read-back after a streamed CDC delete: per-batch exactly-once retraction, touched buckets only",
+      "stream_mv_retraction" -> "MV read-back after a streamed CDC delete: per-batch exactly-once cell rewrites, read through the head manifest's file list",
       "events_metadata_count" -> "metadata-only COUNT: interior files answered from footer row counts, boundary sliver scanned with the exact predicate",
       "sketch_store_rollup" -> "sketch-state store reaggregation: rollups merge persisted bottom-k states (array algebra), the data is never rescanned")
     val sb = new StringBuilder

@@ -1,6 +1,7 @@
 package graft.ann
 
 import graft.SparkSpec
+import graft.sources.CellStore
 
 /** The drift monitor actually DETECTS drift: a distribution-shifted
   * increment must push mse_increment well past mse_base (the documented
@@ -65,7 +66,7 @@ class IndexHealthSpec extends SparkSpec {
     val base = vecs(2000, seed = 7, shift = 0.0, idBase = 0L)
     val healthy = vecs(200, seed = 11, shift = 0.0, idBase = 100000L)
     val drifted = vecs(200, seed = 13, shift = 8.0, idBase = 200000L)
-    def codes(path: String) = IndexStore.read(spark, path, IndexStore.head(spark, path))
+    def codes(path: String) = CellStore.read(spark, path, CellStore.head(spark, path))
       .collect().map(_.toSeq.map { case s: Seq[_] => s.toList; case v => v }).toSet
 
     val okPath = s"${sys.props("java.io.tmpdir")}/graft-refit-ok"
@@ -91,7 +92,7 @@ class IndexHealthSpec extends SparkSpec {
     // ...with the high-water mark CARRIED OVER: the refit corpus already
     // contains increment 1, so its streaming replay stays a no-op instead
     // of double-appending onto the rebuilt store
-    assert(IndexStore.head(spark, drPath).applied == 1L)
+    assert(CellStore.head(spark, drPath).applied == 1L)
     assert(!IvfPq.appendToIndex(spark, drPath, drifted, incrementId = 1L))
     // and the refit codebooks now RESOLVE the drifted region: the
     // increment's relative reconstruction error drops sharply (a 9%

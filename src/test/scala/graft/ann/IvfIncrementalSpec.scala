@@ -1,6 +1,7 @@
 package graft.ann
 
 import graft.SparkSpec
+import graft.sources.CellStore
 import org.apache.spark.sql.functions._
 
 /** Incremental IVF maintenance contract (IvfIndex.appendToIndex): because
@@ -8,7 +9,7 @@ import org.apache.spark.sql.functions._
   * increment to a base-built index must yield exactly the store — and
   * exactly the probe results — of rebuilding the assignment over
   * base ∪ increment with the same quantizer. Stores are read through the
-  * committed reader (IndexStore), never raw directories. */
+  * committed reader (CellStore), never raw directories. */
 class IvfIncrementalSpec extends SparkSpec {
   private val dir = sf("sf0.001")
 
@@ -16,7 +17,7 @@ class IvfIncrementalSpec extends SparkSpec {
     .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
 
   private def stored(path: String) =
-    IndexStore.read(spark, path, IndexStore.head(spark, path))
+    CellStore.read(spark, path, CellStore.head(spark, path))
 
   test("append ≡ rebuild-with-same-quantizer, for the store and the probe") {
     val base = emb.where(col("vec_id") % 10 =!= 7)
@@ -31,12 +32,12 @@ class IvfIncrementalSpec extends SparkSpec {
 
     // rebuild: the base-fit centroids, one-shot assignment of the union,
     // published as its own store
-    val head = IndexStore.head(spark, appended)
-    val centRows = IndexStore.table(spark, appended, head, "centroids").sortBy(_.int("cell"))
+    val head = CellStore.head(spark, appended)
+    val centRows = CellStore.table(spark, appended, head, "centroids").sortBy(_.int("cell"))
     val cents = centRows.map(_.doubles("centroid")).toArray
     val full = emb.select(col("vec_id"), col("emb"),
       graft.functions.NearestCell.nearest(col("emb"), cents).as("cell"))
-    IndexStore.build(spark, rebuilt, "spec rebuild") {
+    CellStore.build(spark, rebuilt, "spec rebuild") {
       (full, Seq(("centroids", Seq("cell" -> "int", "centroid" -> "array<double>"),
         centRows.map(r => Seq[Any](r.int("cell"), r.doubles("centroid"))))))
     }
@@ -56,7 +57,7 @@ class IvfIncrementalSpec extends SparkSpec {
 
     // the increment genuinely landed in existing cells (no refit happened):
     // the append carried the build's centroid table forward by reference
-    assert(IndexStore.head(spark, appended).tables == head.tables)
+    assert(CellStore.head(spark, appended).tables == head.tables)
 
     // a store with no committed version refuses probes and appends
     val empty = s"$tmp/never-built"
@@ -77,10 +78,10 @@ class IvfIncrementalSpec extends SparkSpec {
       .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
     def probe() = IvfIndex.approxTopKStored(spark, store, q, k = 10).collect().toSet
     val before = probe()
-    val head = IndexStore.head(spark, store)
+    val head = CellStore.head(spark, store)
     // the increment's files land, then the writer dies at the commit CAS
     graft.StoreFaults.crashAtCommit(IvfIndex.appendToIndex(spark, store, inc, incrementId = 1L))
-    assert(IndexStore.head(spark, store) == head, "the crash must not move the head")
+    assert(CellStore.head(spark, store) == head, "the crash must not move the head")
     assert(probe() == before, "the previous version must keep probing identically")
     // the orchestrator's retry of increment 1 lands once; a replay is a no-op
     assert(IvfIndex.appendToIndex(spark, store, inc, incrementId = 1L))

@@ -1,11 +1,12 @@
 package graft.ann
 
 import graft.SparkSpec
+import graft.sources.CellStore
 import org.apache.spark.sql.functions._
 
 /** The index-delete contract (IvfPq.deleteFromIndex), at the file level
   * where the oracle can't see — read through the committed manifest
-  * (IndexStore), never raw directories:
+  * (CellStore), never raw directories:
   *   - delete ≡ writeIndex(full) with the deleted rows filtered — same
   *     codes, same cells, same quantizer (raw PQ codes are per-row);
   *   - UNAFFECTED cells keep their exact files (copy-on-write per cell:
@@ -24,10 +25,10 @@ class IvfPqForgetSpec extends SparkSpec {
     .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
 
   private def cellFiles(path: String): Map[Int, Seq[String]] =
-    IndexStore.head(spark, path).files
+    CellStore.head(spark, path).files
 
   private def codes(path: String) =
-    IndexStore.read(spark, path, IndexStore.head(spark, path))
+    CellStore.read(spark, path, CellStore.head(spark, path))
 
   private def codeRows(path: String): Set[String] =
     codes(path).collect().map(_.mkString("|")).toSet
@@ -65,9 +66,9 @@ class IvfPqForgetSpec extends SparkSpec {
       .select("vec_id").as[Long].collect().toSet
     assert((got intersect victimIds).isEmpty)
     // a replayed delete is a no-op (false): no new version, files untouched
-    val head = IndexStore.head(spark, path)
+    val head = CellStore.head(spark, path)
     assert(!IvfPq.deleteFromIndex(spark, path, victims, incrementId = 1L))
-    assert(IndexStore.head(spark, path) == head)
+    assert(CellStore.head(spark, path) == head)
   }
 
   test("deleting a cell's last vector drops the partition; probes keep working") {

@@ -1,6 +1,7 @@
 package graft.ann
 
 import graft.SparkSpec
+import graft.sources.CellStore
 import org.apache.spark.sql.functions._
 
 /** Differential contract for the two LIVE mutations on one store —
@@ -38,7 +39,7 @@ class IvfPqMutationRaceSpec extends SparkSpec {
   }
 
   private def codeRows(path: String): Set[String] =
-    IndexStore.read(spark, path, IndexStore.head(spark, path))
+    CellStore.read(spark, path, CellStore.head(spark, path))
       .collect().map(_.mkString("|")).toSet
 
   private def probeRows(path: String): Seq[String] =
@@ -67,7 +68,7 @@ class IvfPqMutationRaceSpec extends SparkSpec {
     await("append-running") // the append resolved v=1 and is writing its cells
     try {
       assert(probeRows(path) == before, "a probe mid-append must serve the head it resolved")
-      assert(IndexStore.head(spark, path).number == 1L)
+      assert(CellStore.head(spark, path).number == 1L)
     } finally open("append-go")
     assert(append() == Right(true))
     assert(probeRows(path) == probeRows(ref), "the next probe must see the committed append")
@@ -88,7 +89,7 @@ class IvfPqMutationRaceSpec extends SparkSpec {
     await("forget-running") // the forget resolved v=1 and is locating cells
     try {
       assert(probeRows(path) == before, "a probe mid-forget must serve the head it resolved")
-      assert(IndexStore.head(spark, path).number == 1L)
+      assert(CellStore.head(spark, path).number == 1L)
     } finally open("forget-go")
     assert(forget() == Right(true))
     assert(probeRows(path) == probeRows(ref), "the next probe must see the committed forget")
@@ -111,9 +112,9 @@ class IvfPqMutationRaceSpec extends SparkSpec {
       assert(x.isInstanceOf[graft.sources.ConcurrentCommitException], s"loser not loud: $x")
     }
     // the store is exactly the winner's commit: the loser left nothing
-    val head = IndexStore.head(spark, path)
+    val head = CellStore.head(spark, path)
     assert(head.number == 2L)
-    assert(IndexStore.liveRefs(spark, path).map(_.takeWhile(_ != '/')) ==
+    assert(CellStore.liveRefs(spark, path).map(_.takeWhile(_ != '/')) ==
       fs.listStatus(new org.apache.hadoop.fs.Path(path)).map(_.getPath.getName)
         .filter(_.startsWith("w=")).toSet, "the loser must delete its write dir")
     val ids = IvfPq.storedIds(spark, path).select("vec_id").as[Long].collect().toSet

@@ -1,6 +1,7 @@
 package graft.ann
 
 import graft.SparkSpec
+import graft.sources.CellStore
 import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.apache.spark.sql.functions._
 
@@ -61,7 +62,7 @@ class IvfPqSpec extends SparkSpec {
     assert(scans.nonEmpty, "no file scan over the stored code table found")
     val read = scans.head.relation.location.inputFiles
       .map(f => f.substring(f.indexOf("/w=") + 1)).toSet
-    val byCell = IndexStore.head(spark, path).files.filter(_._2.exists(read))
+    val byCell = CellStore.head(spark, path).files.filter(_._2.exists(read))
     assert(byCell.size == 2, s"probe read cells ${byCell.keySet}, expected the 2 probed cells")
     assert(read == byCell.values.flatten.toSet)
     assert(scans.head.metrics.get("numPartitions").map(_.value).contains(2L))

@@ -1,6 +1,7 @@
 package graft.ann
 
 import graft.SparkSpec
+import graft.sources.CellStore
 import org.apache.spark.sql.functions._
 
 /** Streaming ANN index ingest (the stream_ann_ingest composition):
@@ -16,7 +17,7 @@ class IvfPqStreamSpec extends SparkSpec {
     .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
 
   private def codesOf(path: String): Set[Seq[Any]] =
-    IndexStore.read(spark, path, IndexStore.head(spark, path)).collect()
+    CellStore.read(spark, path, CellStore.head(spark, path)).collect()
       .map(r => r.toSeq.map {
         case s: Seq[_] => s.toList
         case v => v

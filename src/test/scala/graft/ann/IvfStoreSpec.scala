@@ -1,6 +1,7 @@
 package graft.ann
 
 import graft.SparkSpec
+import graft.sources.CellStore
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
@@ -33,7 +34,7 @@ class IvfStoreSpec extends SparkSpec {
     val one = q.orderBy("query_id").limit(1)
     val probe = IvfIndex.approxTopKStored(spark, path, one, k = 5, nProbe = 2)
     probe.collect()
-    val head = IndexStore.head(spark, path)
+    val head = CellStore.head(spark, path)
     val scans = graft.PlanCheck.allNodes(probe.queryExecution.executedPlan)
       .collect { case f: FileSourceScanExec
         if f.relation.location.inputFiles.exists(_.contains("graft-ivf-spec/w=")) => f }

@@ -2,7 +2,6 @@ package graft.backtest
 
 import java.sql.Date
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Hand-computed fixture for the trade state machine
   * (backtest_strategies.py:171-300 semantics): open on buy, ignore buys

@@ -1,12 +1,14 @@
 package graft.etl
 
 import graft.SparkSpec
+import graft.sources.CellStore
 import org.apache.spark.sql.functions._
 
 /** MV-maintenance properties beyond the registered oracle: merge ≡
   * recompute across arbitrary splits, untouched bucket partitions are not
-  * rewritten by a refresh, chained increments compose, and an empty
-  * increment is a no-op. */
+  * rewritten by a refresh, chained increments compose, an empty
+  * increment is a no-op, a crash before the commit leaves the head
+  * serving, and a read builds its frame without a Spark job. */
 class MaterializedAggSpec extends SparkSpec {
   import spark.implicits._
 
@@ -34,27 +36,26 @@ class MaterializedAggSpec extends SparkSpec {
   private def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
     df.collect().map(_.mkString("|")).toSet
 
-  /** bucket dir -> the full recursive (gen dir, file, mtime) fingerprint:
-    * under the manifest layout a refresh must add a NEW generation for the
-    * touched buckets and leave every untouched bucket's generation set
-    * byte-identical (no rename, no delete of live dirs). */
-  private def bucketFiles(root: String): Map[String, Set[String]] = {
+  /** A store root with nothing under it: writeInit publishes the next
+    * version of whatever store it finds, so each test starts empty. */
+  private def freshRoot(name: String): String = {
+    val root = s"${sys.props("java.io.tmpdir")}/graft-mv-spec-$name"
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/data")).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("bucket="))
-      .map { st =>
-        st.getPath.getName ->
-          fs.listStatus(st.getPath).toSet.flatMap { (g: org.apache.hadoop.fs.FileStatus) =>
-            fs.listStatus(g.getPath).map(f =>
-              s"${g.getPath.getName}/${f.getPath.getName}:${f.getModificationTime}").toSet
-          }
-      }.toMap
+    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    root
   }
+
+  /** bucket -> the files the committed head lists for it: a refresh must
+    * list NEW files for the touched buckets and leave every untouched
+    * bucket's file list identical (copy-on-write, no rewrite of live
+    * files). */
+  private def bucketFiles(root: String): Map[String, Set[String]] =
+    CellStore.head(spark, root).files.map { case (b, fs) => s"bucket=$b" -> fs.toSet }
 
   test("incremental refresh == full recompute, for any split; empty increment is a no-op") {
     for (mod <- Seq(2, 7)) {
-      val root = s"${sys.props("java.io.tmpdir")}/graft-mv-spec-$mod"
+      val root = freshRoot(mod.toString)
       val base = data.where(col("row_id") % mod =!= 0)
       val inc = data.where(col("row_id") % mod === 0)
       MaterializedAgg.writeInit(base, keys, "value", root)
@@ -69,7 +70,7 @@ class MaterializedAggSpec extends SparkSpec {
   }
 
   test("refresh rewrites only the touched bucket partitions") {
-    val root = s"${sys.props("java.io.tmpdir")}/graft-mv-spec-touch"
+    val root = freshRoot("touch")
     MaterializedAgg.writeInit(data, keys, "value", root)
     val before = bucketFiles(root)
     // an increment confined to ONE group -> exactly one bucket
@@ -88,7 +89,7 @@ class MaterializedAggSpec extends SparkSpec {
   }
 
   test("refreshOnce makes a replayed micro-batch a no-op (exactly-once on the store)") {
-    val root = s"${sys.props("java.io.tmpdir")}/graft-mv-spec-once"
+    val root = freshRoot("once")
     val base = data.where(col("row_id") <= 3000)
     val inc = data.where(col("row_id") > 3000)
     MaterializedAgg.writeInit(base, keys, "value", root)
@@ -104,7 +105,7 @@ class MaterializedAggSpec extends SparkSpec {
   }
 
   test("an EMPTY micro-batch still advances the applied-batch mark (mark-only flip)") {
-    val root = s"${sys.props("java.io.tmpdir")}/graft-mv-spec-emptymark"
+    val root = freshRoot("emptymark")
     val base = data.where(col("row_id") <= 3000)
     val inc = data.where(col("row_id") > 3000)
     MaterializedAgg.writeInit(base, keys, "value", root)
@@ -124,30 +125,64 @@ class MaterializedAggSpec extends SparkSpec {
 
   test("uncommitted generation dirs (a crashed refresh) are invisible to readers " +
     "and overwritten idempotently by the retry") {
-    val root = s"${sys.props("java.io.tmpdir")}/graft-mv-spec-crash"
+    val root = freshRoot("crash")
     val base = data.where(col("row_id") <= 3000)
     val inc = data.where(col("row_id") > 3000)
     MaterializedAgg.writeInit(base, keys, "value", root)
     val before = rows(MaterializedAgg.read(spark, root, keys))
-    // simulate a refresh that crashed after writing data but before the
-    // manifest flip: orphan gen=2 dirs with garbage partial files
+    val head = CellStore.head(spark, root)
+    // the merged buckets' files land, then the writer dies at the CAS
+    graft.StoreFaults.crashAtCommit(
+      MaterializedAgg.refreshOnce(spark, root, 1L, inc, keys, "value"))
+    assert(CellStore.head(spark, root) == head, "a crashed refresh must not move the head")
+    // readers resolve through the committed head: the crash is invisible
+    assert(rows(MaterializedAgg.read(spark, root, keys)) == before)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-    MaterializedAgg.partials(inc, keys, "value")
-      .withColumn("gen", lit(2L))
-      .write.mode("append").partitionBy("bucket", "gen").parquet(s"$root/data")
-    assert(fs.globStatus(new org.apache.hadoop.fs.Path(s"$root/data/bucket=*/gen=2")).nonEmpty)
-    // readers resolve through the committed manifest: the orphans are invisible
-    assert(rows(MaterializedAgg.read(spark, root, keys)) == before)
-    // the replayed batch lands exactly once despite the half-written gen 2
+    val writeDirs = fs.listStatus(new org.apache.hadoop.fs.Path(root)).toSeq
+      .map(_.getPath.getName).filter(_.startsWith("w=")).toSet
+    val live = CellStore.liveRefs(spark, root).map(_.takeWhile(_ != '/'))
+    assert((writeDirs -- live).nonEmpty, "the crash left its unreferenced write dir")
+    // the replayed batch lands exactly once; a replay after it is a no-op
     assert(MaterializedAgg.refreshOnce(spark, root, 1L, inc, keys, "value"))
     assert(rows(MaterializedAgg.read(spark, root, keys)) == rows(finalize(data)))
     assert(!MaterializedAgg.refreshOnce(spark, root, 1L, inc, keys, "value"))
     assert(rows(MaterializedAgg.read(spark, root, keys)) == rows(finalize(data)))
   }
 
+  test("read builds its frame from the manifest without starting a Spark job") {
+    val root = freshRoot("read-jobs")
+    MaterializedAgg.writeInit(data, keys, "value", root)
+    MaterializedAgg.refresh(spark, root,
+      Seq(("g3", 1, 99999L, Some(42.0))).toDF("grp", "sub", "row_id", "value"), keys, "value")
+    val group = "mv-spec-read"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val g = Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        if (g == group) jobs.incrementAndGet()
+        else if (g == s"$group-flush") flushed.countDown()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "MaterializedAgg.read")
+      val view = try MaterializedAgg.read(spark, root, keys)
+                 finally spark.sparkContext.clearJobGroup()
+      // the listener bus is FIFO: once a later job's start is delivered,
+      // every job the read could have started has been counted
+      spark.sparkContext.setJobGroup(s"$group-flush", "listener flush")
+      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(jobs.get() == 0, s"MaterializedAgg.read started ${jobs.get()} job(s)")
+      assert(rows(view) == rows(finalize(data.unionByName(
+        Seq(("g3", 1, 99999L, Some(42.0))).toDF("grp", "sub", "row_id", "value")))))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("chained increments compose: refresh(refresh(init)) == one recompute") {
-    val root = s"${sys.props("java.io.tmpdir")}/graft-mv-spec-chain"
+    val root = freshRoot("chain")
     MaterializedAgg.writeInit(data.where(col("row_id") <= 2000), keys, "value", root)
     MaterializedAgg.refresh(spark, root,
       data.where(col("row_id") > 2000 && col("row_id") <= 3000), keys, "value")
@@ -158,7 +193,7 @@ class MaterializedAggSpec extends SparkSpec {
 
   test("retract == recompute of the remaining rows (boundary min/max and null deletes included)") {
     for (mod <- Seq(3, 10)) {
-      val root = s"${sys.props("java.io.tmpdir")}/graft-mv-spec-retract-$mod"
+      val root = freshRoot(s"retract-$mod")
       MaterializedAgg.writeInit(data, keys, "value", root)
       // row_id % mod = 0 deletes hit ~every group, including rows holding
       // group minima/maxima (boundary recompute) and null-valued rows
@@ -175,7 +210,7 @@ class MaterializedAggSpec extends SparkSpec {
   }
 
   test("retracting a group's last row removes the group from the view") {
-    val root = s"${sys.props("java.io.tmpdir")}/graft-mv-spec-retract-all"
+    val root = freshRoot("retract-all")
     MaterializedAgg.writeInit(data, keys, "value", root)
     val gone = col("grp") === "g5"
     MaterializedAgg.retract(spark, root, data.where(gone), data.where(!gone), keys, "value")
@@ -185,7 +220,7 @@ class MaterializedAggSpec extends SparkSpec {
   }
 
   test("retract rewrites only the touched bucket partitions") {
-    val root = s"${sys.props("java.io.tmpdir")}/graft-mv-spec-retract-touch"
+    val root = freshRoot("retract-touch")
     MaterializedAgg.writeInit(data, keys, "value", root)
     val before = bucketFiles(root)
     // a delete confined to ONE group -> exactly one bucket
@@ -204,7 +239,7 @@ class MaterializedAggSpec extends SparkSpec {
   }
 
   test("retractOnce: delete micro-batches apply exactly once and converge across splits") {
-    val root = s"${sys.props("java.io.tmpdir")}/graft-mv-spec-retract-once"
+    val root = freshRoot("retract-once")
     MaterializedAgg.writeInit(data, keys, "value", root)
     val gone = col("row_id") % 5 === 0
     val remaining = data.where(!gone)
@@ -227,7 +262,7 @@ class MaterializedAggSpec extends SparkSpec {
   }
 
   test("a bad delete batch aborts loudly BEFORE anything is written") {
-    val root = s"${sys.props("java.io.tmpdir")}/graft-mv-spec-retract-bad"
+    val root = freshRoot("retract-bad")
     MaterializedAgg.writeInit(data, keys, "value", root)
     val before = rows(MaterializedAgg.read(spark, root, keys))
     val filesBefore = bucketFiles(root)

@@ -2,7 +2,6 @@ package graft.features
 
 import java.sql.Date
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Golden-value spec for the recursive indicator scan: values generated with
   * pandas (ewm(span) / ewm(alpha=1/p, min_periods=p)) on a fixed 40-bar

@@ -83,7 +83,7 @@ class KmvSpec extends SparkSpec {
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       df.agg(Kmv.distinctCount(col("id"))).collect()
     }
-    assert(e.getMessage.toLowerCase.contains("graft_kmv_distinct"))
+    assert(e.getMessage.toLowerCase.contains("graft_hash52"))
   }
 
   test("empty input: distinct estimate 0, sample quantile NULL") {

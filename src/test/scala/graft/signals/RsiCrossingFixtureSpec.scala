@@ -1,7 +1,6 @@
 package graft.signals
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** The reference repo's own hand-computed RSI-crossing fixture
   * (test_rsi_crossing.py:8-86) ported as a golden spec: a 15-day RSI path

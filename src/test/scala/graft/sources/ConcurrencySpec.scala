@@ -229,11 +229,11 @@ class ConcurrencySpec extends SparkSpec {
       new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
     val onDisk = fs.listStatus(new org.apache.hadoop.fs.Path(root)).toSeq
       .map(_.getPath.getName).filter(_.startsWith("w=")).toSet
-    onDisk -- graft.ann.IndexStore.liveRefs(spark, root).map(_.takeWhile(_ != '/'))
+    onDisk -- CellStore.liveRefs(spark, root).map(_.takeWhile(_ != '/'))
   }
 
   test("ANN index store: a crash before the CAS leaves the head serving") {
-    import graft.ann.{IndexStore, IvfPq}
+    import graft.ann.IvfPq
     val root = tmp("ivfpq-crash"); clear(root)
     val e = graft.Tables.embeddings(spark, sf("sf0.001"))
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
@@ -245,11 +245,11 @@ class ConcurrencySpec extends SparkSpec {
       .collect().map(_.mkString("|")).toSet
     IvfPq.writeIndex(base, root, dim = 64, nCells = 8)
     val before = probe()
-    val head = IndexStore.head(spark, root)
+    val head = CellStore.head(spark, root)
 
     // the increment's files land, then the writer dies at the commit
     graft.StoreFaults.crashAtCommit(IvfPq.appendToIndex(spark, root, inc, 1L))
-    assert(IndexStore.head(spark, root) == head, "a crashed mutation must not move the head")
+    assert(CellStore.head(spark, root) == head, "a crashed mutation must not move the head")
     assert(probe() == before, "the previous version must keep probing identically")
     assert(unreferencedWriteDirs(root).nonEmpty, "the crash left its unreferenced write dir")
 
@@ -270,7 +270,7 @@ class ConcurrencySpec extends SparkSpec {
   }
 
   test("ANN index store: racing appends, one publishes, the loser retries") {
-    import graft.ann.{IndexStore, IvfPq}
+    import graft.ann.IvfPq
     import graft.StoreFaults.{background, pass, reset}
     val root = tmp("ivfpq"); clear(root)
     val e = graft.Tables.embeddings(spark, sf("sf0.001"))
@@ -289,7 +289,7 @@ class ConcurrencySpec extends SparkSpec {
     val got = Seq(a(), b())
     assert(got.count(_ == Right(true)) == 1, s"exactly one appender publishes: $got")
     got.collect { case Left(x) => x }.foreach(x => assert(isLoud(x), s"loser not loud: $x"))
-    assert(IndexStore.head(spark, root).number == 2L)
+    assert(CellStore.head(spark, root).number == 2L)
     assert(unreferencedWriteDirs(root).isEmpty, "the loser must delete its write dir")
     def ids() = IvfPq.storedIds(spark, root).select("vec_id").as[Long].collect().toSeq
     def idsOf(df: org.apache.spark.sql.DataFrame) = df.select("vec_id").as[Long].collect().toSet
